@@ -1648,7 +1648,8 @@ object ExtQueries {
       "text",
       rules = Seq(Checks.inRange("n_chars", 60.0, 100000.0)),
       benchGramHashes = benchGrams(s, dir),
-      blockedPhrases = Seq("slow fast"),
+      blocked = Some(TextOps.containsBlockedPhrase(col("text"),
+        Seq("slow fast"))),
       testFrac = 0.05, validFrac = 0.05,
       lmModel = Some(lmSrc0(s, dir)), maxMeanNll = 3.65,
       dedupIndex = Some(DedupOps.buildDedupIndex(hist, "text")))

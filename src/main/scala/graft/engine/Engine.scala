@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 /** Session bootstrap + table registry + SQL facade.
   *
@@ -147,6 +147,17 @@ object Engine {
         ()
       case _ => ()
     }
+
+  /** Emptiness probe for skip-on-empty guards. `Dataset.isEmpty` runs
+    * `executeTake(1)` on a CollectLimitExec, which does not override
+    * it: the probe falls through to `doExecute`, computes EVERY
+    * partition and shuffles the results into one. `limit(1).collect()`
+    * takes CollectLimitExec's `executeCollect` path instead, which
+    * scans partitions incrementally — one task when the first
+    * partition holds a row. The empty projection keeps the probe from
+    * materializing any column. */
+  def isEmpty(ds: Dataset[_]): Boolean =
+    ds.select().limit(1).collect().isEmpty
 
   /** Spread a small input across the session's cores before heavy
     * per-row compute (tokenize → shingle → hash chains): repartition

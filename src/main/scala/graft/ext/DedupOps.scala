@@ -834,11 +834,14 @@ object DedupOps {
     * as a constant. */
   def benchmarkGramHashes(bench: DataFrame, textCol: String,
                           n: Int = 3): Array[Long] =
-    bench.select(explode(
-        call_function("graft_shingle_hashes",
-          call_function("graft_hash_tokens",
-            TextOps.tokens(col(textCol))), lit(n))).as("_h"))
-      .distinct().collect().map(_.getLong(0)).sorted
+    // One scan, deduped on the driver: the result is a plan literal
+    // shipped with every task, so the small-eval-set contract already
+    // bounds this collect — a distributed distinct adds only a shuffle.
+    bench.select(call_function("graft_shingle_hashes",
+        call_function("graft_hash_tokens", TextOps.tokens(col(textCol))),
+        lit(n)))
+      .collect().iterator.filterNot(_.isNullAt(0))
+      .flatMap(_.getSeq[Long](0)).toArray.distinct.sorted
 
   /** STATELESS contamination predicate: true when the text shares any
     * word n-gram with the benchmark set. Because the benchmark gram
@@ -1217,7 +1220,7 @@ object DedupOps {
         .collect()(0).getDecimal(0)
     var round = 0
     var totalJumps = 0
-    var converged = bidir.isEmpty
+    var converged = graft.engine.Engine.isEmpty(bidir)
     var prevSum = if (converged) null else labelSum(labels)
     while (!converged && round < maxIter) {
       val msgs = bidir.join(labels, bidir("src") === labels("id"))

@@ -12,6 +12,18 @@ import org.apache.spark.sql.functions._
   */
 object GraphOps {
 
+  /** Upper bound on `rounds` for the lazily chained fixed-round loops
+    * ([[labelPropagation]], [[pageRankFx]] and their blowup variants):
+    * their plan depth grows linearly with `rounds` and analysis,
+    * optimization and codegen superlinearly, all in one job. Catalog
+    * callers use at most 8. */
+  val MaxLazyRounds = 32
+
+  private def requireRounds(op: String, rounds: Int): Unit =
+    require(rounds >= 1 && rounds <= MaxLazyRounds,
+      s"$op: rounds must be in [1, $MaxLazyRounds] (the lazy-chain " +
+        s"limit GraphOps.MaxLazyRounds): $rounds")
+
   /** Per-node triangle count + local clustering coefficient over an
     * UNDIRECTED edge table (either orientation, duplicates and self
     * loops tolerated — edges canonicalize first).
@@ -170,7 +182,7 @@ object GraphOps {
     * max degree, not by cluster size. */
   def labelPropagation(pairs: DataFrame, aCol: String, bCol: String,
                        rounds: Int): DataFrame = {
-    require(rounds >= 1, s"labelPropagation: rounds must be >= 1: $rounds")
+    requireRounds("labelPropagation", rounds)
     val eng = graft.engine.Engine
     val e = pairs.select(col(aCol).cast("long").as("src"),
       col(bCol).cast("long").as("dst"))
@@ -239,7 +251,7 @@ object GraphOps {
     * average-embedded nodes. */
   def pageRankFx(pairs: DataFrame, aCol: String, bCol: String,
                  rounds: Int, dampPct: Int = 85): DataFrame = {
-    require(rounds >= 1, s"pageRankFx: rounds must be >= 1: $rounds")
+    requireRounds("pageRankFx", rounds)
     require(dampPct >= 0 && dampPct <= 100,
       s"pageRankFx: dampPct out of range: $dampPct")
     val eng = graft.engine.Engine
@@ -304,8 +316,7 @@ object GraphOps {
   def pageRankBlowupFx(pairs: DataFrame, aCol: String, bCol: String,
                        nodes: DataFrame, rounds: Int,
                        dampPct: Int = 85): DataFrame = {
-    require(rounds >= 1,
-      s"pageRankBlowupFx: rounds must be >= 1: $rounds")
+    requireRounds("pageRankBlowupFx", rounds)
     require(dampPct >= 0 && dampPct <= 100,
       s"pageRankBlowupFx: dampPct out of range: $dampPct")
     val eng = graft.engine.Engine
@@ -417,8 +428,7 @@ object GraphOps {
     * label by the argument above). */
   def labelPropagationBlowup(pairs: DataFrame, aCol: String, bCol: String,
                              nodes: DataFrame, rounds: Int): DataFrame = {
-    require(rounds >= 1,
-      s"labelPropagationBlowup: rounds must be >= 1: $rounds")
+    requireRounds("labelPropagationBlowup", rounds)
     val eng = graft.engine.Engine
     val e = pairs.select(col(aCol).cast("long").as("src"),
       col(bCol).cast("long").as("dst"))

@@ -363,13 +363,16 @@ object SketchOps {
   /** Point-query a [[cmsSketch]] grid for each probe token: the
     * estimate is `min_j grid(j, hash_j(token))`. The grid side is
     * depth·width rows — broadcast; the probe side only ever carries
-    * the probe tokens. Missing cells read as 0 (token never seen). */
+    * the probe tokens. Missing cells read as 0 (token never seen). A
+    * null token has no cell positions; the outer explode keeps its
+    * probe row, which matches no cell and reads 0. */
   def cmsEstimate(sketch: DataFrame, probes: DataFrame,
                   tokenCol: String,
                   depth: Int = 4, width: Int = 64): DataFrame = {
     val probed = probes
       .select(col("*"),
-        posexplode(bloomPositionsArr(array(col(tokenCol)), width, depth))
+        posexplode_outer(
+          bloomPositionsArr(array(col(tokenCol)), width, depth))
           .as(Seq("j", "cell")))
     probed.join(broadcast(sketch), Seq("j", "cell"), "left")
       .groupBy(probes.columns.map(col): _*)

@@ -693,6 +693,11 @@ object TextOps {
     * real blocklists); there are no false negatives. */
   def containsBlockedPhrase(textCol: Column,
                             phrases: Seq[String]): Column = {
+    // Every phrase-side evaluation below is a projection over a local
+    // relation, which the optimizer evaluates on the driver
+    // (ConvertToLocalRelation): building the predicate launches no
+    // Spark job. Flatten/dedupe/sort stay in Scala — an explode +
+    // distinct cost a job and a shuffle per length class.
     val spark = org.apache.spark.sql.SparkSession.active
     import spark.implicits._
     val cleaned = phrases.map(_.trim).filter(_.nonEmpty).distinct
@@ -713,10 +718,10 @@ object TextOps {
         // hash each phrase through the SAME tokenize→hash→shingle
         // pipeline the document side uses, so normalization matches
         n -> ps.toDF("text")
-          .select(explode(call_function("graft_shingle_hashes",
+          .select(call_function("graft_shingle_hashes",
             call_function("graft_hash_tokens", tokens(col("text"))),
-            lit(n))).as("_h"))
-          .distinct().collect().map(_.getLong(0)).sorted
+            lit(n)))
+          .collect().flatMap(_.getSeq[Long](0)).distinct.sorted
       }
     require(byLen.nonEmpty, "containsBlockedPhrase: empty blocklist")
     byLen.toSeq.sortBy(_._1).map { case (n, hashes) =>
@@ -726,11 +731,6 @@ object TextOps {
         lit(hashes))
     }.reduce(_ || _)
   }
-
-  /** Drop documents containing any blocked phrase. */
-  def filterBlocked(df: DataFrame, textCol: String,
-                    phrases: Seq[String]): DataFrame =
-    df.filter(!containsBlockedPhrase(col(textCol), phrases))
 
   /** BPE tokenizer-vocabulary training, first `numMerges` merges
     * (Sennrich et al., "Neural Machine Translation of Rare Words with

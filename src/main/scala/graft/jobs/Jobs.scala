@@ -616,16 +616,20 @@ object LayoutJob {
   * the threshold are dropped, the near-dup sibling of the exact
   * Bloom+anti-join tier. */
 object StreamIngestJob {
-  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.{Column, DataFrame}
   import org.apache.spark.sql.functions._
   import graft.transform.{Checks, Split}
   import graft.ext.{DedupOps, TextOps}
 
   /** The clean-row half of the pipeline (post-quarantine): stateless
-    * projections/filters only, stream- and batch-callable. */
+    * projections/filters only, stream- and batch-callable. `blocked` is
+    * the phrase-blocklist predicate over the text column
+    * ([[TextOps.containsBlockedPhrase]]), built by the caller once per
+    * blocklist — its hash sets are plan constants, so every micro-batch
+    * of a stream reuses one predicate. */
   def cleanTransform(df: DataFrame, idCol: String, textCol: String,
                      benchGramHashes: Array[Long],
-                     blockedPhrases: Seq[String],
+                     blocked: Option[Column],
                      testFrac: Double = 0.05,
                      validFrac: Double = 0.05,
                      lmModel: Option[TextOps.LmModel] = None,
@@ -659,9 +663,7 @@ object StreamIngestJob {
       if (benchGramHashes.isEmpty) novel
       else novel.filter(
         !DedupOps.isContaminated(col(textCol), benchGramHashes))
-    val unblocked =
-      if (blockedPhrases.isEmpty) decon
-      else TextOps.filterBlocked(decon, textCol, blockedPhrases)
+    val unblocked = blocked.fold(decon)(b => decon.filter(!b))
     // Fluency gate (CCNet-style): mean bigram NLL vs the trusted-slice
     // LM must stay under the cap. Docs with no bigrams pass (the
     // quality rules own degenerate-document policy); a pure stream-safe
@@ -718,7 +720,7 @@ object StreamIngestJob {
   def routedTransform(df: DataFrame, idCol: String, textCol: String,
                       rules: Seq[Checks.Rule],
                       benchGramHashes: Array[Long],
-                      blockedPhrases: Seq[String],
+                      blocked: Option[Column],
                       testFrac: Double = 0.05,
                       validFrac: Double = 0.05,
                       lmModel: Option[TextOps.LmModel] = None,
@@ -734,7 +736,7 @@ object StreamIngestJob {
     val clean = flagged.filter(size(col("violations")) === 0)
       .drop("violations")
     (bad, cleanTransform(clean, idCol, textCol, benchGramHashes,
-      blockedPhrases, testFrac, validFrac, lmModel, maxMeanNll,
+      blocked, testFrac, validFrac, lmModel, maxMeanNll,
       dedupIndex, nllBand, dropNllTail, nbModel, nearDupIndex))
   }
 
@@ -916,7 +918,7 @@ object StreamIngestJob {
   private[graft] def processBatch(batch: DataFrame, batchId: Long,
             idCol: String, textCol: String,
             rules: Seq[Checks.Rule], benchGramHashes: Array[Long],
-            blockedPhrases: Seq[String],
+            blocked: Option[Column],
             store: graft.sinks.Upsert.KeyedStore,
             quarantineDir: String,
             testFrac: Double, validFrac: Double,
@@ -931,15 +933,17 @@ object StreamIngestJob {
             nbModel: Option[TextOps.NbModel] = None,
             nearDupIndex: Option[(DataFrame, Double)] = None): Unit = {
     val (bad, kept) = routedTransform(batch, idCol, textCol, rules,
-      benchGramHashes, blockedPhrases, testFrac, validFrac,
+      benchGramHashes, blocked, testFrac, validFrac,
       lmModel, maxMeanNll, dedupIndex, nllBand, dropNllTail, nbModel,
       nearDupIndex)
-    // writeParquet's own empty guard skips the write — no second
-    // isEmpty pass over the routed-transform plan here
+    // writeParquet's empty guard (Engine.isEmpty) skips the write and
+    // its batch_id= partition for a batch with no rule breakers
     Sinks.writeParquet(bad, s"$quarantineDir/batch_id=$batchId",
       "replace")
-    if (!kept.isEmpty) {
-      graft.sinks.Upsert.keyedUpsert(kept, idCol, store)
+    // No emptiness probe on the kept side: the upsert job counts the
+    // rows it wrote, and only a batch that landed rows feeds the
+    // monitors.
+    if (graft.sinks.Upsert.keyedUpsert(kept, idCol, store) > 0) {
       // Live distinct monitor over what actually LANDS in the store;
       // groupCol "-" monitors the whole stream as one group.
       monitor.foreach { case (dir, groupCol) =>
@@ -990,19 +994,25 @@ object StreamIngestJob {
               org.apache.spark.sql.streaming.Trigger.AvailableNow(),
             nbModel: Option[TextOps.NbModel] = None,
             nearDupIndex: Option[(DataFrame, Double)] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    // Built once here, not per micro-batch: the phrase hashes are plan
+    // constants of every batch's filter.
+    val blocked =
+      if (blockedPhrases.isEmpty) None
+      else Some(TextOps.containsBlockedPhrase(col(textCol), blockedPhrases))
     stream.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         processBatch(batch, batchId, idCol, textCol, rules,
-          benchGramHashes, blockedPhrases, store, quarantineDir,
+          benchGramHashes, blocked, store, quarantineDir,
           testFrac, validFrac, lmModel, maxMeanNll, dedupIndex,
           nllBand, dropNllTail, monitor, freqMonitorDir, lenMonitorDir,
           nbModel, nearDupIndex)
       }
       .start()
+  }
 
   def run(spark: SparkSession, args: Array[String]): Unit = {
     val Array(in, ddl, idCol, textCol, rulesSpec, benchPath, phrasesFile,

@@ -90,8 +90,11 @@ object Sinks {
     }
 
   /** Empty-input guard (`db_core.py:99-101`): skip the action for an empty
-    * frame. `isEmpty` plans a LocalLimit(1) scan — cheap relative to the
-    * write it guards. */
+    * frame. The probe ([[graft.engine.Engine.isEmpty]]) computes the
+    * frame's partitions one at a time until it finds a row: one task on
+    * a non-empty first partition, every partition (in a few jobs, no
+    * shuffle) on an empty frame. The write recomputes the frame; the
+    * probe is not cached. */
   private def guarded(df: DataFrame)(write: => Unit): Boolean =
-    if (df.isEmpty) false else { write; true }
+    if (graft.engine.Engine.isEmpty(df)) false else { write; true }
 }

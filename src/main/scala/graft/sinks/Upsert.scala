@@ -31,22 +31,26 @@ object Upsert {
     def setAll(batch: Batch): Unit
   }
 
-  /** Upsert `df` into `store` keyed by `idColumn`. Returns false (no work)
-    * when the id column is missing, mirroring the reference's abort path
-    * (`db_core.py:293-295`); true otherwise.
+  /** Upsert `df` into `store` keyed by `idColumn` and return the number
+    * of rows written, counted by an accumulator inside the write job (an
+    * action, so a retried task's rows count once) — callers branch on
+    * it instead of probing `df` for rows first. Returns 0 without
+    * writing when the id column is missing, mirroring the reference's
+    * abort path (`db_core.py:293-295`).
     */
   def keyedUpsert(df: DataFrame, idColumn: String, store: KeyedStore,
-                  batchSize: Int = DefaultBatchSize): Boolean = {
-    if (!df.columns.contains(idColumn)) return false
+                  batchSize: Int = DefaultBatchSize): Long = {
+    if (!df.columns.contains(idColumn)) return 0L
     val docs = df.select(
       col(idColumn).cast("string").as("_id"),
       to_json(struct(df.columns.map(col).toIndexedSeq: _*)).as("_doc"))
+    val written = df.sparkSession.sparkContext.longAccumulator
     docs.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
       it.map(r => (r.getString(0), r.getString(1)))
         .grouped(batchSize)
-        .foreach(b => store.setAll(b))
+        .foreach { b => store.setAll(b); written.add(b.size.toLong) }
     }
-    true
+    written.sum
   }
 
   /** Filesystem-backed KeyedStore: one file per document id under `dir`.

@@ -106,7 +106,7 @@ class ObjectStore(root: String,
     * parquet committer — executors stream parts directly to the store. */
   def saveDataFrameParquet(df: DataFrame, name: String,
                            compression: String = "snappy"): Boolean = {
-    if (df.isEmpty) {
+    if (graft.engine.Engine.isEmpty(df)) {
       Log.war(s"Empty DataFrame, nothing saved at '$name'")
       return false
     }

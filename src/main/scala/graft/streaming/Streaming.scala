@@ -292,10 +292,6 @@ object Streaming {
       .toDF("user_id", "n_events", "sum_value")
   }
 
-  /** foreachBatch bridge into the batch sink layer (K-series): every
-    * micro-batch appends through [[graft.sinks.Sinks.loadDataFrame]] —
-    * empty-batch guard included (the reference's empty-input short-circuit,
-    * `db_core.py:99-101`). */
   /** foreachBatch bridge into the K9 keyed upsert: each micro-batch
     * merges insert-or-overwrite into the store (batched per partition,
     * executors write directly). Because upserts are idempotent per key,
@@ -313,12 +309,16 @@ object Streaming {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
+        if (!graft.engine.Engine.isEmpty(batch))
           graft.sinks.Upsert.keyedUpsert(batch, idColumn, store)
         ()
       }
       .start()
 
+  /** foreachBatch bridge into the batch sink layer (K-series): every
+    * micro-batch appends through [[graft.sinks.Sinks.loadDataFrame]],
+    * whose empty-input guard skips an empty batch (the reference's
+    * empty-input short-circuit, `db_core.py:99-101`). */
   def startParquetSink(df: DataFrame, path: String, checkpointDir: String,
                        trigger: Trigger = Trigger.AvailableNow())
       : StreamingQuery =
@@ -327,8 +327,7 @@ object Streaming {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          graft.sinks.Sinks.loadDataFrame(batch, path, "append")
+        graft.sinks.Sinks.loadDataFrame(batch, path, "append")
         ()
       }
       .start()

@@ -3,6 +3,7 @@ package graft.transform
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.util.control.NonFatal
 import graft.functions.Functions
 
 /** Schema/value sanitizers (SURVEY §2.7 W3-W6).
@@ -109,7 +110,7 @@ object Sanitize {
       .toLong)
     val smallInput =
       try df.queryExecution.optimizedPlan.stats.sizeInBytes <= smallBytes
-      catch { case _: Throwable => false }
+      catch { case NonFatal(_) => false }
     if (smallInput) {
       val arr = df.agg(
         percentile(value.cast("double"),

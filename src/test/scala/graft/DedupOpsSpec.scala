@@ -982,4 +982,22 @@ class DedupOpsSpec extends SparkSpec {
       .select("id").collect().map(_.getLong(0)).toSet
     assert(viaCorpus == viaCompose)
   }
+
+  test("benchmarkGramHashes: one scan job, no shuffle; same array as the " +
+      "explode + distinct form") {
+    import org.apache.spark.sql.Row
+    val texts = Seq("alpha beta gamma delta", "beta gamma delta alpha beta",
+      "short", null, "alpha beta gamma", "")
+    val bench = spark.createDataFrame(
+      spark.sparkContext.parallelize(texts.map(Row(_)), 3),
+      org.apache.spark.sql.types.StructType.fromDDL("text STRING"))
+    val (got, c) = org.apache.spark.graft.JobBudget.measure(spark)(
+      DedupOps.benchmarkGramHashes(bench, "text"))
+    assert(c.jobs == 1 && c.shuffleStages == 0, c.toString)
+    val exploded = bench.select(explode(call_function("graft_shingle_hashes",
+        call_function("graft_hash_tokens", TextOps.tokens(col("text"))),
+        lit(3))).as("_h"))
+      .distinct().collect().map(_.getLong(0)).sorted
+    assert(got.nonEmpty && got.toSeq == exploded.toSeq)
+  }
 }

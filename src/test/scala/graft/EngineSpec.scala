@@ -134,4 +134,23 @@ class EngineSpec extends SparkSpec {
     assert(out.count() == events.count())
     assert(out.columns.contains("n_name"))
   }
+
+  test("isEmpty probes one partition of a non-empty frame: one job, " +
+      "one task, no shuffle; answers like Dataset.isEmpty") {
+    val wide = spark.range(0, 1000, 1, 4).filter(col("id") % 3 === 0)
+    assert(wide.rdd.getNumPartitions >= 4)
+    val (empty, c) = org.apache.spark.graft.JobBudget.measure(spark)(
+      Engine.isEmpty(wide))
+    assert(!empty)
+    assert(c.jobs == 1 && c.tasks == 1 && c.shuffleStages == 0, c.toString)
+    val cases = Seq(
+      "empty" -> spark.range(0, 0, 1, 4).toDF(),
+      "filtered to empty" -> spark.range(0, 1000, 1, 4)
+        .filter(col("id") < 0).toDF(),
+      "non-empty" -> wide.toDF())
+    cases.foreach { case (name, df) =>
+      assert(Engine.isEmpty(df) == df.isEmpty, name)
+    }
+    assert(cases.map(c => Engine.isEmpty(c._2)) == Seq(true, true, false))
+  }
 }

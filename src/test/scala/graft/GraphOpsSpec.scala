@@ -191,4 +191,30 @@ class GraphOpsSpec extends SparkSpec {
     assert(weighted(6L) == 5L)
     assert(unweighted(6L) == 1L)
   }
+
+  test("lazy fixed-round loops reject rounds above MaxLazyRounds, " +
+      "naming the limit") {
+    import spark.implicits._
+    val edges = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
+    val nodes = Seq((1L, 1L), (2L, 1L), (3L, 1L)).toDF("node", "weight")
+    val over = GraphOps.MaxLazyRounds + 1
+    val calls = Seq[(String, () => Any)](
+      "labelPropagation" ->
+        (() => GraphOps.labelPropagation(edges, "id_a", "id_b", over)),
+      "pageRankFx" ->
+        (() => GraphOps.pageRankFx(edges, "id_a", "id_b", over)),
+      "labelPropagationBlowup" -> (() => GraphOps.labelPropagationBlowup(
+        edges, "id_a", "id_b", nodes, over)),
+      "pageRankBlowupFx" -> (() => GraphOps.pageRankBlowupFx(
+        edges, "id_a", "id_b", nodes, over)))
+    calls.foreach { case (op, call) =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains(op) &&
+        e.getMessage.contains(s"[1, ${GraphOps.MaxLazyRounds}]"),
+        e.getMessage)
+    }
+    // the limit itself is accepted
+    assert(GraphOps.labelPropagation(edges, "id_a", "id_b",
+      GraphOps.MaxLazyRounds).columns.nonEmpty)
+  }
 }

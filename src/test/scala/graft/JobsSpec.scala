@@ -136,7 +136,8 @@ class JobsSpec extends SparkSpec {
     val rules = Seq(Checks.notNull("text"), Checks.nonNegative("doc_id"))
     val (twinBad, twinKept) = StreamIngestJob.routedTransform(
       (b1 ++ b2).toDF("doc_id", "text"), "doc_id", "text", rules, grams,
-      Seq("forbidden phrase"))
+      Some(graft.ext.TextOps.containsBlockedPhrase(col("text"),
+        Seq("forbidden phrase"))))
 
     // Kept rows: the store holds one JSON doc per id, byte-equal to the
     // twin's to_json projection (same column order: doc_id, text, split).
@@ -171,7 +172,7 @@ class JobsSpec extends SparkSpec {
       (-3L, "negative id")).toDF("doc_id", "text")
     def runBatch(df: org.apache.spark.sql.DataFrame, id: Long): Unit =
       StreamIngestJob.processBatch(df, id, "doc_id", "text", rules,
-        Array.empty[Long], Seq.empty, store, quarantine,
+        Array.empty[Long], None, store, quarantine,
         0.05, 0.05, None, Double.PositiveInfinity, None)
     runBatch(b1, 7L)
     // replay the SAME micro-batch id — the failure-between-write-and-
@@ -205,7 +206,7 @@ class JobsSpec extends SparkSpec {
     val rules = Seq(Checks.notNull("text"))
     def runBatch(df: org.apache.spark.sql.DataFrame, id: Long): Unit =
       StreamIngestJob.processBatch(df, id, "doc_id", "text", rules,
-        Array.empty[Long], Seq.empty, store, s"$base/quarantine",
+        Array.empty[Long], None, store, s"$base/quarantine",
         0.05, 0.05, None, Double.PositiveInfinity, None,
         monitor = Some((monitorDir, "-")))
     val b1 = Seq((1L, "alpha beta gamma"), (2L, "beta delta"),
@@ -255,7 +256,7 @@ class JobsSpec extends SparkSpec {
     val rules = Seq(Checks.notNull("text"))
     def runBatch(df: org.apache.spark.sql.DataFrame, id: Long): Unit =
       StreamIngestJob.processBatch(df, id, "doc_id", "text", rules,
-        Array.empty[Long], Seq.empty, store, s"$base/quarantine",
+        Array.empty[Long], None, store, s"$base/quarantine",
         0.05, 0.05, None, Double.PositiveInfinity, None,
         freqMonitorDir = Some(dir))
     val b1 = Seq((1L, "alpha beta alpha"), (2L, "beta gamma"))
@@ -293,7 +294,7 @@ class JobsSpec extends SparkSpec {
     val rules = Seq(Checks.notNull("text"))
     def runBatch(df: org.apache.spark.sql.DataFrame, id: Long): Unit =
       StreamIngestJob.processBatch(df, id, "doc_id", "text", rules,
-        Array.empty[Long], Seq.empty, store, s"$base/quarantine",
+        Array.empty[Long], None, store, s"$base/quarantine",
         0.05, 0.05, None, Double.PositiveInfinity, None,
         lenMonitorDir = Some(dir))
     val b1 = Seq((1L, "one two three"), (2L, "a b c d e f g h"))
@@ -349,7 +350,7 @@ class JobsSpec extends SparkSpec {
       .map(_.getName.stripSuffix(".json")).toSet
     val (_, twinKept) = StreamIngestJob.routedTransform(
       docs.toDF("doc_id", "text"), "doc_id", "text",
-      Seq(graft.transform.Checks.notNull("text")), Array.empty, Seq.empty,
+      Seq(graft.transform.Checks.notNull("text")), Array.empty, None,
       lmModel = Some(model), maxMeanNll = cap)
     val twinIds = twinKept.select("doc_id").collect()
       .map(_.getLong(0).toString).toSet
@@ -389,7 +390,7 @@ class JobsSpec extends SparkSpec {
     val (_, twinKept) = StreamIngestJob.routedTransform(
       docs.toDF("doc_id", "text"), "doc_id", "text",
       Seq(graft.transform.Checks.notNull("text")), Array.empty,
-      Seq.empty, nbModel = Some(model))
+      None, nbModel = Some(model))
     val twinIds = twinKept.select("doc_id").collect()
       .map(_.getLong(0).toString).toSet
     assert(twinIds == Set("1", "3"), s"twin kept $twinIds")
@@ -437,7 +438,7 @@ class JobsSpec extends SparkSpec {
     assert(stored("3").contains("\"ppl_bucket\":\"middle\""), stored("3"))
     val (_, twinKept) = StreamIngestJob.routedTransform(
       docs.toDF("doc_id", "text"), "doc_id", "text",
-      Seq(graft.transform.Checks.notNull("text")), Array.empty, Seq.empty,
+      Seq(graft.transform.Checks.notNull("text")), Array.empty, None,
       lmModel = Some(model), nllBand = Some((t1, t2)), dropNllTail = true)
     val twin = twinKept.select("doc_id", "ppl_bucket").collect()
       .map(r => r.getLong(0).toString -> r.getString(1)).toMap
@@ -466,7 +467,7 @@ class JobsSpec extends SparkSpec {
       .map(_.getName.stripSuffix(".json")).toSet
     val (_, twinKept) = StreamIngestJob.routedTransform(
       docs.toDF("doc_id", "text"), "doc_id", "text",
-      Seq(graft.transform.Checks.notNull("text")), Array.empty, Seq.empty,
+      Seq(graft.transform.Checks.notNull("text")), Array.empty, None,
       dedupIndex = Some(DedupOps.buildDedupIndex(history, "text")))
     val twinIds = twinKept.select("doc_id").collect()
       .map(_.getLong(0).toString).toSet
@@ -504,7 +505,7 @@ class JobsSpec extends SparkSpec {
       .map(_.getName.stripSuffix(".json")).toSet
     val (_, twinKept) = StreamIngestJob.routedTransform(
       docs.toDF("doc_id", "text"), "doc_id", "text",
-      Seq(graft.transform.Checks.notNull("text")), Array.empty, Seq.empty,
+      Seq(graft.transform.Checks.notNull("text")), Array.empty, None,
       nearDupIndex = Some((spark.read.parquet(s"$base/nd_index"), 0.5)))
     val twinIds = twinKept.select("doc_id").collect()
       .map(_.getLong(0).toString).toSet
@@ -1025,5 +1026,44 @@ class JobsSpec extends SparkSpec {
       .select(col("doc_id"), col("pred_lang")).collect()
       .map(r => r.getLong(0) -> Option(r.getString(1))).toMap
     assert(hashPred == strPred)
+  }
+
+  test("processBatch job budget: a 3-partition batch with rules, bench " +
+      "grams and a blocklist runs at most 3 jobs and no shuffle; no " +
+      "rule breakers, no quarantine partition") {
+    import spark.implicits._
+    import org.apache.spark.sql.Row
+    import graft.jobs.StreamIngestJob
+    import graft.transform.Checks
+    import graft.ext.{DedupOps, TextOps}
+    val base = s"$ws/si_budget"
+    val quarantine = s"$base/quarantine"
+    val store = new graft.sinks.Upsert.FileStore(s"$base/store")
+    val rows = Seq(
+      Row(1L, "clean text about spark engines"),
+      Row(2L, "another clean document entirely"),
+      Row(3L, "this has the Forbidden-Phrase! inside"),      // blocked
+      Row(4L, "carries benchmark alpha beta gamma trigram"), // contaminated
+      Row(5L, "a third clean row"),
+      Row(6L, "and a fourth one"))
+    val batch = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3),
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "doc_id LONG, text STRING"))
+    assert(batch.rdd.getNumPartitions == 3)
+    val grams = DedupOps.benchmarkGramHashes(
+      Seq("prefix alpha beta gamma suffix").toDF("text"), "text")
+    val blocked = Some(TextOps.containsBlockedPhrase(col("text"),
+      Seq("forbidden phrase")))
+    val rules = Seq(Checks.notNull("text"), Checks.nonNegative("doc_id"))
+    val (_, c) = org.apache.spark.graft.JobBudget.measure(spark)(
+      StreamIngestJob.processBatch(batch, 0L, "doc_id", "text", rules,
+        grams, blocked, store, quarantine, 0.05, 0.05, None,
+        Double.PositiveInfinity, None))
+    assert(c.jobs <= 3 && c.shuffleStages == 0, c.toString)
+    assert(!new java.io.File(s"$quarantine/batch_id=0").exists(),
+      "a batch without rule breakers wrote a quarantine partition")
+    val stored = new java.io.File(s"$base/store").listFiles()
+      .map(_.getName).toSet
+    assert(stored == Set("1.json", "2.json", "5.json", "6.json"), stored)
   }
 }

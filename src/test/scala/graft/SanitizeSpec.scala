@@ -176,4 +176,21 @@ class SanitizeSpec extends SparkSpec {
       .toMap
     assert(again == out.map(t => t._1 -> t._5).toMap)
   }
+
+  test("exactPercentiles size gate: a fatal error from the stats read " +
+      "propagates; a non-fatal one takes the distributed tier") {
+    import org.apache.spark.sql.graft.FailingStats
+    val fatal = intercept[StackOverflowError] {
+      Sanitize.exactPercentiles(
+        FailingStats.frame(spark, new StackOverflowError("stats read")),
+        col("v"), Seq(0.5))
+    }
+    assert(fatal.getMessage == "stats read")
+    val routed = Sanitize.exactPercentiles(
+      FailingStats.frame(spark, new IllegalStateException("stats read")),
+      col("v"), Seq(0.5))
+    // only the distributed two-level rank plans a window
+    assert(routed.queryExecution.analyzed.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Window]))
+  }
 }

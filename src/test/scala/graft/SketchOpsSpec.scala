@@ -479,4 +479,16 @@ class SketchOpsSpec extends SparkSpec {
       mBits = 16384, depth = 3))
     assert(p.contains("BroadcastHashJoin"), p)
   }
+
+  test("cmsEstimate keeps a null-token probe row with cms_est = 0") {
+    import spark.implicits._
+    val sketch = SketchOps.cmsSketch(Seq("alpha beta alpha").toDF("text"),
+      "text", width = 1024)
+    val probes = Seq(Some("alpha"), None, Some("absent")).toDF("token")
+    val got = SketchOps.cmsEstimate(sketch, probes, "token", width = 1024)
+      .collect()
+      .map(r => Option(r.getString(0)) -> r.getAs[Long]("cms_est")).toMap
+    assert(got == Map(Some("alpha") -> 2L, None -> 0L, Some("absent") -> 0L),
+      got.toString)
+  }
 }

@@ -201,12 +201,12 @@ class TextOpsSpec extends SparkSpec {
       (3L, "contains the evil phrase somewhere"), // two-word phrase
       (4L, "evil text with phrase apart"),        // words present, NOT contiguous
       (5L, "")).toDF("id", "text")
-    val kept = TextOps.filterBlocked(df, "text",
-        Seq("bad word", "evil phrase"))
+    val kept = df.filter(!TextOps.containsBlockedPhrase(col("text"),
+        Seq("bad word", "evil phrase")))
       .select("id").collect().map(_.getLong(0)).toSet
     assert(kept == Set(2L, 4L, 5L))
     intercept[IllegalArgumentException] {
-      TextOps.filterBlocked(df, "text", Seq("  ", ""))
+      TextOps.containsBlockedPhrase(col("text"), Seq("  ", ""))
     }
   }
 
@@ -220,7 +220,8 @@ class TextOpsSpec extends SparkSpec {
       (1L, "prefix İyi Değil suffix"),
       (2L, "iyi degil ascii variant"), // different normalization: no match
       (3L, "clean row")).toDF("id", "text")
-    val kept = TextOps.filterBlocked(df, "text", Seq("İyi Değil"))
+    val kept = df.filter(!TextOps.containsBlockedPhrase(col("text"),
+        Seq("İyi Değil")))
       .select("id").collect().map(_.getLong(0)).toSet
     assert(kept == Set(2L, 3L), s"got $kept")
   }
@@ -1542,5 +1543,18 @@ class TextOpsSpec extends SparkSpec {
     assert(lm.uniKeys.toSeq == uniRow.map(_._1).toSeq)
     assert(lm.uniVals.toSeq == uniRow.map(_._2).toSeq)
     assert(lm.biKeys.length > 0 && lm.v == uniRow.length + 1.0)
+  }
+
+  test("containsBlockedPhrase builds its phrase hash sets without a Spark job") {
+    import spark.implicits._
+    val phrases = Seq("bad word", "evil phrase here", "single")
+    val (pred, c) = org.apache.spark.graft.JobBudget.measure(spark)(
+      TextOps.containsBlockedPhrase(col("text"), phrases))
+    assert(c.jobs == 0, c.toString)
+    val hits = Seq((1L, "a Bad-Word! here"), (2L, "the evil phrase here"),
+        (3L, "evil phrase apart here"), (4L, "single"), (5L, "fine"))
+      .toDF("id", "text").filter(pred)
+      .select("id").collect().map(_.getLong(0)).toSet
+    assert(hits == Set(1L, 2L, 4L))
   }
 }

@@ -22,7 +22,8 @@ class UpsertSpec extends SparkSpec {
     UpsertSpec.batchSizes.clear()
     // 1 partition of 1203 rows, batch 500 → commits of 500, 500, 203.
     val df = spark.range(1203).toDF("id").coalesce(1)
-    assert(Upsert.keyedUpsert(df, "id", new UpsertSpec.RecordingStore, 500))
+    assert(Upsert.keyedUpsert(df, "id", new UpsertSpec.RecordingStore,
+      500) == 1203L)
     val sizes = UpsertSpec.batchSizes.toArray(Array.empty[Integer]).map(_.toInt)
     assert(sizes.sorted.toSeq == Seq(203, 500, 500))
   }
@@ -31,7 +32,7 @@ class UpsertSpec extends SparkSpec {
     import spark.implicits._
     UpsertSpec.batchSizes.clear()
     val df = Seq((1, "a")).toDF("k", "v")
-    assert(!Upsert.keyedUpsert(df, "nope", new UpsertSpec.RecordingStore))
+    assert(Upsert.keyedUpsert(df, "nope", new UpsertSpec.RecordingStore) == 0L)
     assert(UpsertSpec.batchSizes.isEmpty)
   }
 

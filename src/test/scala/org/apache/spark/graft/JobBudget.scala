@@ -1,0 +1,54 @@
+package org.apache.spark.graft
+
+import java.util.UUID
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageSubmitted}
+import org.apache.spark.sql.SparkSession
+
+/** Counts the Spark jobs, stages and tasks one block of driver code
+  * launches — the test-side check of a job budget. Only work submitted
+  * under the block's own job group counts, so other activity in the
+  * shared session cannot leak in. Lives under `org.apache.spark` for
+  * the listener-bus drain and `StageInfo.shuffleDepId`. */
+object JobBudget {
+
+  /** `shuffleStages` = submitted shuffle-map stages (AQE submits each
+    * query stage as its own job; a skipped stage is not submitted). */
+  final case class Counts(jobs: Int, stages: Int, tasks: Int,
+                          shuffleStages: Int)
+
+  def measure[T](spark: SparkSession)(body: => T): (T, Counts) = {
+    val sc = spark.sparkContext
+    val group = s"job-budget-${UUID.randomUUID()}"
+    def ours(props: java.util.Properties): Boolean =
+      props != null &&
+        props.getProperty(SparkContext.SPARK_JOB_GROUP_ID) == group
+    val jobs = new ConcurrentLinkedQueue[Int]()
+    val stages = new ConcurrentLinkedQueue[(Int, Boolean)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (ours(e.properties)) jobs.add(e.jobId)
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (ours(e.properties))
+          stages.add((e.stageInfo.numTasks, e.stageInfo.shuffleDepId.isDefined))
+    }
+    val previous = sc.getLocalProperty(SparkContext.SPARK_JOB_GROUP_ID)
+    sc.listenerBus.waitUntilEmpty()
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job budget", interruptOnCancel = false)
+    try {
+      val out = body
+      sc.listenerBus.waitUntilEmpty()
+      val st = stages.toArray(Array.empty[(Int, Boolean)])
+      (out, Counts(jobs.size, st.length, st.map(_._1).sum,
+        st.count(_._2)))
+    } finally {
+      sc.removeSparkListener(listener)
+      if (previous == null) sc.clearJobGroup()
+      else sc.setLocalProperty(SparkContext.SPARK_JOB_GROUP_ID, previous)
+    }
+  }
+}
