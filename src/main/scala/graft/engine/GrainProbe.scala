@@ -24,11 +24,10 @@ import org.apache.spark.sql.functions._
   *   - The key is the canonicalized logical plan of the probe
   *     aggregate itself: two ops probe the same cache entry only when
   *     their input plan AND key expression are semantically identical.
-  *   - Same in-session staleness caveat as ExtQueries' stagesCache: if
-  *     the underlying table is rewritten mid-session (Dml sinks), the
-  *     tier choice may lag the data until session close. Acceptable
-  *     under the bench's immutable-input discipline; library users
-  *     doing in-session rewrites get a suboptimal-but-correct plan.
+  *   - A mid-session rewrite (Dml sinks) clears the session's
+  *     verdicts through [[SessionCaches.invalidate]]; a probe racing
+  *     the rewrite may still keep a verdict for the old data, which
+  *     costs at most a suboptimal-but-correct plan.
   *
   * Streaming inputs never reach this (callers keep their
   * `!df.isStreaming` guard — tier probes are batch-only by contract).

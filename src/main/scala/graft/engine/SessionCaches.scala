@@ -36,19 +36,26 @@ object SessionCaches {
   def fills: Long = fillsCtr.get()
   def hits: Long = hitsCtr.get()
 
+  /** Bumped by [[invalidate]] before it drops entries. */
+  private val epoch = new java.util.concurrent.atomic.AtomicLong
+
   /** Memoize through a registered map, counting warm hits vs fills.
     * The compute runs OUTSIDE any map lock (the GrainProbe argument:
     * a fill is a multi-second Spark job; holding the bin lock would
     * serialize unrelated fills). A lost race recomputes and discards —
-    * idempotent, the maps hold pure functions of immutable inputs. */
+    * idempotent, the maps hold pure functions of immutable inputs. A
+    * fill that an [[invalidate]] overlapped may have read the replaced
+    * files: it answers its caller but is withdrawn from the map. */
   def memo[V](m: java.util.concurrent.ConcurrentHashMap[
       (SparkSession, String), V], k: (SparkSession, String))
       (compute: => V): V = {
     val hit = m.get(k)
     if (hit != null) { hitsCtr.incrementAndGet(); hit }
     else {
+      val seen = epoch.get()
       val v = compute
       val prev = m.putIfAbsent(k, v)
+      if (epoch.get() != seen) m.remove(k, v)
       if (prev != null) { hitsCtr.incrementAndGet(); prev }
       else { fillsCtr.incrementAndGet(); v }
     }
@@ -68,10 +75,10 @@ object SessionCaches {
   /** Drop every cached entry of `spark` whose key dir contains
     * `mutatedPath` (the table path a DML sink just rewrote), plus the
     * session's GrainProbe verdicts. Safe to call concurrently with
-    * cache fills: worst case a racing fill re-reads the OLD files it
-    * already planned against — the same read-vs-write race any
-    * non-transactional table has, not a cache artifact. */
+    * cache fills: a fill in flight while this runs is served to its
+    * own caller but never kept (see [[memo]]). */
   def invalidate(spark: SparkSession, mutatedPath: String): Unit = {
+    epoch.incrementAndGet()
     val p = stripScheme(mutatedPath)
     registered.forEach { m =>
       val it = m.keySet().iterator()

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.engine.Tiers
+
 /** Deduplication operators for LLM training-data pipelines (SURVEY §2.10):
   * exact (hash-groupBy), n-gram Jaccard, MinHash+LSH banding, SimHash.
   *
@@ -26,25 +28,6 @@ import org.apache.spark.sql.functions._
   * the LSH path is the scale path).
   */
 object DedupOps {
-
-  /** Broadcast byte budget for the incremental near-dup tiers —
-    * configurable like CurationJob's `broadcastIdBudgetBytes`
-    * (`spark.graft.dedup.broadcastBudgetBytes`, default 64 MB) so
-    * operators running next to memory-hungry neighbors can tighten it
-    * without a code change. */
-  private def broadcastBudgetBytes(
-      spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption("spark.graft.dedup.broadcastBudgetBytes")
-      .map(_.toLong).getOrElse(64L << 20)
-
-  /** Measured broadcast payload of a relation carrying an `_sh`
-    * hashed-shingle array: rows·48 B framing + 8 B per hash. One cheap
-    * aggregate — callers pass already-materialized frames. */
-  private def shingleRelationBytes(ix: DataFrame): Long = {
-    val r = ix.agg(count(lit(1)),
-      coalesce(sum(size(col("_sh"))), lit(0L))).head()
-    r.getLong(0) * 48L + r.getLong(1) * 8L
-  }
 
   /** Exact near-layout dedup: keep the lowest-id row per normalized-text
     * fingerprint. One shuffle; deterministic winner (min id), matching the
@@ -1149,25 +1132,17 @@ object DedupOps {
     val edges = graft.engine.Engine.materialize(
       pairs.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst")))
-    // DRIVER-LOCAL tier (r18): the closure's inputs are rep-grain or
-    // frontier-contracted BY DESIGN (clone mass collapses before any
-    // pair stage; incrementalComponents contracts history to the
-    // batch frontier), so the typical edge list is thousands of rows
-    // while the iterative path costs join+agg+checkpoint+probe JOBS
-    // per round. Under a measured edge budget the closure runs as
-    // union-find on the driver — the CMS-grid/benchmark-literal
-    // discipline: a bounded relation may cross the driver — and the
-    // result returns as a LocalRelation. Labels are min member ids
-    // either way (union-find tracks the component minimum), so the
-    // two tiers are result-identical (R18KernelsSpec pins them on the
-    // adversarial layouts DedupOpsSpec uses). Corpora whose pair graph
-    // outgrows the budget take the iterative path unchanged;
-    // production tunes spark.graft.cc.localEdgeCap to driver memory.
-    val localCap = pairs.sparkSession.conf
-      .getOption("spark.graft.cc.localEdgeCap").map(_.toLong)
-      .getOrElse(500000L)
-    val nEdges = edges.count()
-    if (nEdges <= localCap) {
+    // DRIVER-LOCAL tier: the closure's inputs are rep-grain or
+    // frontier-contracted BY DESIGN, so the typical edge list is
+    // thousands of rows while the iterative path costs
+    // join+agg+checkpoint+probe JOBS per round. An edge list that fits
+    // the tier budget as driver objects runs as union-find on the
+    // driver and returns as a LocalRelation. Labels are min member ids
+    // either way (union-find tracks the component minimum), so the two
+    // tiers are result-identical (pinned in R18KernelsSpec).
+    val spark = pairs.sparkSession
+    val edgeBytes = Tiers.measure(edges).bytes
+    if (Tiers.fitsLocal(spark)(edgeBytes)) {
       val rows = edges.collect()
       graft.engine.Engine.release(edges)
       val parent = new java.util.HashMap[Long, Long]()
@@ -1200,7 +1175,6 @@ object DedupOps {
       val out = new scala.collection.mutable.ArrayBuffer[
         (Long, Long)](nodes.size)
       nodes.forEach(n => out += ((n.longValue(), find(n.longValue()))))
-      val spark = pairs.sparkSession
       import spark.implicits._
       return out.toSeq.toDF("id", "component")
     }
@@ -1540,6 +1514,30 @@ object DedupOps {
         buildNearDupIndex(newDf, idCol, textCol, shingleN, numPerm)),
       histIndex, numPerm, bands, threshold)
 
+  /** Band rows (`_band`, `_bh`, `id`) of a near-dup index. */
+  private def bandRows(ix: DataFrame, id: String, numPerm: Int,
+                       bands: Int): DataFrame = {
+    require(numPerm % bands == 0, "numPerm must be divisible by bands")
+    ix.select(col("_id"),
+        posexplode(bandHashes(col("_sig"), bands, numPerm / bands)))
+      .select(col("pos").as("_band"), col("col").as("_bh"),
+        col("_id").as(id))
+  }
+
+  /** Bucket-sharing pairs (`id_a` from the batch index `ixNew` of
+    * `nNew` rows, `id_b` from the band rows `index`). Both indexes are
+    * checkpoint- or parquet-backed without planner stats, so nothing
+    * auto-broadcasts; the batch is the small side BY CONTRACT, and its
+    * band rows broadcast when they fit the tier budget so the archive's
+    * bands×|archive| rows stream map-side instead of shuffling. */
+  private def bandProbe(ixNew: DataFrame, nNew: Long, index: DataFrame,
+                        numPerm: Int, bands: Int): DataFrame = {
+    val probe = bandRows(ixNew, "id_a", numPerm, bands)
+    Tiers.broadcastIfFits(probe)(
+        BigInt(nNew) * bands * Tiers.rowBytes(probe.schema))
+      .join(index, Seq("_band", "_bh"))
+  }
+
   /** [[incrementalNearDupPairsWithIndex]] when the BATCH index is also
     * prebuilt (and materialized by the caller) — the shape
     * [[graft.jobs.IncrementalDedupJob]] needs: it appends the batch's
@@ -1552,61 +1550,33 @@ object DedupOps {
                                             bands: Int = 16,
                                             threshold: Double = 0.5)
       : DataFrame = {
-    require(numPerm % bands == 0, "numPerm must be divisible by bands")
-    val r = numPerm / bands
     val eng = graft.engine.Engine
-    def banded(ix: DataFrame) = ix
-      .select(col("_id"),
-        posexplode(bandHashes(col("_sig"), bands, r)))
-      .withColumnsRenamed(Map("pos" -> "_band", "col" -> "_bh"))
-    val bNew = banded(ixNew)
-    val probe = bNew.select(col("_band"), col("_bh"),
-      col("_id").as("id_a"))
-    val index = banded(histIndex).unionByName(bNew)
-      .select(col("_band"), col("_bh"), col("_id").as("id_b"))
-    // Join POSTURE (sf10 probe finding: this stage, not the closure,
-    // was the recurring per-day cost): both indexes are checkpoint- or
-    // parquet-backed with no planner stats, so nothing auto-broadcasts
-    // — the band probe sort-merge-shuffled the archive's
-    // bands×|archive| band rows against a daily-batch-sized probe, and
-    // the shingle verification shuffled the archive's member-grain
-    // shingle sets TWICE more. The batch is the small side BY
-    // CONTRACT: broadcast its band rows under a byte budget (~24 B
-    // each) so the archive streams map-side; verify on the FRONTIER
-    // SLICE of the shingle table (one broadcast semi-join — the
-    // incrementalComponents discipline: history is scanned, never
-    // shuffled). A pathological candidate blow-up falls back to the
-    // shuffle joins rather than an oversized broadcast.
-    val nNew = ixNew.count()
-    val probeH =
-      if (nNew * bands * 24L <= (64L << 20)) broadcast(probe) else probe
-    val pairs = eng.materialize(probeH.join(index, Seq("_band", "_bh"))
+    // Join POSTURE: the band probe ([[bandProbe]]) streams the archive
+    // map-side, and the verification reads only the FRONTIER SLICE of
+    // the shingle table (one broadcast semi-join: history is scanned,
+    // never shuffled), each within the tier budget.
+    val index = bandRows(histIndex, "id_b", numPerm, bands)
+      .unionByName(bandRows(ixNew, "id_b", numPerm, bands))
+    val nNew = Tiers.measure(ixNew.select()).rows
+    val pairs = eng.materialize(
+      bandProbe(ixNew, nNew, index, numPerm, bands)
       .filter(col("id_a") =!= col("id_b"))
       .select(least(col("id_a"), col("id_b")).as("id_a"),
         greatest(col("id_a"), col("id_b")).as("id_b"))
       .dropDuplicates("id_a", "id_b"))
     val shAll = histIndex.select(col("_id"), col("_sh"))
       .unionByName(ixNew.select(col("_id"), col("_sh")))
-    val nPairs = pairs.count()
-    val budget = broadcastBudgetBytes(pairs.sparkSession)
-    // ends is id-only (≤ 2 ids per pair, ~16 B each) — its broadcast
-    // gate needs no shingle sizing.
-    val endsSmall = nPairs * 32L <= budget
+    val nPairs = Tiers.measure(pairs).rows
+    // ends holds at most two ids per pair
     val ends = pairs.select(col("id_a").as("_id"))
       .unionByName(pairs.select(col("id_b").as("_id"))).distinct()
-    val shTouched = eng.materialize(
-      shAll.join(if (endsSmall) broadcast(ends) else ends,
-        Seq("_id"), "left_semi"))
-    // The shingle side's broadcast gate is MEASURED, not assumed:
-    // shTouched is already materialized, so one cheap scan prices the
-    // actual payload — a long-document corpus whose sets dwarf the old
-    // ~4 KB/row constant can no longer slip an oversized relation past
-    // the budget.
-    val small = shingleRelationBytes(shTouched) <= budget
-    def side(a: String, b: String): DataFrame = {
-      val s = shTouched.select(col("_id").as(a), col("_sh").as(b))
-      if (small) broadcast(s) else s
-    }
+    val shTouched = eng.materialize(shAll.join(Tiers.broadcastIfFits(ends)(
+      BigInt(nPairs) * 2 * Tiers.rowBytes(ends.schema)), Seq("_id"),
+      "left_semi"))
+    // measured, so long documents cannot slip past the budget
+    val shBytes = Tiers.measure(shTouched).bytes
+    def side(a: String, b: String): DataFrame = Tiers.broadcastIfFits(
+      shTouched.select(col("_id").as(a), col("_sh").as(b)))(shBytes)
     pairs
       .join(side("id_a", "sh_a"), Seq("id_a"))
       .join(side("id_b", "sh_b"), Seq("id_b"))
@@ -1633,46 +1603,27 @@ object DedupOps {
                         shingleN: Int = 2, numPerm: Int = 64,
                         bands: Int = 16,
                         threshold: Double = 0.5): DataFrame = {
-    require(numPerm % bands == 0, "numPerm must be divisible by bands")
-    val r = numPerm / bands
-    def banded(ix: DataFrame) = ix
-      .select(col("_id"),
-        posexplode(bandHashes(col("_sig"), bands, r)))
-      .withColumnsRenamed(Map("pos" -> "_band", "col" -> "_bh"))
+    val index = bandRows(histIndex, "id_b", numPerm, bands)
     val eng = graft.engine.Engine
     val ixNew = eng.materialize(
       buildNearDupIndex(batch, idCol, textCol, shingleN, numPerm))
-    val probe = banded(ixNew).select(col("_band"), col("_bh"),
-      col("_id").as("id_a"))
-    val index = banded(histIndex).select(col("_band"), col("_bh"),
-      col("_id").as("id_b"))
     // Same join posture as [[incrementalNearDupPairsBetweenIndexes]]:
-    // the micro-batch is the contract's small side (broadcast its band
-    // rows under a byte budget, stream the archive map-side) and the
-    // verification reads only the candidate slice of the archive's
-    // shingle table (broadcast semi) — the archive is scanned, never
-    // shuffled.
-    val nNew = ixNew.count()
-    val budget = broadcastBudgetBytes(batch.sparkSession)
-    val probeH =
-      if (nNew * bands * 24L <= budget) broadcast(probe) else probe
-    val cand = eng.materialize(probeH.join(index, Seq("_band", "_bh"))
+    // the archive is scanned, never shuffled.
+    val ixSize = Tiers.measure(ixNew.select(col("_id"), col("_sh")))
+    val cand = eng.materialize(
+      bandProbe(ixNew, ixSize.rows, index, numPerm, bands)
       .select(col("id_a"), col("id_b"))
       .dropDuplicates("id_a", "id_b"))
-    // Shingle sizing SAMPLED from the batch's own (materialized) index
-    // — same corpus, so its measured bytes/row prices the history slice
-    // about to broadcast far better than a fixed ~4 KB constant.
-    val nCand = cand.count()
-    val small = nCand *
-      (shingleRelationBytes(ixNew) / math.max(1L, nNew) + 16L) <= budget
+    // The history slice is priced at the batch's own measured bytes per
+    // (id, shingles) row — same corpus, so its width samples the slice
+    // about to broadcast; its id list goes with it.
+    val sliceBytes = BigInt(Tiers.measure(cand).rows) * ixSize.bytes /
+      math.max(1L, ixSize.rows)
     val bIds = cand.select(col("id_b").as("_id")).distinct()
-    val histTouched = histIndex.select(col("_id"), col("_sh"))
-      .join(if (small) broadcast(bIds) else bIds, Seq("_id"), "left_semi")
-    val histSide = {
-      val s = histTouched.select(col("_id").as("id_b"),
-        col("_sh").as("sh_b"))
-      if (small) broadcast(s) else s
-    }
+    val histSide = Tiers.broadcastIfFits(histIndex
+      .select(col("_id"), col("_sh"))
+      .join(Tiers.broadcastIfFits(bIds)(sliceBytes), Seq("_id"), "left_semi")
+      .select(col("_id").as("id_b"), col("_sh").as("sh_b")))(sliceBytes)
     cand
       .join(ixNew.select(col("_id").as("id_a"), col("_sh").as("sh_a")),
         Seq("id_a"))
@@ -1943,23 +1894,15 @@ object DedupOps {
                      idfScale: Long = 1000L): DataFrame = {
     val (w, norms, prefix, classes) =
       apssPostings(df0, idCol, textCol, tNum, tDen, gramN, idfScale)
-    // Join POSTURE (r18; the incremental-pair lesson applied to the
-    // miner): every relation in the quadratic core is REPRESENTATIVE-
-    // sized — clone mass collapsed before it — and the rep tier stays
-    // small under replication by construction, so under a measured
-    // byte budget the prefix postings broadcast (candidate join =
-    // map-side BHJ over the streamed full postings), the per-rep
+    // Join POSTURE: every relation in the quadratic core is
+    // REPRESENTATIVE-sized — clone mass collapsed before it — so when
+    // they fit the tier budget the prefix postings broadcast (map-side
+    // candidate join over the streamed full postings), the per-rep
     // (term, weight) vectors broadcast twice into one compiled
-    // merge-dot projection per candidate (graft_merge_dot — the
-    // exploded (pair, term) verification join shuffled |cand|·|terms|
-    // rows for the identical integer dots), and the norms attach by
-    // broadcast. A corpus whose rep relations outgrow the budget falls
-    // back to the shuffle joins, never an oversized broadcast.
-    val budget = broadcastBudgetBytes(w.sparkSession)
-    val wCnt = w.count()
-    val nReps = norms.count()
-    def gated(df: DataFrame, bytes: Long): DataFrame =
-      if (bytes <= budget) broadcast(df) else df
+    // merge-dot projection per candidate (graft_merge_dot), and the
+    // norms attach by broadcast; larger rep relations take the shuffle
+    // joins, never an oversized broadcast.
+    val wRows = Tiers.measure(w).rows
     // DUAL-WITNESS pruning (r18; Bayardo's bound applied on BOTH
     // sides): the one-sided theorem — if every shared term sits in
     // x's below-threshold tail, dot ≤ ‖x_tail‖·‖y‖ < t·‖x‖·‖y‖ —
@@ -1971,7 +1914,10 @@ object DedupOps {
     // ApssProbe — the DuckDB twin computes the unpruned definition,
     // so the green oracle row proves the filter drops nothing).
     val full = w.select(col("_t"), col("_id").as("_fid"))
-    val cand = gated(prefix, wCnt * 24L).join(full, Seq("_t"))
+    // prefix rows are a subset of w's
+    val cand = Tiers.broadcastIfFits(prefix)(
+        BigInt(wRows) * Tiers.rowBytes(prefix.schema))
+      .join(full, Seq("_t"))
       .filter(col("_pid") =!= col("_fid"))
       .select(least(col("_pid"), col("_fid")).as("_a"),
         greatest(col("_pid"), col("_fid")).as("_b"),
@@ -1984,20 +1930,22 @@ object DedupOps {
       w.groupBy(col("_id"))
         .agg(sort_array(collect_list(struct(col("_t"), col("_w"))))
           .as("_vec")))
-    val vecBytes = nReps * 48L + wCnt * 16L
+    // one vec row per rep: its measure also counts the norms' rows
+    val vecSize = Tiers.measure(vec)
     val dots = cand
-      .join(gated(vec.select(col("_id").as("_a"), col("_vec").as("_va")),
-        vecBytes), Seq("_a"))
-      .join(gated(vec.select(col("_id").as("_b"), col("_vec").as("_vb")),
-        vecBytes), Seq("_b"))
+      .join(Tiers.broadcastIfFits(vec.select(col("_id").as("_a"),
+        col("_vec").as("_va")))(vecSize.bytes), Seq("_a"))
+      .join(Tiers.broadcastIfFits(vec.select(col("_id").as("_b"),
+        col("_vec").as("_vb")))(vecSize.bytes), Seq("_b"))
       .select(col("_a"), col("_b"),
         call_function("graft_merge_dot", col("_va"), col("_vb"))
           .as("dot"))
+    val normBytes = BigInt(vecSize.rows) * Tiers.rowBytes(norms.schema)
     val repPairs = dots
-      .join(gated(norms.select(col("_id").as("_a"), col("_nsq").as("_na")),
-        nReps * 24L), Seq("_a"))
-      .join(gated(norms.select(col("_id").as("_b"), col("_nsq").as("_nb")),
-        nReps * 24L), Seq("_b"))
+      .join(Tiers.broadcastIfFits(norms.select(col("_id").as("_a"),
+        col("_nsq").as("_na")))(normBytes), Seq("_a"))
+      .join(Tiers.broadcastIfFits(norms.select(col("_id").as("_b"),
+        col("_nsq").as("_nb")))(normBytes), Seq("_b"))
       .withColumn("score", round(col("dot").cast("double") /
         (sqrt(col("_na").cast("double")) * sqrt(col("_nb").cast("double"))), 6))
       .filter(col("score") >= lit(tNum.toDouble / tDen.toDouble))

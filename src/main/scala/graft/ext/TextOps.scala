@@ -852,24 +852,21 @@ object TextOps {
     var rank = 0
     var r = 0
     var dry = false
-    // DRIVER-LOCAL tier (r18; the connectedComponents discipline): the
-    // merge rounds run over the WORD-FREQUENCY relation — vocabulary-
-    // sized by construction, and invariant under clone replication —
-    // while each distributed round costs an explode+groupBy+collect
-    // job plus a checkpoint of the replaced vocabulary. Under a
-    // measured row budget the whole round loop runs on the driver over
-    // the collected (symbols, freq) list with the IDENTICAL selection
-    // and application semantics: same pair counting (every adjacent
-    // occurrence weighted by word freq), same (freq desc, pair asc)
-    // order under UTF-8 BINARY comparison (Spark/DuckDB string order —
-    // Java's UTF-16 compareTo would diverge on supplementary chars),
-    // same window-independence rule, same padded two-pass replace.
-    // TextOpsSpec/R18KernelsSpec pin driver == distributed; corpora
-    // whose vocabulary outgrows the budget take the distributed rounds.
-    val localCap = spark.conf.getOption("spark.graft.bpe.localVocabCap")
-      .map(_.toLong).getOrElse(1000000L)
-    val nWords = words.count()
-    if (nWords <= localCap) {
+    // DRIVER-LOCAL tier: the merge rounds run over the WORD-FREQUENCY
+    // relation — vocabulary-sized by construction, and invariant under
+    // clone replication — while each distributed round costs an
+    // explode+groupBy+collect job plus a checkpoint of the replaced
+    // vocabulary. Within the tier budget the whole round loop runs on
+    // the driver over the collected (symbols, freq) list with the
+    // IDENTICAL selection and application semantics: same pair counting
+    // (every adjacent occurrence weighted by word freq), same (freq
+    // desc, pair asc) order under UTF-8 BINARY comparison (Spark/DuckDB
+    // string order — Java's UTF-16 compareTo would diverge on
+    // supplementary chars), same window-independence rule, same padded
+    // two-pass replace. TextOpsSpec/R18KernelsSpec pin driver ==
+    // distributed.
+    val wordBytes = graft.engine.Tiers.measure(words).bytes
+    if (graft.engine.Tiers.fitsLocal(spark)(wordBytes)) {
       val utf8 = java.nio.charset.StandardCharsets.UTF_8
       implicit val byteOrder: Ordering[String] = (a: String, b: String) =>
         java.util.Arrays.compareUnsigned(a.getBytes(utf8), b.getBytes(utf8))

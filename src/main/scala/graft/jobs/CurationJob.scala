@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.engine.Engine
+import graft.engine.{Engine, Tiers}
 import graft.ext.{DedupOps, TextOps}
 import graft.sinks.Sinks
 import graft.sources.Sources
@@ -55,15 +55,6 @@ object CurationJob {
     lmModel: Option[TextOps.LmModel] = None,
     maxMeanNll: Double = Double.PositiveInfinity,
     testFrac: Double = 0.05, validFrac: Double = 0.05,
-    /** Byte budget for broadcasting the near-dup population id list
-      * (checkpoint-backed, so the planner has no stats and must be
-      * hinted). Sized against what a BroadcastHashJoin relation
-      * actually costs per row — ~16 B for a long key plus hash-table
-      * overhead — NOT a row count: 5M rows looked small as a count but
-      * ran to hundreds of driver/executor MB. 64 MB ≈ 4M ids keeps the
-      * relation comfortably under typical executor broadcast head-room;
-      * bigger distinct mass falls back to the shuffle join. */
-    broadcastIdBudgetBytes: Long = 64L << 20,
     /** Where the five TEXT-ONLY gate flags evaluate: "row" = fused
       * into the single wide scan (best for dup-light corpora — one
       * corpus pass, zero exchanges); "rep" = once per DISTINCT text
@@ -226,12 +217,12 @@ object CurationJob {
         // fingerprint join (null-text rows have a null fingerprint and
         // must not drop out of the disposition).
         val repIds = rowGrain.groupBy(col("_fp")).agg(min(id).as("_rid"))
-        val nDistinct = repIds.count()
-        def hint(d: DataFrame, bytesPerRow: Long): DataFrame =
-          if (nDistinct * bytesPerRow <= cfg.broadcastIdBudgetBytes)
-            broadcast(d) else d
+        val nDistinct = Tiers.measure(repIds.select(col("_rid"))).rows
+        // both hinted relations hold one row per rep
+        def hint(d: DataFrame): DataFrame =
+          Tiers.broadcastIfFits(d)(BigInt(nDistinct) * Tiers.rowBytes(d.schema))
         val repRows = df.select(id, col(cfg.textCol))
-          .join(hint(repIds.select(col("_rid").as(cfg.idCol)), 16L),
+          .join(hint(repIds.select(col("_rid").as(cfg.idCol))),
             Seq(cfg.idCol), "left_semi")
         val repFlags = repRows
           .withColumn("_th", call_function("graft_hash_tokens",
@@ -240,7 +231,7 @@ object CurationJob {
             .as("_fpr") +:
             textFlagCols(cfg).map { case (n, c) => c.as(n) }: _*)
         Engine.materialize(rowGrain
-          .join(hint(repFlags, 48L), col("_fp") <=> col("_fpr"))
+          .join(hint(repFlags), col("_fp") <=> col("_fpr"))
           .select(id +: col("_fp") +: flagCols.map(col): _*))
       }
     // ---- dedup stages on the surviving population ----------------
@@ -265,20 +256,14 @@ object CurationJob {
         cases ::= (col("_ekid").isNull, "exact_dup")
       }
       if (cfg.nearDupThreshold > 0.0) {
-        // The id list is checkpoint-backed (LogicalRDD), so the
-        // planner sees no size stats and would sort-merge this semi
-        // join — shuffling the full corpus TEXT to meet a list that
-        // is usually broadcast-sized (one id per distinct surviving
-        // text on a dup-heavy corpus). One cheap count on the
-        // materialized list picks the hint against a BYTE budget
-        // (cfg.broadcastIdBudgetBytes at ~16 B/id: key + hash-relation
-        // overhead — a raw row-count threshold let 5M-row ≈ 100s-of-MB
-        // relations through); genuinely huge distinct mass falls back
-        // to the shuffle join, where moving the population's text once
-        // is the honest cost of shingling it.
-        val popIdsHinted =
-          if (popIds.count() * 16L <= cfg.broadcastIdBudgetBytes)
-            broadcast(popIds) else popIds
+        // The id list is checkpoint-backed, so the planner sees no
+        // size stats and would sort-merge this semi join — shuffling
+        // the corpus TEXT to meet a list that is usually
+        // broadcast-sized (one id per distinct surviving text). Over
+        // the tier budget the shuffle join stays: moving the
+        // population's text once is the honest cost of shingling it.
+        val popBytes = Tiers.measure(popIds).bytes
+        val popIdsHinted = Tiers.broadcastIfFits(popIds)(popBytes)
         val pop = df.select(id, col(cfg.textCol))
           .join(popIdsHinted, Seq(cfg.idCol), "left_semi")
         // Materialized like the exact keep list: the full LSH band-join

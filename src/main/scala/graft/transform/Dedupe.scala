@@ -2,6 +2,7 @@ package graft.transform
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.engine.Tiers
 import graft.functions.Functions
 
 /** J1 + exact dedup (SURVEY §2.4, §2.10).
@@ -14,30 +15,21 @@ import graft.functions.Functions
   */
 object Dedupe {
 
-  /** Ceiling for forcing the existing-ids side into a broadcast: the
-    * sheet contract tops out at 100k rows, far under this, but the
-    * function is the GENERIC J1 operator — an unconditional broadcast of
-    * an arbitrarily large existing side would OOM the driver. */
-  private val BroadcastCeilingBytes = BigInt(64L << 20)
-
   /** J1 — dedupe-before-append. Ids are stringified and compared after
     * TRIM-only normalization (the reference does `str(x).strip()`, no
     * lowercasing — `sheets_core.py:176`), and empty ids never match.
     *
-    * The broadcast hint is size-gated on the optimizer's estimate: hinted
-    * only when the existing side is plausibly small (the sheet case —
-    * avoids shuffling the incoming data); above the ceiling the hint is
-    * dropped and the planner/AQE picks the join strategy from real sizes.
+    * The broadcast hint is size-gated on the optimizer's estimate: the
+    * sheet contract tops out at 100k rows, but an unconditional broadcast
+    * of an arbitrarily large existing side would OOM the driver; over the
+    * tier budget the planner/AQE picks the join strategy from real sizes.
     */
   def dedupeAppend(newDf: DataFrame, existing: DataFrame,
                    idCol: String): DataFrame = {
     val existingIds = existing
       .select(trim(col(idCol).cast("string")).as("_id"))
       .filter(col("_id") =!= "" && col("_id").isNotNull).distinct()
-    val sizeEst = existingIds.queryExecution.optimizedPlan.stats.sizeInBytes
-    val dim =
-      if (sizeEst <= BroadcastCeilingBytes) broadcast(existingIds)
-      else existingIds
+    val dim = Tiers.broadcastIfFits(existingIds)(Tiers.planned(existingIds))
     newDf
       .withColumn("_id", trim(col(idCol).cast("string")))
       .join(dim, Seq("_id"), "left_anti")

@@ -3,7 +3,7 @@ package graft.transform
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import scala.util.control.NonFatal
+import graft.engine.Tiers
 import graft.functions.Functions
 
 /** Schema/value sanitizers (SURVEY §2.7 W3-W6).
@@ -90,28 +90,18 @@ object Sanitize {
       ps: Seq[Double]): DataFrame = {
     require(ps.nonEmpty && ps.forall(p => p >= 0.0 && p <= 1.0),
       s"bad percentiles $ps")
-    // SIZE-GATED plan tier (the GrainProbe discipline, r17 verdict ask
-    // #6): the two paths below are value-identical (this module's
-    // original contract — the distributed interpolation replays
-    // Percentile.getPercentile's exact IEEE branches), so the gate only
-    // picks a plan shape. Small inputs take Spark's exact `percentile`:
-    // ONE aggregate pass, no join, no window — the per-buffer
-    // value→count map and its single-task merge are the RIGHT shape
-    // when the domain is small (the distributed form costs ~4 extra
-    // stages and a second evaluation of the grouped relation, which is
-    // what regressed t_mad_outliers at sf0.1 in r17). Large inputs take
-    // the distributed two-level rank: on a continuous column the boxed
-    // map grows with the distinct count and its merge funnels through
-    // one reducer (~30 s/60M rows at sf10). The threshold is a conf
-    // (bytes of the PLAN-side size estimate — no extra job) with a
-    // local default; production tunes it to executor memory.
-    val smallBytes = BigInt(df.sparkSession.conf
-      .get("spark.graft.percentile.smallBytes", (64L << 20).toString)
-      .toLong)
-    val smallInput =
-      try df.queryExecution.optimizedPlan.stats.sizeInBytes <= smallBytes
-      catch { case NonFatal(_) => false }
-    if (smallInput) {
+    // SIZE-GATED plan tier: the two paths below are value-identical
+    // (the distributed interpolation replays Percentile.getPercentile's
+    // exact IEEE branches), so the gate only picks a plan shape. Small
+    // inputs take Spark's exact `percentile` — ONE aggregate pass; its
+    // per-buffer value→count map and single-task merge are the right
+    // shape for a small domain, where the distributed form costs ~4
+    // extra stages. Large inputs take the distributed two-level rank:
+    // on a continuous column the boxed map grows with the distinct
+    // count and its merge funnels through one reducer (~30 s/60M rows
+    // at sf10). The gate prices the value column's plan estimate (no
+    // job) as objects on one JVM.
+    if (Tiers.fitsLocal(df.sparkSession)(Tiers.planned(df.select(value)))) {
       val arr = df.agg(
         percentile(value.cast("double"),
           array(ps.map(lit): _*)).as("_ps"))

@@ -331,7 +331,7 @@ class DedupOpsSpec extends SparkSpec {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_ckpt_cc").toString
     spark.conf.set("spark.graft.checkpointDir", dir)
-    spark.conf.set("spark.graft.cc.localEdgeCap", "0") // iterative tier
+    spark.conf.set("spark.graft.tierBudgetBytes", "0") // iterative tier
     try {
       // A 12-node chain: hook rounds plus compression jumps run several
       // materializes — each must delete its predecessor's checkpoint
@@ -348,7 +348,7 @@ class DedupOpsSpec extends SparkSpec {
         s"superseded checkpoints left behind: $rddDirs")
     } finally {
       spark.conf.unset("spark.graft.checkpointDir")
-      spark.conf.unset("spark.graft.cc.localEdgeCap")
+      spark.conf.unset("spark.graft.tierBudgetBytes")
     }
   }
 
@@ -365,7 +365,7 @@ class DedupOpsSpec extends SparkSpec {
     // pin the ITERATIVE tier: this test probes round mechanics, which
     // the r18 driver-local union-find tier (result-identical, pinned
     // in R18KernelsSpec) would bypass
-    spark.conf.set("spark.graft.cc.localEdgeCap", "0")
+    spark.conf.set("spark.graft.tierBudgetBytes", "0")
     val got = DedupOps.connectedComponents(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.size == 200)
@@ -374,7 +374,7 @@ class DedupOpsSpec extends SparkSpec {
       s"expected 2 rounds, took ${DedupOps.lastCcRounds.get()}")
     assert(DedupOps.lastCcJumps.get() <= 12, // ⌈log₂ 199⌉ + confirms
       s"too many compression jumps: ${DedupOps.lastCcJumps.get()}")
-    spark.conf.unset("spark.graft.cc.localEdgeCap")
+    spark.conf.unset("spark.graft.tierBudgetBytes")
   }
 
   test("connectedComponents at adversarial diameter: ids against the grain") {
@@ -390,7 +390,7 @@ class DedupOpsSpec extends SparkSpec {
       Integer.reverse(i) >>> 24).map(_.toLong)
     val pairs = ids.sliding(2).map(p => (p(0), p(1))).toSeq
       .toDF("id_a", "id_b")
-    spark.conf.set("spark.graft.cc.localEdgeCap", "0")
+    spark.conf.set("spark.graft.tierBudgetBytes", "0")
     val got = DedupOps.connectedComponents(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.size == 256)
@@ -398,7 +398,7 @@ class DedupOpsSpec extends SparkSpec {
     assert(DedupOps.lastCcRounds.get() <= 10,
       s"guard at risk: ${DedupOps.lastCcRounds.get()} rounds " +
         s"(${DedupOps.lastCcJumps.get()} jumps)")
-    spark.conf.unset("spark.graft.cc.localEdgeCap")
+    spark.conf.unset("spark.graft.tierBudgetBytes")
   }
 
   test("connectedComponents fails loudly past maxIter instead of returning a partial merge") {
@@ -409,12 +409,12 @@ class DedupOpsSpec extends SparkSpec {
     // (possibly complete but UNVERIFIED) labeling.
     val pairs = (0 until 40).map(i => (i.toLong, i.toLong + 1))
       .toDF("id_a", "id_b")
-    spark.conf.set("spark.graft.cc.localEdgeCap", "0")
+    spark.conf.set("spark.graft.tierBudgetBytes", "0")
     val e = intercept[IllegalStateException] {
       DedupOps.connectedComponents(pairs, maxIter = 1)
     }
     assert(e.getMessage.contains("did not converge"))
-    spark.conf.unset("spark.graft.cc.localEdgeCap")
+    spark.conf.unset("spark.graft.tierBudgetBytes")
   }
 
   test("connectedComponents on an empty edge list returns an empty frame") {

@@ -1,6 +1,10 @@
 package graft
 
+import org.apache.spark.graft.JobBudget
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.engine.Tiers
 
 /** r18 optimization-round kernels, pinned bit-identical to the
   * compositional forms they replaced (the NativeExprsSpec discipline):
@@ -8,9 +12,8 @@ import org.apache.spark.sql.functions._
   *  - `graft_h60` vs the interpreted conv(substring(md5)) chain
   *  - `graft_bloom_positions` / `graft_bloom_pos` vs the per-salt chain
   *  - `graft_merge_dot` vs the exploded (pair, term) join + sum
-  *  - the size-gated exactPercentiles: small (one-aggregate
-  *    `percentile`) and large (distributed dbits-binned two-level
-  *    rank) paths agree on every edge
+  *  - every op gated by [[graft.engine.Tiers]]: its small side
+  *    (broadcast or driver-local) and its distributed side agree
   */
 class R18KernelsSpec extends SparkSpec {
 
@@ -117,62 +120,148 @@ class R18KernelsSpec extends SparkSpec {
       "update must drop the memo too")
   }
 
-  test("connectedComponents: driver union-find tier == iterative " +
-    "closure on adversarial layouts (bit-reversed path, stars, self " +
-    "loops, isolated pairs)") {
-    import spark.implicits._
-    // bit-reversed long path (the DedupOpsSpec adversarial case) plus
-    // a star, a self loop, and disjoint pairs
-    val n = 64
-    val path = (0 until n - 1).map { i =>
-      def rev(x: Int) = Integer.reverse(x) >>> (32 - 6)
-      (rev(i).toLong + 100, rev(i + 1).toLong + 100)
+  test("SessionCaches.memo keeps no fill that an invalidation of its " +
+    "dir overlapped") {
+    val cache = graft.engine.SessionCaches.register(
+      new java.util.concurrent.ConcurrentHashMap[
+        (org.apache.spark.sql.SparkSession, String), Long]())
+    val dir = "/tables/memo_race"
+    // the fill read the old files; the DML lands before it publishes
+    val v = graft.engine.SessionCaches.memo(cache, (spark, dir)) {
+      graft.engine.SessionCaches.invalidate(spark, s"$dir/documents.parquet")
+      7L
     }
-    val star = (1 to 5).map(i => (1000L, 1000L + i))
-    val extra = Seq((5000L, 5000L), (7000L, 7001L), (7002L, 7003L))
-    val pairs = (path ++ star ++ extra).toDF("id_a", "id_b")
-    def run(cap: Long) = {
-      spark.conf.set("spark.graft.cc.localEdgeCap", cap.toString)
-      try ext.DedupOps.connectedComponents(pairs)
-        .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1)))
-        .toSeq
-      finally spark.conf.unset("spark.graft.cc.localEdgeCap")
-    }
-    val local = run(1000000L)
-    val iterative = run(0L)
-    assert(local == iterative)
-    assert(local.nonEmpty)
+    assert(v == 7L, "the racing fill still answers its own caller")
+    assert(!cache.containsKey((spark, dir)),
+      "a fill overlapped by an invalidation must not be kept")
+    assert(graft.engine.SessionCaches.memo(cache, (spark, dir))(8L) == 8L)
+    assert(cache.get((spark, dir)) == 8L, "the next fill is kept")
   }
 
-  test("bpeMergesBatched: driver-local vocabulary tier == distributed " +
-    "rounds (same merges, ranks, freqs) on the fixture corpus") {
-    def run(cap: Long) = {
-      spark.conf.set("spark.graft.bpe.localVocabCap", cap.toString)
-      try ext.TextOps.bpeMergesBatched(docs, "text",
-          rounds = 3, window = 8)
-        .orderBy("merge_rank").collect()
-        .map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSeq
-      finally spark.conf.unset("spark.graft.bpe.localVocabCap")
-    }
-    val local = run(1000000L)
-    val dist = run(0L)
-    assert(local == dist)
-    assert(local.nonEmpty)
+  test("the only spark.graft.* confs in src/main are checkpointDir and " +
+    "tierBudgetBytes") {
+    import scala.jdk.CollectionConverters._
+    val key = """(?<![\w.])spark\.graft\.([A-Za-z][\w.]*\w)""".r
+    val keys = java.nio.file.Files.walk(java.nio.file.Paths.get(
+        "src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap(p => key.findAllMatchIn(
+        new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+        .map(_.group(1)))
+      .toSet
+    assert(keys == Set("checkpointDir", "tierBudgetBytes"), keys)
   }
 
-  test("exactPercentiles: small one-aggregate path == distributed " +
-    "dbits-binned path on a continuous column (every edge)") {
-    val events = spark.read.parquet(s"$fixtureDir/events.parquet")
-      .select(col("value"))
-    val ps = Seq(0.05, 0.5, 0.95)
-    def run(forceLarge: Boolean) = {
-      spark.conf.set("spark.graft.percentile.smallBytes",
-        if (forceLarge) "0" else (64L << 20).toString)
-      try graft.transform.Sanitize
-        .exactPercentiles(events, col("value"), ps)
-        .collect()(0).toSeq
-      finally spark.conf.unset("spark.graft.percentile.smallBytes")
+  // ---- tier equality: every op gated by graft.engine.Tiers, run at
+  // budget Long.MaxValue (every small side) and at budget 0 (every
+  // distributed side). Outputs must be identical, and `small` — tier
+  // evidence read off the run — must be larger on the small side, so a
+  // gate that ignores the budget fails here. Planner auto-broadcast is
+  // off during the runs: only the gates' hints plan a broadcast join.
+
+  private case class Gated(name: String, run: () => DataFrame,
+                           small: (DataFrame, JobBudget.Counts) => Int)
+
+  private def byBroadcasts(df: DataFrame, c: JobBudget.Counts): Int =
+    c.broadcastJoins
+
+  /** Sorted output rows and tier evidence of `g` at `budget`. */
+  private def atBudget(g: Gated, budget: Long): (Seq[String], Int) = {
+    spark.conf.set(Tiers.BudgetConf, budget.toString)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val ((df, rows), c) = JobBudget.measure(spark) {
+        val df = g.run()
+        (df, df.collect().map(_.toString).sorted.toSeq)
+      }
+      (rows, g.small(df, c))
+    } finally {
+      spark.conf.unset(Tiers.BudgetConf)
+      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
-    assert(run(forceLarge = false) == run(forceLarge = true))
+  }
+
+  /** A materialized near-dup index (no planner stats, like production's)
+    * of the fixture documents whose id has `parity`. */
+  private def index(parity: Int) = graft.engine.Engine.materialize(
+    ext.DedupOps.buildNearDupIndex(docs.filter(col("doc_id") % 2 === parity),
+      "doc_id", "text", 2, 64))
+
+  private def curation(grain: String, nearDup: Double) =
+    jobs.CurationJob.disposition(
+      docs.select(col("doc_id"), col("text")),
+      jobs.CurationJob.Config(idCol = "doc_id", textCol = "text",
+        allowedLangs = Seq("en"), nearDupThreshold = nearDup,
+        gateGrain = grain))
+
+  private val gated: Seq[Gated] = Seq(
+    Gated("connectedComponents: driver union-find tier == iterative " +
+      "closure on adversarial layouts (bit-reversed path, stars, self " +
+      "loops, isolated pairs)", () => {
+      import spark.implicits._
+      // bit-reversed long path (the DedupOpsSpec adversarial case) plus
+      // a star, a self loop, and disjoint pairs
+      val n = 64
+      val path = (0 until n - 1).map { i =>
+        def rev(x: Int) = Integer.reverse(x) >>> (32 - 6)
+        (rev(i).toLong + 100, rev(i + 1).toLong + 100)
+      }
+      val star = (1 to 5).map(i => (1000L, 1000L + i))
+      val extra = Seq((5000L, 5000L), (7000L, 7001L), (7002L, 7003L))
+      ext.DedupOps.connectedComponents(
+        (path ++ star ++ extra).toDF("id_a", "id_b"))
+    }, (df, _) => if (df.queryExecution.analyzed.collectLeaves().forall(
+        _.isInstanceOf[
+          org.apache.spark.sql.catalyst.plans.logical.LocalRelation])) 1
+      else 0), // the driver tier returns a LocalRelation
+    Gated("bpeMergesBatched: driver-local vocabulary tier == distributed " +
+      "rounds (same merges, ranks, freqs) on the fixture corpus",
+      () => ext.TextOps.bpeMergesBatched(docs, "text", rounds = 3,
+        window = 8),
+      (_, c) => -c.jobs), // the driver rounds run no job
+    Gated("exactPercentiles: small one-aggregate path == distributed " +
+      "dbits-binned path on a continuous column (every edge)",
+      () => graft.transform.Sanitize.exactPercentiles(
+        spark.read.parquet(s"$fixtureDir/events.parquet"), col("value"),
+        Seq(0.05, 0.5, 0.95)),
+      // only the distributed two-level rank plans a window
+      (df, _) => if (df.queryExecution.analyzed.exists(_.isInstanceOf[
+          org.apache.spark.sql.catalyst.plans.logical.Window])) 0 else 1),
+    Gated("allPairsCosine: broadcast prefix/vector/norm joins == shuffle " +
+      "joins", () => ext.DedupOps.allPairsCosine(docs, "doc_id", "text",
+        tNum = 3, tDen = 5), byBroadcasts),
+    Gated("incrementalNearDupPairsBetweenIndexes: broadcast band probe " +
+      "and shingle slice == shuffle joins",
+      () => ext.DedupOps.incrementalNearDupPairsBetweenIndexes(index(1),
+        index(0)), byBroadcasts),
+    Gated("nearDupMatchedIds: broadcast band probe and history slice == " +
+      "shuffle joins", () => ext.DedupOps.nearDupMatchedIds(
+        docs.filter(col("doc_id") % 2 === 1), index(0), "doc_id", "text"),
+      byBroadcasts),
+    Gated("CurationJob rep-grain gate: broadcast rep-id and flag joins == " +
+      "shuffle joins", () => curation("rep", 0.0), byBroadcasts),
+    Gated("CurationJob near-dup population: broadcast id semi-join == " +
+      "shuffle join", () => curation("row", 0.8), byBroadcasts),
+    Gated("dedupeAppend: broadcast existing-id anti-join == shuffle join",
+      () => graft.transform.Dedupe.dedupeAppend(docs,
+        docs.filter(col("doc_id") % 3 === 0), "doc_id"), byBroadcasts))
+
+  gated.foreach { g =>
+    test(g.name) {
+      val (small, smallTier) = atBudget(g, Long.MaxValue)
+      val (dist, distTier) = atBudget(g, 0L)
+      assert(small == dist)
+      assert(small.nonEmpty)
+      info(s"tier evidence: small side $smallTier, distributed $distTier")
+      assert(smallTier > distTier,
+        s"budgets chose the same tier ($smallTier vs $distTier)")
+    }
+  }
+
+  test("incrementalNearDupPairsBetweenIndexes at budget 0 plans no " +
+    "BroadcastHashJoin (band probe included)") {
+    val (_, tier) = atBudget(gated.find(_.name.startsWith(
+      "incrementalNearDupPairsBetweenIndexes")).get, 0L)
+    assert(tier == 0)
   }
 }
