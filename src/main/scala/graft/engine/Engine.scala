@@ -1,5 +1,9 @@
 package graft.engine
 
+import scala.util.control.NonFatal
+
+import org.apache.spark.SparkEnv
+import org.apache.spark.serializer.Serializer
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 /** Session bootstrap + table registry + SQL facade.
@@ -17,6 +21,8 @@ object Engine {
   /** Build a session configured for this engine. In local mode `cores`
     * controls both parallelism and shuffle partitions; on a real cluster
     * leave master/shuffle-partitions to spark-submit + AQE.
+    * In local mode every call, also one that returns the existing
+    * session, pins the calling thread ([[pinCodegenLoader]]).
     */
   def session(appName: String = "graft", master: Option[String] = None,
               shufflePartitions: Int = 32): SparkSession = {
@@ -52,6 +58,10 @@ object Engine {
       // a checkpoint once nothing can reference its RDD.
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .config("spark.ui.enabled", "false")
+      // Isolation gives SQL tasks a class loader of their own, and codegen
+      // compiles each source once per loader (see pinCodegenLoader).
+      // Nothing here adds session artifacts, which is all it protects.
+      .config("spark.sql.artifact.isolation.enabled", "false")
     // Shuffle-partition count is set ONLY when this code also picks the
     // master (the local harness): a spark-submit deployment must keep its
     // own --conf spark.sql.shuffle.partitions (sized for the cluster),
@@ -71,8 +81,27 @@ object Engine {
     }
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    if (spark.sparkContext.isLocal) pinCodegenLoader()
     spark
   }
+
+  /** Spark's generated-class cache keys each source by the calling
+    * thread's context class loader as well as the source text. In local
+    * mode driver threads run under the application loader and tasks
+    * under the executor's, so every whole-stage class the driver
+    * compiled was compiled again by its first task. Pin the calling
+    * thread to the executor's default loader; threads it starts later
+    * (AQE stage pools, the stream execution thread) inherit it, and a
+    * thread created earlier keeps compiling on its own (slower, never
+    * wrong). The local executor registered its loader with the
+    * serializer at start, so no job runs here. Spark exposes that
+    * accessor only as a protected member, hence the reflection; if an
+    * upgrade removes it, the session starts unpinned. */
+  private def pinCodegenLoader(): Unit =
+    try classOf[Serializer].getMethod("defaultClassLoader")
+      .invoke(SparkEnv.get.serializer).asInstanceOf[Option[ClassLoader]]
+      .foreach(Thread.currentThread.setContextClassLoader)
+    catch { case NonFatal(_) => () }
 
   /** Lineage cut for iterative/materialize-and-freeze ops (connected
     * components, contiguous ids): reliable `checkpoint` when the session
