@@ -3,6 +3,10 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import scala.util.control.NonFatal
+
+import SparkEntry.{attempt, jsonString}
+
 /** Benchmark main — runs every declared query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line (driver contract → BENCH_r{N}.json).
   *
@@ -35,10 +39,6 @@ object Bench {
     if (r.isNullAt(0)) 0L else r.getLong(0)
   }
 
-  private def jstr(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
-      .replaceAll("\\p{Cntrl}", " ") + "\""
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
@@ -49,15 +49,14 @@ object Bench {
     // reads). The k-means pre-load is gone with x_sim_ivf's move to the
     // sampled quantizer — no registered query touches spark.ml now.
     try force(Queries.q1PricingSummary(spark, sfDir))
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     var errors = Map.empty[String, String]
     var codegenFails = Map.empty[String, Int]
-    // Dev-loop subset filter (comma-separated names) — the driver never
-    // sets it; used for targeted retimes (sf1/sf10 probes).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = SparkEntry.queries
-      .filter(kv => only.forall(_.contains(kv._1)))
+    // Dev-loop subset (SPARK_GRAFT_ONLY): targeted single-query
+    // timings and sf1/sf10 retimes.
+    val only = SparkEntry.only
+    val selected =
+      SparkEntry.queries.filter(kv => only.forall(_.contains(kv._1)))
     // Session-cache accounting (r17 verdict ask #10): the first
     // consumer of a shared subtree (lm chain, fuzzy/bpe/cc stages…)
     // pays its materialization inside its timed region; later
@@ -72,11 +71,7 @@ object Bench {
       val h0 = graft.engine.SessionCaches.hits
       val f0 = graft.engine.SessionCaches.fills
       val t0 = System.nanoTime()
-      try { force(fn(spark, sfDir)) } catch {
-        case e: Throwable =>
-          errors += name -> (e.getClass.getSimpleName + ": " +
-            String.valueOf(e.getMessage).take(200))
-      }
+      attempt(force(fn(spark, sfDir))).foreach(e => errors += name -> e)
       val sec = (System.nanoTime() - t0) / 1e9
       if (graft.engine.SessionCaches.fills > f0) cacheFill += name
       if (graft.engine.SessionCaches.hits > h0) cacheWarm += name
@@ -142,14 +137,9 @@ object Bench {
           // A transient rerun failure must NOT publish its (short)
           // failure duration as the query's time — keep the prior
           // measurements and surface the error.
-          val ok =
-            try { force(SparkEntry.queries(name)(spark, sfDir)); true }
-            catch {
-              case e: Throwable =>
-                errors += s"$name#retime" -> (e.getClass.getSimpleName +
-                  ": " + String.valueOf(e.getMessage).take(200))
-                false
-            }
+          val failed = attempt(force(SparkEntry.queries(name)(spark, sfDir)))
+          failed.foreach(e => errors += s"$name#retime" -> e)
+          val ok = failed.isEmpty
           val t = (System.nanoTime() - t0) / 1e9
           val cg = CodegenErrorCounter.count.get() - cg0
           if (cg > 0)
@@ -204,33 +194,35 @@ object Bench {
     // comma decimals (65,0688) under e.g. de_DE — invalid JSON.
     def f4(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
-    val qs = results.map { case (k, v) => jstr(k) + ":" + f4(v) }
+    val qs = results.map { case (k, v) => jsonString(k) + ":" + f4(v) }
       .mkString("{", ",", "}")
     val rtJson = retimed.toSeq.sortBy(_._1)
       .map { case (k, ts) =>
-        jstr(k) + ":[" + ts.map(f4).mkString(",") + "]" }
+        jsonString(k) + ":[" + ts.map(f4).mkString(",") + "]" }
       .mkString("{", ",", "}")
     val errJson = errors.toSeq.sortBy(_._1)
-      .map { case (k, v) => jstr(k) + ":" + jstr(v) }.mkString("{", ",", "}")
+      .map { case (k, v) => jsonString(k) + ":" + jsonString(v) }
+      .mkString("{", ",", "}")
     val cgJson = codegenFails.toSeq.sortBy(_._1)
-      .map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
+      .map { case (k, v) => jsonString(k) + ":" + v }.mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     System.err.println(s"[bench] retimed=$rtJson")
     System.err.println(s"[bench] errors=$errJson codegen_failures=$cgJson")
     // stop() failures (shutdown-hook/teardown) must not eat the artifact.
-    try spark.stop() catch { case _: Throwable => () }
+    try spark.stop() catch { case NonFatal(_) => () }
     val vfJson = vsFrozen.sortBy(_._1)
-      .map { case (k, v) => jstr(k) + ":" + f4(v) }.mkString("{", ",", "}")
+      .map { case (k, v) => jsonString(k) + ":" + f4(v) }
+      .mkString("{", ",", "}")
     val fullLine =
       s"""{"metric":"total","value":${f4(total)},"unit":"sec",""" +
         s""""queries":$qs,"errors":$errJson,"codegen_failures":$cgJson,""" +
         s""""n_errors":${errors.size},"oneshot":$oneshot,""" +
         s""""frozen_epoch":${BenchBaselineFrozen.epoch},""" +
         s""""vs_frozen_total":${f4(frozenTotal)},"vs_frozen":$vfJson,""" +
-        s""""flagged":${flagged.map(jstr).mkString("[", ",", "]")},""" +
-        s""""cache_fill":${cacheFill.toSeq.sorted.map(jstr)
+        s""""flagged":${flagged.map(jsonString).mkString("[", ",", "]")},""" +
+        s""""cache_fill":${cacheFill.toSeq.sorted.map(jsonString)
           .mkString("[", ",", "]")},""" +
-        s""""cache_warm":${cacheWarm.toSeq.sorted.map(jstr)
+        s""""cache_warm":${cacheWarm.toSeq.sorted.map(jsonString)
           .mkString("[", ",", "]")},""" +
         s""""sf":"$sfDir"}"""
     // The driver records only the LAST 2,000 chars of stdout. At 80+
@@ -244,7 +236,7 @@ object Bench {
       "BENCH_FULL.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(fullOut),
       (fullLine + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable =>
+    catch { case NonFatal(e) =>
       System.err.println(s"[bench] full-artifact write failed: $e") }
     System.err.println(s"[bench] full=$fullLine")
     println(fullLine)

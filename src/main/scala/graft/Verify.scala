@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import SparkEntry.{attempt, jsonString}
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -11,32 +13,17 @@ object Verify {
     val spark = graft.engine.Engine.session(
       "graft-verify", Some(s"local[$cpus]"), shufflePartitions = cpus)
     new java.io.File(outDir).mkdirs()
-    // Dev-loop subset filter (comma-separated names); the driver never
-    // sets it, so the contract dump is unchanged outside local use.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
+    val only = SparkEntry.only
     def selected(name: String): Boolean = only.forall(_.contains(name))
-    SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    SparkEntry.queries.filter(kv => selected(kv._1)).foreach {
+      case (name, fn) =>
+        attempt(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name"))
+          .foreach(e => System.err.println(s"[verify] $name failed: $e"))
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql.filter(kv => selected(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
+      .mkString("{", ",", "}")
     // A filtered run must never masquerade as the full contract: a stray
     // SPARK_GRAFT_ONLY in a CI/driver env would otherwise dump a partial
     // oracle_sql.json indistinguishable from the complete one. Write the

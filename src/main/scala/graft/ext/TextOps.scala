@@ -1865,7 +1865,7 @@ object TextOps {
     // consumers (the PMI join AND its total), and AQE exchange reuse
     // does not cross the broadcast-stage boundary the totals ride in —
     // without the cut the corpus explode would run once per consumer
-    // (verified with tools.ExplainFinal). After the cut the corpus is
+    // (verified with tools.Explain). After the cut the corpus is
     // touched exactly twice (unigram pass, bigram pass).
     val uni = graft.engine.Engine.materialize(
       toks.select(col("_m"), explode(col("_toks")).as("_w"))
@@ -1920,7 +1920,7 @@ object TextOps {
     // Materialized: the vocab table feeds both the 1-row totals and the
     // per-token terms; without the cut each consumer would re-run both
     // corpus-sized count passes (AQE reuse stops at the broadcast
-    // stage — same finding as collocationsPmi, tools.ExplainFinal).
+    // stage — same finding as collocationsPmi, tools.Explain).
     val joined = graft.engine.Engine.materialize(
       counts(dfA, "_ca").join(counts(dfB, "_cb"), Seq("_w"), "full_outer")
         .select(col("_w"), coalesce(col("_ca"), lit(0L)).as("_ca"),

@@ -92,7 +92,7 @@ object CurationJob {
     // their own `graft_hash_tokens(tokens(text))` subtree, and with
     // higher-order functions outside whole-stage codegen's
     // subexpression elimination the regex tokenizer ran 6+ times per
-    // row — the dominant cost of the sf10 wide pass (CurProbe: 62 s of
+    // row — the dominant cost of the sf10 wide pass (measured: 62 s of
     // x_curation's 75 s). CollapseProject keeps the layering because
     // the shared columns are multiply-referenced and non-cheap, so the
     // pass stays ONE FileScan + stacked projections, zero exchanges
@@ -168,7 +168,7 @@ object CurationJob {
     // Materialized NARROW — id + text FINGERPRINT + the six flags;
     // never the text: checkpointing the full-width frame serialized
     // every document's text to local disk, and at sf10 that WRITE was
-    // the pipeline's dominant cost (GateProbe: 57 s I/O vs 12 s flag
+    // the pipeline's dominant cost (measured: 57 s I/O vs 12 s flag
     // compute over 6.05M docs). With the fingerprint riding the
     // narrow frame, the exact-dedup stage runs entirely at
     // (id, 16-byte fp) grain — survivor texts never shuffle — and the

@@ -1,7 +1,10 @@
 package graft
 
-/** Driver-contract guards: entry() smoke, and oracleSql ⊆ queries with
-  * consistent naming (a dangling oracle key would silently skip a check). */
+import java.nio.file.{Files, Paths}
+
+/** Driver-contract guards: entry() smoke, oracleSql ⊆ queries with
+  * consistent naming (a dangling oracle key would silently skip a check),
+  * the mains' shared per-query helpers, and the set of mains itself. */
 class SparkEntrySpec extends SparkSpec {
 
   test("entry() returns rows on the sf0.001 fixture (driver smoke contract)") {
@@ -25,5 +28,46 @@ class SparkEntrySpec extends SparkSpec {
     // x_embed_moments, x_sample_pps
     assert(SparkEntry.queries.size == 194)
     assert(SparkEntry.oracleSql.size == 194)
+  }
+
+  test("attempt records a non-fatal failure and lets a fatal one through") {
+    assert(SparkEntry.attempt(()) == None)
+    assert(SparkEntry.attempt(throw new RuntimeException("x")) ==
+      Some("RuntimeException: x"))
+    assert(SparkEntry.attempt(throw new IllegalStateException("y" * 300))
+      == Some("IllegalStateException: " + "y" * 200))
+    intercept[StackOverflowError] {
+      SparkEntry.attempt(throw new StackOverflowError("deep plan"))
+    }
+  }
+
+  test("jsonString escapes quotes, backslashes and every control char") {
+    assert(SparkEntry.jsonString("a\"b\\c\td\ne\rf\u0001g") ==
+      "\"a\\\"b\\\\c\\td\\ne\\rf\\u0001g\"")
+  }
+
+  test("the only mains in src/main are Bench, Verify, tools.Explain and " +
+    "the jobs.*Job objects") {
+    import scala.jdk.CollectionConverters._
+    val pkg = """(?m)^package\s+([\w.]+)""".r
+    val obj = ("""(?m)^\s*(?:(?:private|protected)(?:\[\w+\])?\s+""" +
+      """|case\s+)*object\s+(\w+)""").r
+    val main = """def main\(|extends App\b""".r
+    val mains = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val src = new String(Files.readAllBytes(p), "UTF-8")
+        val prefix = pkg.findFirstMatchIn(src).fold("")(_.group(1) + ".")
+        val objects = obj.findAllMatchIn(src).toSeq
+        main.findAllMatchIn(src).map { m =>
+          prefix + objects.filter(_.start < m.start).lastOption
+            .fold(s"<no object in $p>")(_.group(1))
+        }
+      }.toSet
+    val (jobs, others) =
+      mains.partition(_.matches("""graft\.jobs\.\w+Job"""))
+    assert(jobs.nonEmpty)
+    assert(others == Set("graft.Bench", "graft.Verify", "graft.tools.Explain"),
+      others)
   }
 }

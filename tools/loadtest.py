@@ -1,8 +1,9 @@
 #!/usr/bin/env python3
 """Deliberate co-tenant load for bench-robustness checks (VERDICT r7
-item 1a): spins N busy processes while you run TimeOne/Bench in
-another shell, so "does query X stay within 1.5x its quiet-box
-baseline under 2x background load" is testable on demand.
+item 1a): spins N busy processes while you run graft.Bench (all
+queries, or one via SPARK_GRAFT_ONLY) in another shell, so "does query
+X stay within 1.5x its quiet-box baseline under 2x background load" is
+testable on demand.
 
 Usage: python3 tools/loadtest.py <n_procs> <seconds>
 """
