@@ -27,14 +27,25 @@ object Verify {
     // A filtered run must never masquerade as the full contract: a stray
     // SPARK_GRAFT_ONLY in a CI/driver env would otherwise dump a partial
     // oracle_sql.json indistinguishable from the complete one. Write the
-    // partial dump under a distinct name and warn loudly.
-    if (only.isDefined) {
+    // partial dump under a distinct name, drop any full one, and warn.
+    if (only.isDefined)
       System.err.println(
         s"[verify] WARNING: SPARK_GRAFT_ONLY is set — dumping PARTIAL " +
         s"contract (${SparkEntry.oracleSql.count(kv => selected(kv._1))}/" +
         s"${SparkEntry.oracleSql.size} queries) as oracle_sql.partial.json")
-      Files.writeString(Paths.get(s"$outDir/oracle_sql.partial.json"), json)
-    } else Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeContract(outDir, json, partial = only.isDefined)
     spark.stop()
+  }
+
+  /** Writes the oracle contract and deletes the other kind, so that a
+    * directory never holds a partial dump next to a full one from an
+    * earlier run (selfcheck would check the stale full contract). */
+  private[graft] def writeContract(outDir: String, json: String,
+                                   partial: Boolean): Unit = {
+    val (write, stale) =
+      if (partial) ("oracle_sql.partial.json", "oracle_sql.json")
+      else ("oracle_sql.json", "oracle_sql.partial.json")
+    Files.deleteIfExists(Paths.get(outDir, stale))
+    Files.writeString(Paths.get(outDir, write), json)
   }
 }

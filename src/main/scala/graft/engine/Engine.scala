@@ -26,6 +26,7 @@ object Engine {
     */
   def session(appName: String = "graft", master: Option[String] = None,
               shufflePartitions: Int = 32): SparkSession = {
+    preloaders
     val b = SparkSession.builder()
       .appName(appName)
       .withExtensions(new graft.expressions.GraftExtensions)
@@ -84,6 +85,51 @@ object Engine {
     if (spark.sparkContext.isLocal) pinCodegenLoader()
     spark
   }
+
+  /** Cold start in parallel. A fresh JVM spends most of its first
+    * session loading classes, one at a time, on the thread that builds
+    * it. The first [[session]] call of a JVM starts `min(4, cores - 1)`
+    * daemon threads (none on one core) that walk [[PreloadList]] (class
+    * names in first-load order, written by `tools/preload_classes.py`)
+    * round-robin and load each name, not initialized, through this
+    * object's own class loader: under spark-submit the one that loaded
+    * the application jar, which reaches Spark's jars too. Thread 0 then
+    * initializes [[IcuTable]], whose static initializer asks ICU for the
+    * title case of every code point (~1.3 s of CPU) that the first
+    * `lower`/`upper` task would otherwise wait for; done first, it left
+    * thread 0's share of the list to the session thread. A stale name is
+    * skipped; a class loaded early is the same class loaded later. */
+  private[graft] lazy val preloaders: Seq[Thread] = {
+    val loader = getClass.getClassLoader
+    val n = math.min(4, Runtime.getRuntime.availableProcessors - 1)
+    def load(name: String, init: Boolean): Unit =
+      try Class.forName(name, init, loader)
+      catch { case _: ClassNotFoundException | _: LinkageError => () }
+    (0 until n).map { i =>
+      val t = new Thread(() => {
+        val names = preloadNames
+        (i until names.size by n).foreach(j => load(names(j), init = false))
+        if (i == 0) load(IcuTable, init = true)
+      }, s"graft-preload-$i")
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+  }
+
+  private[graft] val PreloadList = "graft/preload-classes.txt.gz"
+
+  /** The names in [[PreloadList]]; none when it is not on the class path. */
+  private[graft] def preloadNames: IndexedSeq[String] =
+    Option(getClass.getClassLoader.getResourceAsStream(PreloadList))
+      .fold(IndexedSeq.empty[String]) { in =>
+        val src = scala.io.Source.fromInputStream(
+          new java.util.zip.GZIPInputStream(in), "UTF-8")
+        try src.getLines().toIndexedSeq
+        finally src.close()
+      }
+  private[graft] val IcuTable =
+    "org.apache.spark.sql.catalyst.util.CollationAwareUTF8String"
 
   /** Spark's generated-class cache keys each source by the calling
     * thread's context class loader as well as the source text. In local
@@ -225,7 +271,7 @@ object Engine {
     * bytesPerCore))` bins); `None` = can't tell (caller must not assume
     * small). Estimation only — fine for a fire/no-fire threshold, not
     * an exact split count. */
-  private def planWidth(
+  private[graft] def planWidth(
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
       spark: SparkSession): Option[Long] = {
     import org.apache.spark.sql.catalyst.plans.logical._
@@ -269,13 +315,25 @@ object Engine {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Parquet schema per (session, table path). Inferring one runs a
+    * footer-reading Spark job; a DML rewrite of the path drops the entry
+    * through [[SessionCaches.invalidate]]. */
+  private val schemas = SessionCaches.register(
+    new java.util.concurrent.ConcurrentHashMap[
+      (SparkSession, String), org.apache.spark.sql.types.StructType]())
+
   /** Read one fixture table from a scale-factor directory. Nanosecond
     * parquet timestamps (read as long via `nanosAsLong`) are normalized to
     * Spark microsecond timestamps with integer division — no double
     * round-trip, matching DuckDB's `CAST(ts AS TIMESTAMP)` truncation.
+    * The schema is inferred once per session and path, so a repeated
+    * read plans without a job.
     */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val schema = SessionCaches.memo(schemas, (spark, path), counted = false)(
+      spark.read.parquet(path).schema)
+    val df = spark.read.schema(schema).parquet(path)
     if (name == "events" &&
         df.schema("ts").dataType == org.apache.spark.sql.types.LongType)
       df.withColumn("ts",

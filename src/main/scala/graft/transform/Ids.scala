@@ -34,10 +34,13 @@ object Ids {
     * every upstream expression it drags along onto one task (the sf10
     * probe measured exactly that: a 500k-row quality-scoring chain
     * evaluating on 1 of 32 threads for minutes). Ranks are a pure
-    * function of the sort key, so the width never changes results. */
+    * function of the sort key, so the width never changes results.
+    * The input's width is the plan-side estimate: `df.rdd` would run
+    * every upstream shuffle stage now, and the rank pass again. */
   private def rankWidth(df: DataFrame): Int =
-    math.max(df.rdd.getNumPartitions,
-      df.sparkSession.sparkContext.defaultParallelism).max(1)
+    math.max(graft.engine.Engine.planWidth(
+        df.queryExecution.optimizedPlan, df.sparkSession).getOrElse(0L),
+      df.sparkSession.sparkContext.defaultParallelism.toLong).toInt.max(1)
 
   def assignContiguousIds(df: DataFrame, orderCol: Column,
                           idName: String = "new_id",

@@ -135,6 +135,25 @@ class EngineSpec extends SparkSpec {
     assert(out.columns.contains("n_name"))
   }
 
+  test("a repeated table read plans with no job; after a DML rewrite " +
+      "the next read infers the schema again") {
+    Engine.table(spark, fixtureDir, "nation")
+    val (_, again) = org.apache.spark.graft.JobBudget.measure(spark)(
+      Engine.table(spark, fixtureDir, "nation"))
+    assert(again.jobs == 0, again.toString)
+
+    val dir = java.nio.file.Files.createTempDirectory("graft-schema").toString
+    Engine.table(spark, fixtureDir, "nation")
+      .write.parquet(s"$dir/nation.parquet")
+    Engine.table(spark, dir, "nation")
+    graft.sinks.Dml.update(spark, s"$dir/nation.parquet",
+      Map("n_name" -> lit("X")), col("n_nationkey") === 0)
+    val (after, inferred) = org.apache.spark.graft.JobBudget.measure(spark)(
+      Engine.table(spark, dir, "nation"))
+    assert(inferred.jobs == 1, inferred.toString)
+    assert(after.where(col("n_name") === "X").count() == 1)
+  }
+
   test("isEmpty probes one partition of a non-empty frame: one job, " +
       "one task, no shuffle; answers like Dataset.isEmpty") {
     val wide = spark.range(0, 1000, 1, 4).filter(col("id") % 3 === 0)

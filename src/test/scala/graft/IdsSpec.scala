@@ -24,6 +24,18 @@ class IdsSpec extends SparkSpec {
     assert(byId.zip(byId.tail).forall { case (a, b) => a <= b })
   }
 
+  test("assignContiguousIds runs its input's shuffle stage once") {
+    val agg = spark.range(0, 5000, 1, 4)
+      .groupBy((col("id") % 101).as("k")).agg(count(lit(1)).as("n"))
+    val (out, c) = org.apache.spark.graft.JobBudget.measure(spark)(
+      Ids.assignContiguousIds(agg, col("k")))
+    // one shuffle stage for the aggregate, one for the range exchange
+    assert(c.shuffleStages == 2, c.toString)
+    val rows = out.select("k", "new_id").collect()
+    assert(rows.map(_.getLong(1)).sorted.toSeq == (0L until 101L))
+    assert(rows.forall(r => r.getLong(0) == r.getLong(1)))
+  }
+
   test("cached RDDs do not ACCUMULATE across calls (no per-call cache " +
     "pin)") {
     import spark.implicits._

@@ -116,7 +116,8 @@ def main(sf_dir: str, out_dir: str, only=None, skip=None,
         oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     except FileNotFoundError:
         # dev-loop dump under SPARK_GRAFT_ONLY (Verify writes the filtered
-        # contract under a distinct name so it can't impersonate the full one)
+        # contract under a distinct name so it can't impersonate the full
+        # one, and deletes the full one so a stale dump can't shadow it)
         oracle = json.load(open(f"{out_dir}/oracle_sql.partial.json"))
         print(f"NOTE: using PARTIAL contract ({len(oracle)} queries)")
     if only:
