@@ -2,7 +2,8 @@ package graft.engine
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.SparkEnv
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.{SparkConf, SparkEnv}
 import org.apache.spark.serializer.Serializer
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
@@ -80,11 +81,35 @@ object Engine {
       b.config("spark.sql.files.maxPartitionBytes", "4m")
       b.config("spark.sql.files.openCostInBytes", "1m")
     }
+    localFsConfs(master).foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     if (spark.sparkContext.isLocal) pinCodegenLoader()
     spark
   }
+
+  /** [[LocalFs]]'s confs (`file://` without a `chmod` or `readlink`
+    * process per call) when the master is local: `master`, or else the
+    * `spark.master` that spark-submit sets. They are set before
+    * `getOrCreate`, so before the context exists: Hadoop caches one
+    * `file://` instance per JVM and user, whatever the conf of later
+    * lookups. */
+  private[graft] def localFsConfs(master: Option[String],
+                                  defaults: SparkConf = new SparkConf())
+      : Seq[(String, String)] =
+    if (master.orElse(defaults.getOption("spark.master"))
+        .exists(m => m == "local" || m.startsWith("local[")))
+      LocalFs.Confs
+    else Nil
+
+  /** The running session's Hadoop conf, which carries its
+    * `spark.hadoop.*` settings (connector credentials, [[LocalFs]]);
+    * Hadoop's defaults when no session runs. Driver side only: a task
+    * gets the driver's conf from the factory that made its reader or
+    * writer. */
+  def hadoopConf: Configuration =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .fold(new Configuration())(_.sparkContext.hadoopConfiguration)
 
   /** Cold start in parallel. A fresh JVM spends most of its first
     * session loading classes, one at a time, on the thread that builds

@@ -30,9 +30,12 @@ import graft.tools.Log
   *     false — not an exception — on write failure (`storage.py:143-145`
   *     catches and logs).
   *
+  * `hadoopConf` defaults to the running session's, so connector
+  * settings made through `spark.hadoop.*` reach the store.
+  *
   * Signed URLs live in [[Storage]] (pure compute, no filesystem). */
 class ObjectStore(root: String,
-                  hadoopConf: Configuration = new Configuration()) {
+                  hadoopConf: Configuration = graft.engine.Engine.hadoopConf) {
 
   private val rootPath = new Path(root)
   private def fs: FileSystem = rootPath.getFileSystem(hadoopConf)

@@ -20,6 +20,9 @@ import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
+
+import graft.engine.Engine
 
 /** S7 — keyed-document-store source as a real DataSource V2 connector with
   * filter / limit / top-N / column pushdown, replacing the reference's
@@ -68,7 +71,8 @@ object KeyedStore {
   /** Write `df` as a JSON-lines shard directory + schema sidecar. */
   def write(df: DataFrame, path: String): Unit = {
     df.write.mode(SaveMode.Overwrite).json(path)
-    val fs = new Path(path).getFileSystem(new Configuration())
+    val fs = new Path(path)
+      .getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
     val out = fs.create(new Path(path, SchemaFile), true)
     try out.write(df.schema.toDDL.getBytes(StandardCharsets.UTF_8))
     finally out.close()
@@ -76,7 +80,7 @@ object KeyedStore {
 
   def readSchema(path: String): StructType = {
     val p = new Path(path, SchemaFile)
-    val fs = p.getFileSystem(new Configuration())
+    val fs = p.getFileSystem(Engine.hadoopConf)
     val in = new BufferedReader(new InputStreamReader(fs.open(p),
       StandardCharsets.UTF_8))
     try StructType.fromDDL(in.lines().toArray.mkString("\n"))
@@ -85,7 +89,7 @@ object KeyedStore {
 
   private[keyed] def dataFiles(path: String): Seq[String] = {
     val dir = new Path(path)
-    val fs = dir.getFileSystem(new Configuration())
+    val fs = dir.getFileSystem(Engine.hadoopConf)
     fs.listStatus(dir).toSeq
       .filter(s => s.isFile && !s.getPath.getName.startsWith("_")
         && !s.getPath.getName.startsWith("."))
@@ -193,18 +197,20 @@ private[keyed] class KeyedScan(tableSchema: StructType, required: StructType,
     KeyedStore.dataFiles(path).map(KeyedShard(_)).toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new KeyedReaderFactory(tableSchema, required, filters, limit, topN)
+    new KeyedReaderFactory(tableSchema, required, filters, limit, topN,
+      new SerializableConfiguration(Engine.hadoopConf))
 }
 
 private[keyed] class KeyedReaderFactory(tableSchema: StructType,
                                         required: StructType,
                                         filters: Array[Filter],
                                         limit: Option[Int],
-                                        topN: Option[(Seq[(String, Boolean)], Int)])
+                                        topN: Option[(Seq[(String, Boolean)], Int)],
+                                        conf: SerializableConfiguration)
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     new KeyedShardReader(p.asInstanceOf[KeyedShard].file, tableSchema,
-      required, filters, limit, topN)
+      required, filters, limit, topN, conf.value)
 }
 
 /** Reads one JSON-lines shard, evaluating pushed predicates per document
@@ -214,14 +220,15 @@ private[keyed] class KeyedShardReader(file: String, tableSchema: StructType,
                                       required: StructType,
                                       filters: Array[Filter],
                                       limit: Option[Int],
-                                      topN: Option[(Seq[(String, Boolean)], Int)])
+                                      topN: Option[(Seq[(String, Boolean)], Int)],
+                                      conf: Configuration)
     extends PartitionReader[InternalRow] {
 
   private val mapper = new ObjectMapper()
   private val reader: BufferedReader = {
     val p = new Path(file)
     new BufferedReader(new InputStreamReader(
-      p.getFileSystem(new Configuration()).open(p), StandardCharsets.UTF_8))
+      p.getFileSystem(conf).open(p), StandardCharsets.UTF_8))
   }
 
   private def extract(node: JsonNode, field: StructField): Any = {

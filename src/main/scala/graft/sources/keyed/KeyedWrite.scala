@@ -7,6 +7,9 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
+
+import graft.engine.Engine
 
 /** DSv2 write path for the keyed store: each task writes one JSON-lines
   * shard (`shard-<partition>-<task>.json`), the driver commit publishes
@@ -38,12 +41,15 @@ private[keyed] case class KeyedCommitMessage(file: String)
 private[keyed] class KeyedBatchWrite(schema: StructType, path: String,
                                      truncate: Boolean) extends BatchWrite {
 
+  private val conf = Engine.hadoopConf
+
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
-      : DataWriterFactory = new KeyedWriterFactory(schema, path)
+      : DataWriterFactory =
+    new KeyedWriterFactory(schema, path, new SerializableConfiguration(conf))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val dir = new Path(path)
-    val fs = dir.getFileSystem(new Configuration())
+    val fs = dir.getFileSystem(conf)
     if (truncate) {
       // compare by shard NAME (task-unique): listStatus returns
       // fully-qualified URIs while commit messages may carry scheme-less
@@ -65,7 +71,7 @@ private[keyed] class KeyedBatchWrite(schema: StructType, path: String,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(new Configuration())
+    val fs = new Path(path).getFileSystem(conf)
     messages.foreach {
       case KeyedCommitMessage(f) if f != null =>
         fs.delete(new Path(f), false)
@@ -74,22 +80,24 @@ private[keyed] class KeyedBatchWrite(schema: StructType, path: String,
   }
 }
 
-private[keyed] class KeyedWriterFactory(schema: StructType, path: String)
+private[keyed] class KeyedWriterFactory(schema: StructType, path: String,
+                                        conf: SerializableConfiguration)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int,
                             taskId: Long): DataWriter[InternalRow] =
-    new KeyedShardWriter(schema, path, partitionId, taskId)
+    new KeyedShardWriter(schema, path, partitionId, taskId, conf.value)
 }
 
 /** Writes one shard as JSON lines; field values come straight off the
   * InternalRow per the logical schema. */
 private[keyed] class KeyedShardWriter(schema: StructType, path: String,
-                                      partitionId: Int, taskId: Long)
+                                      partitionId: Int, taskId: Long,
+                                      conf: Configuration)
     extends DataWriter[InternalRow] {
 
   private val file = new Path(path,
     f"shard-$partitionId%05d-$taskId.json")
-  private val fs = file.getFileSystem(new Configuration())
+  private val fs = file.getFileSystem(conf)
   private val out = fs.create(file, true)
 
   private def jsonValue(row: InternalRow, i: Int, dt: DataType): String =

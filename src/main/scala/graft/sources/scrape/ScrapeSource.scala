@@ -16,6 +16,9 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
+
+import graft.engine.Engine
 
 /** S9 — scrape-manifest source: the engine-side half of the reference's
   * web-ingest stage. The reference crawls with driver-side Selenium
@@ -78,7 +81,7 @@ object ScrapeManifest {
             manifestPath: String): Unit = {
     val mapper = new ObjectMapper()
     val p = new Path(manifestPath)
-    val out = p.getFileSystem(new Configuration()).create(p, true)
+    val out = p.getFileSystem(Engine.hadoopConf).create(p, true)
     try {
       val w = new java.io.OutputStreamWriter(out, StandardCharsets.UTF_8)
       entries.foreach { case (url, path, at) =>
@@ -100,7 +103,7 @@ object ScrapeManifest {
     val mapper = new ObjectMapper()
     val p = new Path(manifestPath)
     val in = new BufferedReader(new InputStreamReader(
-      p.getFileSystem(new Configuration()).open(p), StandardCharsets.UTF_8))
+      p.getFileSystem(Engine.hadoopConf).open(p), StandardCharsets.UTF_8))
     try {
       Iterator.continually(in.readLine()).takeWhile(_ != null)
         .filter(_.trim.nonEmpty)
@@ -161,19 +164,23 @@ private[scrape] class ScrapeScan(path: String, required: StructType)
       .map(ScrapeChunk(_)).toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new ScrapeReaderFactory(required)
+    new ScrapeReaderFactory(required,
+      new SerializableConfiguration(Engine.hadoopConf))
 }
 
-private[scrape] class ScrapeReaderFactory(required: StructType)
+private[scrape] class ScrapeReaderFactory(required: StructType,
+                                          conf: SerializableConfiguration)
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new ScrapeChunkReader(p.asInstanceOf[ScrapeChunk].entries, required)
+    new ScrapeChunkReader(p.asInstanceOf[ScrapeChunk].entries, required,
+      conf.value)
 }
 
 /** Emits one row per manifest entry; opens the landed file only when
   * `content` survived column pruning. */
 private[scrape] class ScrapeChunkReader(
-    entries: Seq[ScrapeManifest.Entry], required: StructType)
+    entries: Seq[ScrapeManifest.Entry], required: StructType,
+    conf: Configuration)
     extends PartitionReader[InternalRow] {
 
   private val wantContent = required.fieldNames.contains("content")
@@ -183,7 +190,7 @@ private[scrape] class ScrapeChunkReader(
   private def readContent(file: String): UTF8String =
     try {
       val p = new Path(file)
-      val fs = p.getFileSystem(new Configuration())
+      val fs = p.getFileSystem(conf)
       val in = fs.open(p)
       try {
         val out = new java.io.ByteArrayOutputStream()
