@@ -39,7 +39,29 @@ object Bench {
     if (r.isNullAt(0)) 0L else r.getLong(0)
   }
 
+  /** FROZEN-epoch ratios (r14 verdict ask #2): each query's time over its
+    * [[BenchBaselineFrozen]] time, and the total over the total. The
+    * rolling [[BenchBaseline]] is regenerated from the record it later
+    * judges, so its per-query ratio is 1.000x by construction in a regen
+    * round; the frozen table only changes with a documented
+    * justification, so vs_frozen is the non-circular cross-round gate.
+    * Left out of both: queries newer than the epoch (no entry) and
+    * queries that failed, whose time is the time they took to fail. */
+  private[graft] def frozenRatios(results: Seq[(String, Double)],
+      failed: String => Boolean, frozen: Map[String, Double])
+      : (Seq[(String, Double)], Double) = {
+    val timed = results.filter { case (n, _) =>
+      frozen.contains(n) && !failed(n) }
+    val total =
+      if (timed.isEmpty) 0.0
+      else timed.map(_._2).sum / timed.map(kv => frozen(kv._1)).sum
+    (timed.map { case (n, t) => n -> t / frozen(n) }, total)
+  }
+
   def main(args: Array[String]): Unit = {
+    // Dev-loop subset (SPARK_GRAFT_ONLY): targeted single-query
+    // timings and sf1/sf10 retimes.
+    val selected = SparkEntry.selected
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     CodegenErrorCounter.install()
@@ -52,11 +74,6 @@ object Bench {
     catch { case NonFatal(_) => () }
     var errors = Map.empty[String, String]
     var codegenFails = Map.empty[String, Int]
-    // Dev-loop subset (SPARK_GRAFT_ONLY): targeted single-query
-    // timings and sf1/sf10 retimes.
-    val only = SparkEntry.only
-    val selected =
-      SparkEntry.queries.filter(kv => only.forall(_.contains(kv._1)))
     // Session-cache accounting (r17 verdict ask #10): the first
     // consumer of a shared subtree (lm chain, fuzzy/bpe/cc stages…)
     // pays its materialization inside its timed region; later
@@ -66,12 +83,13 @@ object Bench {
     // time read a warm entry (understates standalone cost).
     var cacheFill = Set.empty[String]
     var cacheWarm = Set.empty[String]
-    val firstPass = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val firstPass = selected.sortBy(_.name).map { q =>
+      val name = q.name
       val cg0 = CodegenErrorCounter.count.get()
       val h0 = graft.engine.SessionCaches.hits
       val f0 = graft.engine.SessionCaches.fills
       val t0 = System.nanoTime()
-      attempt(force(fn(spark, sfDir))).foreach(e => errors += name -> e)
+      attempt(force(q.build(spark, sfDir))).foreach(e => errors += name -> e)
       val sec = (System.nanoTime() - t0) / 1e9
       if (graft.engine.SessionCaches.fills > f0) cacheFill += name
       if (graft.engine.SessionCaches.hits > h0) cacheWarm += name
@@ -84,20 +102,27 @@ object Bench {
     // ask #2): on a shared machine a single measurement folds in
     // transient noise (CPU contention, first-touch JIT of the generated
     // classes, page-cache misses) — r3 showed 3-5× first-run outliers
-    // in the driver env that vanish on a second run, and for three
-    // consecutive rounds the single-retime record carried one
-    // jitter-class query above the 2× bar that the min-of-three local
-    // record contradicted. Rule: a query whose measurement exceeds
-    // 1.2× its recorded quiet-box twin (BenchBaseline; absolute 2 s
-    // floor for unbaselined queries) is re-run up to TWICE more,
-    // stopping early when a measurement drops to ≤1.2× — the minimum
-    // is recorded. Well-behaved queries cost one run; only genuinely
-    // noisy ones pay three. All raw measurements are preserved in the
-    // `retimed` stderr/full-artifact JSON so cold times stay
-    // auditable. Bounded to the 40 slowest so the suite stays short.
+    // in the driver env that vanish on a second run. A query that did
+    // not fail is a retime candidate under either of two rules, and is
+    // re-run up to TWICE more, stopping early once its minimum no longer
+    // meets either; the minimum is recorded, and every raw measurement
+    // stays in the `retimed` stderr/full-artifact JSON.
+    //  - `outlier` reads the rolling BenchBaseline: above 1.2× its
+    //    quiet-box twin, or above 2 s for a query with no entry.
+    //  - `flagWorthy` reads BenchBaselineFrozen, with the rule that
+    //    `flagged` applies below. The rolling table can drift above the
+    //    frozen one and leave such a query under the 1.2× bar.
+    // At most 48 candidates are retimed: flagWorthy ones first (r16: a
+    // 1.40 s query at 5.6× its frozen 0.25 s lost its slot to slower
+    // outliers and published one cold time), then the slowest rest. The
+    // trigger stays on the rolling table: on BENCH_FULL.json's r18 minima
+    // it selects 27 queries, where 1.2× the frozen table selects 74.
     def outlier(n: String, t: Double): Boolean =
       BenchBaseline.local.get(n)
         .fold(t > 2.0)(b => t > 1.2 * b)
+    def flagWorthy(n: String, t: Double): Boolean =
+      BenchBaselineFrozen.local.get(n).exists(b =>
+        (t > 2.0 * b && t > 2.0) || (t > 3.0 * b && t > 0.5))
     // ONESHOT: skip the retime pass entirely — for scale-sweep probes
     // (sf1/sf10) where every query exceeds its sf0.1 baseline by
     // design and min-of-N would triple a multi-hour run. The artifact
@@ -105,21 +130,6 @@ object Bench {
     // for a min-of-N record.
     val oneshot = sys.env.get("SPARK_GRAFT_BENCH_ONESHOT")
       .exists(v => v == "1" || v == "true")
-    // Retime SELECTION (r16 driver-flag root cause, fixed r17): the cap
-    // used to keep only the 40 slowest outliers BY ABSOLUTE TIME, so a
-    // sub-2 s query sitting at 7× its frozen time — exactly what the
-    // flag rule below catches — could miss the cut and publish a single
-    // cold measurement (r16 driver artifact: t_derive_flags flagged at
-    // 1.40 s on a 0.25 s frozen base, never retimed). Would-be-flagged
-    // queries (per the same frozen-ratio rule the artifact applies) now
-    // take retime slots FIRST; remaining slots go to the slowest rest.
-    val frozenForRetime = BenchBaselineFrozen.local
-    def flagWorthy(n: String, t: Double): Boolean =
-      frozenForRetime.get(n).exists(b =>
-        (t > 2.0 * b && t > 2.0) || (t > 3.0 * b && t > 0.5))
-    // flagWorthy also qualifies a query as a candidate outright: the
-    // rolling baseline can drift above frozen, leaving a would-be-
-    // flagged query under the 1.2× rolling-outlier bar.
     val retimeCandidates = (if (oneshot) Seq.empty else firstPass)
       .filter { case (n, t) =>
         (outlier(n, t) || flagWorthy(n, t)) && !errors.contains(n) }
@@ -156,15 +166,8 @@ object Bench {
     val results = firstPass.map { case (name, t1) =>
       name -> retimed.get(name).fold(t1)(_.min)
     }
-    // FROZEN-epoch ratios (r14 verdict ask #2): the rolling
-    // BenchBaseline is regenerated from the record it later judges, so
-    // its per-query ratio is 1.000x by construction in a regen round.
-    // BenchBaselineFrozen only changes with a documented justification,
-    // so vs_frozen is the non-circular cross-round gate; queries newer
-    // than the epoch have no entry and are excluded from the total.
-    val frozen = BenchBaselineFrozen.local
-    val vsFrozen = results
-      .collect { case (n, t) if frozen.contains(n) => n -> t / frozen(n) }
+    val (vsFrozen, frozenTotal) =
+      frozenRatios(results, errors.contains, BenchBaselineFrozen.local)
     // Regression FLAG rule (r15 verdict ask #6): raw vs_frozen ratios
     // stay in the artifact, but the actionable `flagged` list applies
     // an absolute-time floor — three sub-1.2 s jitter-class entries sat
@@ -181,10 +184,6 @@ object Bench {
         case (n, r) if (r > 2.0 && resultByName(n) > 2.0) ||
           (r > 3.0 && resultByName(n) > 0.5) => n
       }.sorted
-    val frozenTotal =
-      if (vsFrozen.isEmpty) 0.0
-      else results.collect { case (n, t) if frozen.contains(n) => t }.sum /
-        vsFrozen.map(kv => frozen(kv._1)).sum
     // Artifact contract (r4 judge finding: the full-precision line overflowed
     // the driver's tail capture → BENCH_r04 `parsed: null`): timings rounded
     // to 4 decimals (halves the line at zero timing fidelity lost), all

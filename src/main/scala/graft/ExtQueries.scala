@@ -6,10 +6,12 @@ import graft.engine.Engine
 import graft.ext.{DedupOps, Multimodal, SimilarityOps, TextOps}
 
 /** Query surface for the LLM-pipeline extension operators (SURVEY §2.10)
-  * over the `documents` and `embeddings` fixtures. Each SQL-expressible op
-  * carries a DuckDB oracle; the hash-seeded ops (MinHash/SimHash/LSH —
-  * xxhash64 has no DuckDB twin) are registered rows-only and covered by
-  * unit tests on constructed near-duplicates instead.
+  * over the `documents` and `embeddings` fixtures. Every op carries a
+  * DuckDB twin (`<name>Sql`, registered next to its builder in
+  * [[SparkEntry.catalog]]). Where the library default hashes with
+  * xxhash64, which DuckDB lacks, the query runs a portable variant
+  * (md5 SimHash, seeded plan-literal LSH hyperplanes) or a setting whose
+  * result provably equals the exact answer (MinHash LSH at 0.8).
   *
   * Every query ends in a deterministic ORDER BY so result hashing is
   * row-order-independent across engines.
@@ -168,9 +170,9 @@ object ExtQueries {
        |ORDER BY jaccard DESC, id_a, id_b LIMIT 100""".stripMargin
 
   // ---------------------------------------------------------------------
-  // MinHash-LSH near-dup pairs on the cloned corpus (rows-only: xxhash64
-  // signatures have no DuckDB twin). Every planted clone pair must surface
-  // with est_jaccard 1.0; unit tests assert that plus organic recall.
+  // MinHash-LSH near-dup pairs on the cloned corpus. xxhash64 signatures
+  // have no DuckDB twin, so the twin is the exact all-pairs answer, which
+  // this setting provably reproduces; unit tests assert organic recall.
   // ---------------------------------------------------------------------
   def xDedupMinhash(s: SparkSession, dir: String): DataFrame =
     DedupOps.nearDupPairsMinhash(clonedDocs(s, dir), "doc_id", "text",
@@ -367,7 +369,7 @@ object ExtQueries {
   }
 
   // ---------------------------------------------------------------------
-  // LSH-bucketed approximate top-5 (rows-only; recall vs brute force is
+  // LSH-bucketed approximate top-5 (recall vs brute force is
   // unit-tested). Same output shape as the exact baseline.
   // ---------------------------------------------------------------------
   def xSimAnn(s: SparkSession, dir: String): DataFrame = {
@@ -930,11 +932,6 @@ object ExtQueries {
        |FROM b GROUP BY source, pack_bin
        |ORDER BY source, pack_bin""".stripMargin
 
-  // ---------------------------------------------------------------------
-  // Multimodal: synthesize payload+meta, batched feature extraction
-  // (rows-only: the stub decoder is JVM-side). Meta fields + first feature
-  // component exposed; determinism is what's asserted.
-  // ---------------------------------------------------------------------
   // ---------------------------------------------------------------------
   // Dictionary sentiment (SURVEY §2.10): explode → broadcast lexicon join
   // → re-agg. Integer weights make the score sum order-independent, so

@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
 import graft.engine.Engine
 
 /** Declared query surface: one entry per implemented operator family from
-  * SURVEY.md §2, each paired (in [[SparkEntry.oracleSql]]) with equivalent
+  * SURVEY.md §2, each paired (in [[SparkEntry.catalog]]) with equivalent
   * DuckDB SQL over the same parquet tables.
   *
   * Oracle-parity numerics: double-summation order differs across engines,

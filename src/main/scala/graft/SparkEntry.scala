@@ -4,431 +4,257 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import scala.util.control.NonFatal
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  *
-  * Every declared operator has BOTH a `queries` entry (the Spark plan) and,
-  * where SQL-expressible, an `oracleSql` entry (equivalent DuckDB SQL) so
-  * the driver's hash-compare verifies it end-to-end.
+/** Driver contract (SURVEY.md §7): the query catalog that `Verify`,
+  * `Bench`, `tools.Explain` and the benchmark's query_mix run. Every query
+  * is declared once, in [[catalog]], with its Spark plan and its DuckDB
+  * twin, so the driver's hash-compare verifies each one end to end.
   */
 object SparkEntry {
+
+  /** One registered query: `build` makes its Spark plan over a fixture
+    * directory; `oracle` is equivalent SQL that DuckDB runs on the same
+    * parquet tables, whose rows the oracle hash-compares with `build`'s. */
+  final case class Query(
+      name: String,
+      build: (SparkSession, String) => DataFrame,
+      oracle: String)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     Queries.q1PricingSummary(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_pricing_summary" -> (Queries.q1PricingSummary _),
-    "q3_shipping_priority" -> (Queries.q3ShippingPriority _),
-    "q4_order_priority" -> (Queries.q4OrderPriority _),
-    "q5_local_supplier" -> (Queries.q5LocalSupplier _),
-    "q6_forecast_revenue" -> (Queries.q6ForecastRevenue _),
-    "q7_window_topn" -> (Queries.q7WindowTopN _),
-    "q8_rollup" -> (Queries.q8Rollup _),
-    "q9_set_ops" -> (Queries.q9SetOps _),
-    "q10_distinct_agg" -> (Queries.q10DistinctAgg _),
-    "q11_anti_join" -> (Queries.q11AntiJoin _),
-    "q13_cust_dist" -> (Queries.q13CustDist _),
-    "q14_promo_share" -> (Queries.q14PromoShare _),
-    "q15_top_supplier" -> (Queries.q15TopSupplier _),
-    "q17_small_qty" -> (Queries.q17SmallQty _),
-    "q18_large_orders" -> (Queries.q18LargeOrders _),
-    "q10_returned_items" -> (Queries.q10ReturnedItems _),
-    "q19_disjunctive" -> (Queries.q19DisjunctivePredicates _),
-    "q22_inactive_rich" -> (Queries.q22InactiveRich _),
-    "q_nation_top_balance" -> (Queries.qNationTopBalance _),
-    "q_window_running" -> (Queries.qWindowRunning _),
-    "q_window_frames" -> (Queries.qWindowFrames _),
-    "q_cube_counts" -> (Queries.qCubeCounts _),
-    "q_events_hourly" -> (Queries.qEventsHourly _),
-    "q_events_json" -> (Queries.qEventsJson _),
-    "q_events_sessions" -> (Queries.qEventsSessions _),
-    "q_asof_join" -> (Queries.qAsofJoin _),
-    "q_asof_forward" -> (Queries.qAsofForward _),
-    "q_asof_tolerance" -> (Queries.qAsofTolerance _),
-    "q_interval_join" -> (Queries.qIntervalJoin _),
-    "q_pivot" -> (Queries.qPivot _),
-    "q_percentiles" -> (Queries.qPercentiles _),
-    "q_corr" -> (Queries.qCorr _),
-    "q_histogram" -> (Queries.qHistogram _),
-    "q_listagg" -> (Queries.qListagg _),
-    "q_unpivot" -> (Queries.qUnpivot _),
-    "q_window_range" -> (Queries.qWindowRange _),
-    // transform-layer wiring (W1/W2/A4/J1/W5-W6/F1)
-    "t_profile_counts" -> (TransformQueries.tProfileCounts _),
-    "t_summary_stats" -> (TransformQueries.tSummaryStats _),
-    "t_derive_flags" -> (TransformQueries.tDeriveFlags _),
-    "t_topk_values" -> (TransformQueries.tTopkValues _),
-    "t_ids_contiguous" -> (TransformQueries.tIdsContiguous _),
-    "t_dedupe_append" -> (TransformQueries.tDedupeAppend _),
-    "t_stringify_export" -> (TransformQueries.tStringifyExport _),
-    "t_parse_flag" -> (TransformQueries.tParseFlag _),
-    "t_sql_passthrough" -> (TransformQueries.tSqlPassthrough _),
-    "t_salted_agg" -> (TransformQueries.tSaltedAgg _),
-    // I/O round-trips (S1/S2/K3 + S7 DSv2 write/scan)
-    "t_csv_roundtrip" -> (TransformQueries.tCsvRoundtrip _),
-    "t_keyed_pushdown" -> (TransformQueries.tKeyedPushdown _),
-    "t_scrape_manifest" -> (TransformQueries.tScrapeManifest _),
-    "t_quality_checks" -> (TransformQueries.tQualityChecks _),
-    // LLM-pipeline north-star ops (SURVEY §2.10)
-    "x_dedup_exact" -> (ExtQueries.xDedupExact _),
-    "x_dedup_jaccard" -> (ExtQueries.xDedupJaccard _),
-    "x_dedup_minhash" -> (ExtQueries.xDedupMinhash _),
-    "x_dedup_embed" -> (ExtQueries.xDedupEmbed _),
-    "x_dedup_simhash" -> (ExtQueries.xDedupSimhash _),
-    "x_sim_topk" -> (ExtQueries.xSimTopk _),
-    "x_embed_negatives" -> (ExtQueries.xEmbedNegatives _),
-    "x_hybrid_rrf" -> (ExtQueries.xHybridRrf _),
-    "x_sim_ann" -> (ExtQueries.xSimAnn _),
-    "x_sim_ivf" -> (ExtQueries.xSimIvf _),
-    "x_sim_pq" -> (ExtQueries.xSimPq _),
-    "x_dedup_corpus" -> (ExtQueries.xDedupCorpus _),
-    "x_snapshot_diff" -> (ExtQueries.xSnapshotDiff _),
-    "x_curriculum" -> (ExtQueries.xCurriculum _),
-    "x_embed_kmeans" -> (ExtQueries.xEmbedKmeans _),
-    "x_embed_silhouette" -> (ExtQueries.xEmbedSilhouette _),
-    "x_text_nfc" -> (ExtQueries.xTextNfc _),
-    "x_mmr_rerank" -> (ExtQueries.xMmrRerank _),
-    "x_corpus_zipf" -> (ExtQueries.xCorpusZipf _),
-    "x_quality_classify" -> (ExtQueries.xQualityClassify _),
-    "x_quality_nb" -> (ExtQueries.xQualityNb _),
-    "x_quality_qnorm" -> (ExtQueries.xQualityQnorm _),
-    "x_quality_auc" -> (ExtQueries.xQualityAuc _),
-    "x_quality_calibration" -> (ExtQueries.xQualityCalibration _),
-    "x_quality_confusion" -> (ExtQueries.xQualityConfusion _),
-    "x_quality_labelnoise" -> (ExtQueries.xQualityLabelNoise _),
-    "x_quality_topfrac" -> (ExtQueries.xQualityTopfrac _),
-    "x_embed_quantize" -> (ExtQueries.xEmbedQuantize _),
-    "x_embed_project" -> (ExtQueries.xEmbedProject _),
-    "x_sim_project_ann" -> (ExtQueries.xSimProjectAnn _),
-    "x_graph_triangles" -> (ExtQueries.xGraphTriangles _),
-    "x_graph_kcore" -> (ExtQueries.xGraphKcore _),
-    "x_embed_mutual" -> (ExtQueries.xEmbedMutual _),
-    "x_embed_mutual_ann" -> (ExtQueries.xEmbedMutualAnn _),
-    "x_embed_negatives_ann" -> (ExtQueries.xEmbedNegativesAnn _),
-    "x_feature_psi" -> (ExtQueries.xFeaturePsi _),
-    "x_select_dsir" -> (ExtQueries.xSelectDsir _),
-    "x_decontam_semantic" -> (ExtQueries.xDecontamSemantic _),
-    "x_embed_coverage" -> (ExtQueries.xEmbedCoverage _),
-    "x_events_sequences" -> (ExtQueries.xEventsSequences _),
-    "x_events_markov" -> (ExtQueries.xEventsMarkov _),
-    "x_events_pagerank" -> (ExtQueries.xEventsPagerank _),
-    "x_events_attribution" -> (ExtQueries.xEventsAttribution _),
-    "x_events_burstiness" -> (ExtQueries.xEventsBurstiness _),
-    "x_profile_skew" -> (ExtQueries.xProfileSkew _),
-    "x_privacy_kanon" -> (ExtQueries.xPrivacyKanon _),
-    "x_privacy_ldiv" -> (ExtQueries.xPrivacyLdiv _),
-    "x_layout_zorder" -> (ExtQueries.xLayoutZorder _),
-    "x_layout_hilbert" -> (ExtQueries.xLayoutHilbert _),
-    "x_layout_zorder3" -> (ExtQueries.xLayoutZorder3 _),
-    "x_label_vote" -> (ExtQueries.xLabelVote _),
-    "x_label_reliability" -> (ExtQueries.xLabelReliability _),
-    "x_embed_abtt" -> (ExtQueries.xEmbedAbtt _),
-    "x_graph_lpa" -> (ExtQueries.xGraphLpa _),
-    "x_graph_pagerank" -> (ExtQueries.xGraphPagerank _),
-    "x_pack_balanced" -> (ExtQueries.xPackBalanced _),
-    "x_sample_pps" -> (ExtQueries.xSamplePps _),
-    "x_embed_moments" -> (ExtQueries.xEmbedMoments _),
-    "x_text_diversity" -> (ExtQueries.xTextDiversity _),
-    "x_text_entropy" -> (ExtQueries.xTextEntropy _),
-    "x_ngram_novelty" -> (ExtQueries.xNgramNovelty _),
-    "x_text_stats" -> (ExtQueries.xTextStats _),
-    "x_text_readability" -> (ExtQueries.xTextReadability _),
-    "x_text_langid" -> (ExtQueries.xTextLangid _),
-    "x_text_fingerprint" -> (ExtQueries.xTextFingerprint _),
-    "x_text_clean" -> (ExtQueries.xTextClean _),
-    "x_text_filter" -> (ExtQueries.xTextFilter _),
-    "x_text_pack" -> (ExtQueries.xTextPack _),
-    "x_text_sentiment" -> (ExtQueries.xTextSentiment _),
-    "x_media_features" -> (ExtQueries.xMediaFeatures _),
-    "x_frame_sample" -> (ExtQueries.xFrameSample _),
-    "x_media_dedup" -> (ExtQueries.xMediaDedup _),
-    "x_media_neardup" -> (ExtQueries.xMediaNeardup _),
-    "x_dedup_cc" -> (ExtQueries.xDedupCc _),
-    "x_dedup_incremental_cc" -> (ExtQueries.xDedupIncrementalCc _),
-    "x_dedup_cohesion" -> (ExtQueries.xDedupCohesion _),
-    "x_dedup_resolve" -> (ExtQueries.xDedupResolve _),
-    "x_fuzzy_match" -> (ExtQueries.xFuzzyMatch _),
-    "x_fuzzy_classes" -> (ExtQueries.xFuzzyClasses _),
-    "x_fuzzy_expand" -> (ExtQueries.xFuzzyExpand _),
-    "x_text_redact" -> (ExtQueries.xTextRedact _),
-    "x_sample_split" -> (ExtQueries.xSampleSplit _),
-    "x_sample_shuffle" -> (ExtQueries.xSampleShuffle _),
-    "x_sample_stratified" -> (ExtQueries.xSampleStratified _),
-    "x_text_vocab" -> (ExtQueries.xTextVocab _),
-    "x_sample_mixture" -> (ExtQueries.xSampleMixture _),
-    "x_sample_temperature" -> (ExtQueries.xSampleTemperature _),
-    "x_decontaminate" -> (ExtQueries.xDecontaminate _),
-    "x_stream_ingest" -> (ExtQueries.xStreamIngest _),
-    "x_curation" -> (ExtQueries.xCuration _),
-    "x_text_repetition" -> (ExtQueries.xTextRepetition _),
-    "x_text_spans" -> (ExtQueries.xTextSpans _),
-    "x_text_bpe" -> (ExtQueries.xTextBpe _),
-    "x_text_repfilter" -> (ExtQueries.xTextRepfilter _),
-    "x_text_boilerplate" -> (ExtQueries.xTextBoilerplate _),
-    "x_sim_ivfadc" -> (ExtQueries.xSimIvfadc _),
-    "x_text_bpe_encode" -> (ExtQueries.xTextBpeEncode _),
-    "x_text_fertility" -> (ExtQueries.xTextFertility _),
-    "x_text_spanremove" -> (ExtQueries.xTextSpanremove _),
-    "x_text_dupfrac" -> (ExtQueries.xTextDupfrac _),
-    "x_text_spancorrupt" -> (ExtQueries.xTextSpancorrupt _),
-    "x_text_hashembed" -> (ExtQueries.xTextHashembed _),
-    "x_decontam_stats" -> (ExtQueries.xDecontamStats _),
-    "x_text_bm25" -> (ExtQueries.xTextBm25 _),
-    "x_dedup_semantic" -> (ExtQueries.xDedupSemantic _),
-    "x_dedup_semantic_lsh" -> (ExtQueries.xDedupSemanticLsh _),
-    "x_split_leakage" -> (ExtQueries.xSplitLeakage _),
-    "x_sample_budget" -> (ExtQueries.xSampleBudget _),
-    "x_text_lmscore" -> (ExtQueries.xTextLmscore _),
-    "x_text_kneser" -> (ExtQueries.xTextKneser _),
-    "x_mix_weights" -> (ExtQueries.xMixWeights _),
-    "x_mix_allocate" -> (ExtQueries.xMixAllocate _),
-    "x_text_keywords" -> (ExtQueries.xTextKeywords _),
-    "x_events_funnel" -> (ExtQueries.xEventsFunnel _),
-    "t_winsorize" -> (TransformQueries.tWinsorize _),
-    "t_mad_outliers" -> (TransformQueries.tMadOutliers _),
-    "x_dedup_sizes" -> (ExtQueries.xDedupClusterSizes _),
-    "x_text_pmi" -> (ExtQueries.xTextPmi _),
-    "x_text_drift" -> (ExtQueries.xTextDrift _),
-    "x_embed_cov" -> (ExtQueries.xEmbedCov _),
-    "x_text_ppl_buckets" -> (ExtQueries.xTextPplBuckets _),
-    "x_text_ppl_thresh" -> (ExtQueries.xTextPplThresh _),
-    "x_events_retention" -> (ExtQueries.xEventsRetention _),
-    "x_text_chunks" -> (ExtQueries.xTextChunks _),
-    "x_corpus_report" -> (ExtQueries.xCorpusReport _),
-    "x_events_anomaly" -> (ExtQueries.xEventsAnomaly _),
-    "x_sketch_distinct" -> (ExtQueries.xSketchDistinct _),
-    "x_sketch_cms" -> (ExtQueries.xSketchCms _),
-    "x_vocab_coverage" -> (ExtQueries.xVocabCoverage _),
-    "x_sample_weighted" -> (ExtQueries.xSampleWeighted _),
-    "x_sample_group_weighted" -> (ExtQueries.xSampleGroupWeighted _),
-    "x_dedup_containment" -> (ExtQueries.xDedupContainment _),
-    "x_text_winnow" -> (ExtQueries.xTextWinnow _),
-    "x_sketch_heavy" -> (ExtQueries.xSketchHeavy _),
-    "x_sketch_overlap" -> (ExtQueries.xSketchOverlap _),
-    "x_sketch_hll" -> (ExtQueries.xSketchHll _),
-    "x_sketch_bloom" -> (ExtQueries.xSketchBloom _),
-    "x_sketch_quantiles" -> (ExtQueries.xSketchQuantiles _),
-    "x_sim_recall" -> (ExtQueries.xSimRecall _),
-    "x_sim_mrr" -> (ExtQueries.xSimMrr _),
-    "x_sim_recall_ivf" -> (ExtQueries.xSimRecallIvf _),
-    "x_sim_mrr_ivf" -> (ExtQueries.xSimMrrIvf _),
-    "x_dedup_minhash_est" -> (ExtQueries.xDedupMinhashEst _),
-    "x_dedup_apss" -> (ExtQueries.xDedupApss _),
-  )
+  /** Every registered query, one line each: name, builder, twin. */
+  lazy val catalog: Seq[Query] = {
+    import Queries._, TransformQueries._, ExtQueries._
+    Seq(
+      Query("q1_pricing_summary", q1PricingSummary, q1Sql),
+      Query("q3_shipping_priority", q3ShippingPriority, q3Sql),
+      Query("q4_order_priority", q4OrderPriority, q4Sql),
+      Query("q5_local_supplier", q5LocalSupplier, q5Sql),
+      Query("q6_forecast_revenue", q6ForecastRevenue, q6Sql),
+      Query("q7_window_topn", q7WindowTopN, q7Sql),
+      Query("q8_rollup", q8Rollup, q8Sql),
+      Query("q9_set_ops", q9SetOps, q9Sql),
+      Query("q10_distinct_agg", q10DistinctAgg, q10Sql),
+      Query("q11_anti_join", q11AntiJoin, q11Sql),
+      Query("q13_cust_dist", q13CustDist, q13Sql),
+      Query("q14_promo_share", q14PromoShare, q14Sql),
+      Query("q15_top_supplier", q15TopSupplier, q15Sql),
+      Query("q17_small_qty", q17SmallQty, q17Sql),
+      Query("q18_large_orders", q18LargeOrders, q18Sql),
+      Query("q10_returned_items", q10ReturnedItems, q10ReturnedSql),
+      Query("q19_disjunctive", q19DisjunctivePredicates, q19Sql),
+      Query("q22_inactive_rich", q22InactiveRich, q22Sql),
+      Query("q_nation_top_balance", qNationTopBalance, qNationTopBalanceSql),
+      Query("q_window_running", qWindowRunning, qWindowRunningSql),
+      Query("q_window_frames", qWindowFrames, qWindowFramesSql),
+      Query("q_cube_counts", qCubeCounts, qCubeCountsSql),
+      Query("q_events_hourly", qEventsHourly, qEventsHourlySql),
+      Query("q_events_json", qEventsJson, qEventsJsonSql),
+      Query("q_events_sessions", qEventsSessions, qEventsSessionsSql),
+      Query("q_asof_join", qAsofJoin, qAsofJoinSql),
+      Query("q_asof_forward", qAsofForward, qAsofForwardSql),
+      Query("q_asof_tolerance", qAsofTolerance, qAsofToleranceSql),
+      Query("q_interval_join", qIntervalJoin, qIntervalJoinSql),
+      Query("q_pivot", qPivot, qPivotSql),
+      Query("q_percentiles", qPercentiles, qPercentilesSql),
+      Query("q_corr", qCorr, qCorrSql),
+      Query("q_histogram", qHistogram, qHistogramSql),
+      Query("q_listagg", qListagg, qListaggSql),
+      Query("q_unpivot", qUnpivot, qUnpivotSql),
+      Query("q_window_range", qWindowRange, qWindowRangeSql),
+      // transform-layer wiring (W1/W2/A4/J1/W5-W6/F1)
+      Query("t_profile_counts", tProfileCounts, tProfileCountsSql),
+      Query("t_summary_stats", tSummaryStats, tSummaryStatsSql),
+      Query("t_derive_flags", tDeriveFlags, tDeriveFlagsSql),
+      Query("t_topk_values", tTopkValues, tTopkValuesSql),
+      Query("t_ids_contiguous", tIdsContiguous, tIdsContiguousSql),
+      Query("t_dedupe_append", tDedupeAppend, tDedupeAppendSql),
+      Query("t_stringify_export", tStringifyExport, tStringifyExportSql),
+      Query("t_parse_flag", tParseFlag, tParseFlagSql),
+      Query("t_sql_passthrough", tSqlPassthrough, passthroughSql),
+      Query("t_salted_agg", tSaltedAgg, tSaltedAggSql),
+      // I/O round-trips (S1/S2/K3 + S7 DSv2 write/scan)
+      Query("t_csv_roundtrip", tCsvRoundtrip, tCsvRoundtripSql),
+      Query("t_keyed_pushdown", tKeyedPushdown, tKeyedPushdownSql),
+      Query("t_scrape_manifest", tScrapeManifest, tScrapeManifestSql),
+      Query("t_quality_checks", tQualityChecks, tQualityChecksSql),
+      // LLM-pipeline north-star ops (SURVEY §2.10)
+      Query("x_dedup_exact", xDedupExact, xDedupExactSql),
+      Query("x_dedup_jaccard", xDedupJaccard, xDedupJaccardSql),
+      Query("x_dedup_minhash", xDedupMinhash, xDedupMinhashSql),
+      Query("x_dedup_embed", xDedupEmbed, xDedupEmbedSql),
+      Query("x_dedup_simhash", xDedupSimhash, xDedupSimhashSql),
+      Query("x_sim_topk", xSimTopk, xSimTopkSql),
+      Query("x_embed_negatives", xEmbedNegatives, xEmbedNegativesSql),
+      Query("x_hybrid_rrf", xHybridRrf, xHybridRrfSql),
+      Query("x_sim_ann", xSimAnn, xSimAnnSql),
+      Query("x_sim_ivf", xSimIvf, xSimIvfSql),
+      Query("x_sim_pq", xSimPq, xSimPqSql),
+      Query("x_dedup_corpus", xDedupCorpus, xDedupCorpusSql),
+      Query("x_snapshot_diff", xSnapshotDiff, xSnapshotDiffSql),
+      Query("x_curriculum", xCurriculum, xCurriculumSql),
+      Query("x_embed_kmeans", xEmbedKmeans, xEmbedKmeansSql),
+      Query("x_embed_silhouette", xEmbedSilhouette, xEmbedSilhouetteSql),
+      Query("x_text_nfc", xTextNfc, xTextNfcSql),
+      Query("x_mmr_rerank", xMmrRerank, xMmrRerankSql),
+      Query("x_corpus_zipf", xCorpusZipf, xCorpusZipfSql),
+      Query("x_quality_classify", xQualityClassify, xQualityClassifySql),
+      Query("x_quality_nb", xQualityNb, xQualityNbSql),
+      Query("x_quality_qnorm", xQualityQnorm, xQualityQnormSql),
+      Query("x_quality_auc", xQualityAuc, xQualityAucSql),
+      Query("x_quality_calibration", xQualityCalibration, xQualityCalibrationSql),
+      Query("x_quality_confusion", xQualityConfusion, xQualityConfusionSql),
+      Query("x_quality_labelnoise", xQualityLabelNoise, xQualityLabelNoiseSql),
+      Query("x_quality_topfrac", xQualityTopfrac, xQualityTopfracSql),
+      Query("x_embed_quantize", xEmbedQuantize, xEmbedQuantizeSql),
+      Query("x_embed_project", xEmbedProject, xEmbedProjectSql),
+      Query("x_sim_project_ann", xSimProjectAnn, xSimProjectAnnSql),
+      Query("x_graph_triangles", xGraphTriangles, xGraphTrianglesSql),
+      Query("x_graph_kcore", xGraphKcore, xGraphKcoreSql),
+      Query("x_embed_mutual", xEmbedMutual, xEmbedMutualSql),
+      Query("x_embed_mutual_ann", xEmbedMutualAnn, xEmbedMutualAnnSql),
+      Query("x_embed_negatives_ann", xEmbedNegativesAnn, xEmbedNegativesAnnSql),
+      Query("x_feature_psi", xFeaturePsi, xFeaturePsiSql),
+      Query("x_select_dsir", xSelectDsir, xSelectDsirSql),
+      Query("x_decontam_semantic", xDecontamSemantic, xDecontamSemanticSql),
+      Query("x_embed_coverage", xEmbedCoverage, xEmbedCoverageSql),
+      Query("x_events_sequences", xEventsSequences, xEventsSequencesSql),
+      Query("x_events_markov", xEventsMarkov, xEventsMarkovSql),
+      Query("x_events_pagerank", xEventsPagerank, xEventsPagerankSql),
+      Query("x_events_attribution", xEventsAttribution, xEventsAttributionSql),
+      Query("x_events_burstiness", xEventsBurstiness, xEventsBurstinessSql),
+      Query("x_profile_skew", xProfileSkew, xProfileSkewSql),
+      Query("x_privacy_kanon", xPrivacyKanon, xPrivacyKanonSql),
+      Query("x_privacy_ldiv", xPrivacyLdiv, xPrivacyLdivSql),
+      Query("x_layout_zorder", xLayoutZorder, xLayoutZorderSql),
+      Query("x_layout_hilbert", xLayoutHilbert, xLayoutHilbertSql),
+      Query("x_layout_zorder3", xLayoutZorder3, xLayoutZorder3Sql),
+      Query("x_label_vote", xLabelVote, xLabelVoteSql),
+      Query("x_label_reliability", xLabelReliability, xLabelReliabilitySql),
+      Query("x_embed_abtt", xEmbedAbtt, xEmbedAbttSql),
+      Query("x_graph_lpa", xGraphLpa, xGraphLpaSql),
+      Query("x_graph_pagerank", xGraphPagerank, xGraphPagerankSql),
+      Query("x_pack_balanced", xPackBalanced, xPackBalancedSql),
+      Query("x_sample_pps", xSamplePps, xSamplePpsSql),
+      Query("x_embed_moments", xEmbedMoments, xEmbedMomentsSql),
+      Query("x_text_diversity", xTextDiversity, xTextDiversitySql),
+      Query("x_text_entropy", xTextEntropy, xTextEntropySql),
+      Query("x_ngram_novelty", xNgramNovelty, xNgramNoveltySql),
+      Query("x_text_stats", xTextStats, xTextStatsSql),
+      Query("x_text_readability", xTextReadability, xTextReadabilitySql),
+      Query("x_text_langid", xTextLangid, xTextLangidSql),
+      Query("x_text_fingerprint", xTextFingerprint, xTextFingerprintSql),
+      Query("x_text_clean", xTextClean, xTextCleanSql),
+      Query("x_text_filter", xTextFilter, xTextFilterSql),
+      Query("x_text_pack", xTextPack, xTextPackSql),
+      Query("x_text_sentiment", xTextSentiment, xTextSentimentSql),
+      Query("x_media_features", xMediaFeatures, xMediaFeaturesSql),
+      Query("x_frame_sample", xFrameSample, xFrameSampleSql),
+      Query("x_media_dedup", xMediaDedup, xMediaDedupSql),
+      Query("x_media_neardup", xMediaNeardup, xMediaNeardupSql),
+      Query("x_dedup_cc", xDedupCc, xDedupCcSql),
+      Query("x_dedup_incremental_cc", xDedupIncrementalCc, xDedupIncrementalCcSql),
+      Query("x_dedup_cohesion", xDedupCohesion, xDedupCohesionSql),
+      Query("x_dedup_resolve", xDedupResolve, xDedupResolveSql),
+      Query("x_fuzzy_match", xFuzzyMatch, xFuzzyMatchSql),
+      Query("x_fuzzy_classes", xFuzzyClasses, xFuzzyClassesSql),
+      Query("x_fuzzy_expand", xFuzzyExpand, xFuzzyExpandSql),
+      Query("x_text_redact", xTextRedact, xTextRedactSql),
+      Query("x_sample_split", xSampleSplit, xSampleSplitSql),
+      Query("x_sample_shuffle", xSampleShuffle, xSampleShuffleSql),
+      Query("x_sample_stratified", xSampleStratified, xSampleStratifiedSql),
+      Query("x_text_vocab", xTextVocab, xTextVocabSql),
+      Query("x_sample_mixture", xSampleMixture, xSampleMixtureSql),
+      Query("x_sample_temperature", xSampleTemperature, xSampleTemperatureSql),
+      Query("x_decontaminate", xDecontaminate, xDecontaminateSql),
+      Query("x_stream_ingest", xStreamIngest, xStreamIngestSql),
+      Query("x_curation", xCuration, xCurationSql),
+      Query("x_text_repetition", xTextRepetition, xTextRepetitionSql),
+      Query("x_text_spans", xTextSpans, xTextSpansSql),
+      Query("x_text_bpe", xTextBpe, xTextBpeSql),
+      Query("x_text_repfilter", xTextRepfilter, xTextRepfilterSql),
+      Query("x_text_boilerplate", xTextBoilerplate, xTextBoilerplateSql),
+      Query("x_sim_ivfadc", xSimIvfadc, xSimIvfadcSql),
+      Query("x_text_bpe_encode", xTextBpeEncode, xTextBpeEncodeSql),
+      Query("x_text_fertility", xTextFertility, xTextFertilitySql),
+      Query("x_text_spanremove", xTextSpanremove, xTextSpanremoveSql),
+      Query("x_text_dupfrac", xTextDupfrac, xTextDupfracSql),
+      Query("x_text_spancorrupt", xTextSpancorrupt, xTextSpancorruptSql),
+      Query("x_text_hashembed", xTextHashembed, xTextHashembedSql),
+      Query("x_decontam_stats", xDecontamStats, xDecontamStatsSql),
+      Query("x_text_bm25", xTextBm25, xTextBm25Sql),
+      Query("x_dedup_semantic", xDedupSemantic, xDedupSemanticSql),
+      Query("x_dedup_semantic_lsh", xDedupSemanticLsh, xDedupSemanticLshSql),
+      Query("x_split_leakage", xSplitLeakage, xSplitLeakageSql),
+      Query("x_sample_budget", xSampleBudget, xSampleBudgetSql),
+      Query("x_text_lmscore", xTextLmscore, xTextLmscoreSql),
+      Query("x_text_kneser", xTextKneser, xTextKneserSql),
+      Query("x_mix_weights", xMixWeights, xMixWeightsSql),
+      Query("x_mix_allocate", xMixAllocate, xMixAllocateSql),
+      Query("x_text_keywords", xTextKeywords, xTextKeywordsSql),
+      Query("x_events_funnel", xEventsFunnel, xEventsFunnelSql),
+      Query("t_winsorize", tWinsorize, tWinsorizeSql),
+      Query("t_mad_outliers", tMadOutliers, tMadOutliersSql),
+      Query("x_dedup_sizes", xDedupClusterSizes, xDedupClusterSizesSql),
+      Query("x_text_pmi", xTextPmi, xTextPmiSql),
+      Query("x_text_drift", xTextDrift, xTextDriftSql),
+      Query("x_embed_cov", xEmbedCov, xEmbedCovSql),
+      Query("x_text_ppl_buckets", xTextPplBuckets, xTextPplBucketsSql),
+      Query("x_text_ppl_thresh", xTextPplThresh, xTextPplThreshSql),
+      Query("x_events_retention", xEventsRetention, xEventsRetentionSql),
+      Query("x_text_chunks", xTextChunks, xTextChunksSql),
+      Query("x_corpus_report", xCorpusReport, xCorpusReportSql),
+      Query("x_events_anomaly", xEventsAnomaly, xEventsAnomalySql),
+      Query("x_sketch_distinct", xSketchDistinct, xSketchDistinctSql),
+      Query("x_sketch_cms", xSketchCms, xSketchCmsSql),
+      Query("x_vocab_coverage", xVocabCoverage, xVocabCoverageSql),
+      Query("x_sample_weighted", xSampleWeighted, xSampleWeightedSql),
+      Query("x_sample_group_weighted", xSampleGroupWeighted, xSampleGroupWeightedSql),
+      Query("x_dedup_containment", xDedupContainment, xDedupContainmentSql),
+      Query("x_text_winnow", xTextWinnow, xTextWinnowSql),
+      Query("x_sketch_heavy", xSketchHeavy, xSketchHeavySql),
+      Query("x_sketch_overlap", xSketchOverlap, xSketchOverlapSql),
+      Query("x_sketch_hll", xSketchHll, xSketchHllSql),
+      Query("x_sketch_bloom", xSketchBloom, xSketchBloomSql),
+      Query("x_sketch_quantiles", xSketchQuantiles, xSketchQuantilesSql),
+      Query("x_sim_recall", xSimRecall, xSimRecallSql),
+      Query("x_sim_mrr", xSimMrr, xSimMrrSql),
+      Query("x_sim_recall_ivf", xSimRecallIvf, xSimRecallIvfSql),
+      Query("x_sim_mrr_ivf", xSimMrrIvf, xSimMrrIvfSql),
+      Query("x_dedup_minhash_est", xDedupMinhashEst, xDedupMinhashEstSql),
+      Query("x_dedup_apss", xDedupApss, xDedupApssSql),
+    )
+  }
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = Map(
-    "q1_pricing_summary" -> Queries.q1Sql,
-    "q3_shipping_priority" -> Queries.q3Sql,
-    "q4_order_priority" -> Queries.q4Sql,
-    "q5_local_supplier" -> Queries.q5Sql,
-    "q6_forecast_revenue" -> Queries.q6Sql,
-    "q7_window_topn" -> Queries.q7Sql,
-    "q8_rollup" -> Queries.q8Sql,
-    "q9_set_ops" -> Queries.q9Sql,
-    "q10_distinct_agg" -> Queries.q10Sql,
-    "q11_anti_join" -> Queries.q11Sql,
-    "q13_cust_dist" -> Queries.q13Sql,
-    "q14_promo_share" -> Queries.q14Sql,
-    "q15_top_supplier" -> Queries.q15Sql,
-    "q17_small_qty" -> Queries.q17Sql,
-    "q18_large_orders" -> Queries.q18Sql,
-    "q10_returned_items" -> Queries.q10ReturnedSql,
-    "q19_disjunctive" -> Queries.q19Sql,
-    "q22_inactive_rich" -> Queries.q22Sql,
-    "q_nation_top_balance" -> Queries.qNationTopBalanceSql,
-    "q_window_running" -> Queries.qWindowRunningSql,
-    "q_window_frames" -> Queries.qWindowFramesSql,
-    "q_cube_counts" -> Queries.qCubeCountsSql,
-    "q_events_hourly" -> Queries.qEventsHourlySql,
-    "q_events_json" -> Queries.qEventsJsonSql,
-    "q_events_sessions" -> Queries.qEventsSessionsSql,
-    "q_asof_join" -> Queries.qAsofJoinSql,
-    "q_asof_forward" -> Queries.qAsofForwardSql,
-    "q_asof_tolerance" -> Queries.qAsofToleranceSql,
-    "q_interval_join" -> Queries.qIntervalJoinSql,
-    "q_pivot" -> Queries.qPivotSql,
-    "q_percentiles" -> Queries.qPercentilesSql,
-    "q_corr" -> Queries.qCorrSql,
-    "q_histogram" -> Queries.qHistogramSql,
-    "q_listagg" -> Queries.qListaggSql,
-    "q_unpivot" -> Queries.qUnpivotSql,
-    "q_window_range" -> Queries.qWindowRangeSql,
-    "t_profile_counts" -> TransformQueries.tProfileCountsSql,
-    "t_summary_stats" -> TransformQueries.tSummaryStatsSql,
-    "t_derive_flags" -> TransformQueries.tDeriveFlagsSql,
-    "t_topk_values" -> TransformQueries.tTopkValuesSql,
-    "t_ids_contiguous" -> TransformQueries.tIdsContiguousSql,
-    "t_dedupe_append" -> TransformQueries.tDedupeAppendSql,
-    "t_stringify_export" -> TransformQueries.tStringifyExportSql,
-    "t_parse_flag" -> TransformQueries.tParseFlagSql,
-    "t_sql_passthrough" -> TransformQueries.passthroughSql,
-    "t_salted_agg" -> TransformQueries.tSaltedAggSql,
-    "t_csv_roundtrip" -> TransformQueries.tCsvRoundtripSql,
-    "t_keyed_pushdown" -> TransformQueries.tKeyedPushdownSql,
-    "t_scrape_manifest" -> TransformQueries.tScrapeManifestSql,
-    "t_quality_checks" -> TransformQueries.tQualityChecksSql,
-    "x_dedup_exact" -> ExtQueries.xDedupExactSql,
-    "x_dedup_jaccard" -> ExtQueries.xDedupJaccardSql,
-    "x_dedup_minhash" -> ExtQueries.xDedupMinhashSql,
-    "x_dedup_embed" -> ExtQueries.xDedupEmbedSql,
-    "x_dedup_corpus" -> ExtQueries.xDedupCorpusSql,
-    "x_snapshot_diff" -> ExtQueries.xSnapshotDiffSql,
-    "x_curriculum" -> ExtQueries.xCurriculumSql,
-    "x_embed_kmeans" -> ExtQueries.xEmbedKmeansSql,
-    "x_embed_silhouette" -> ExtQueries.xEmbedSilhouetteSql,
-    "x_text_nfc" -> ExtQueries.xTextNfcSql,
-    "x_mmr_rerank" -> ExtQueries.xMmrRerankSql,
-    "x_corpus_zipf" -> ExtQueries.xCorpusZipfSql,
-    "x_quality_classify" -> ExtQueries.xQualityClassifySql,
-    "x_quality_nb" -> ExtQueries.xQualityNbSql,
-    "x_quality_qnorm" -> ExtQueries.xQualityQnormSql,
-    "x_quality_auc" -> ExtQueries.xQualityAucSql,
-    "x_quality_calibration" -> ExtQueries.xQualityCalibrationSql,
-    "x_quality_confusion" -> ExtQueries.xQualityConfusionSql,
-    "x_quality_labelnoise" -> ExtQueries.xQualityLabelNoiseSql,
-    "x_quality_topfrac" -> ExtQueries.xQualityTopfracSql,
-    "x_embed_quantize" -> ExtQueries.xEmbedQuantizeSql,
-    "x_embed_project" -> ExtQueries.xEmbedProjectSql,
-    "x_sim_project_ann" -> ExtQueries.xSimProjectAnnSql,
-    "x_graph_triangles" -> ExtQueries.xGraphTrianglesSql,
-    "x_graph_kcore" -> ExtQueries.xGraphKcoreSql,
-    "x_embed_mutual" -> ExtQueries.xEmbedMutualSql,
-    "x_embed_mutual_ann" -> ExtQueries.xEmbedMutualAnnSql,
-    "x_embed_negatives_ann" -> ExtQueries.xEmbedNegativesAnnSql,
-    "x_feature_psi" -> ExtQueries.xFeaturePsiSql,
-    "x_select_dsir" -> ExtQueries.xSelectDsirSql,
-    "x_decontam_semantic" -> ExtQueries.xDecontamSemanticSql,
-    "x_embed_coverage" -> ExtQueries.xEmbedCoverageSql,
-    "x_events_sequences" -> ExtQueries.xEventsSequencesSql,
-    "x_events_markov" -> ExtQueries.xEventsMarkovSql,
-    "x_events_pagerank" -> ExtQueries.xEventsPagerankSql,
-    "x_events_attribution" -> ExtQueries.xEventsAttributionSql,
-    "x_events_burstiness" -> ExtQueries.xEventsBurstinessSql,
-    "x_profile_skew" -> ExtQueries.xProfileSkewSql,
-    "x_privacy_kanon" -> ExtQueries.xPrivacyKanonSql,
-    "x_privacy_ldiv" -> ExtQueries.xPrivacyLdivSql,
-    "x_layout_zorder" -> ExtQueries.xLayoutZorderSql,
-    "x_layout_hilbert" -> ExtQueries.xLayoutHilbertSql,
-    "x_layout_zorder3" -> ExtQueries.xLayoutZorder3Sql,
-    "x_label_vote" -> ExtQueries.xLabelVoteSql,
-    "x_label_reliability" -> ExtQueries.xLabelReliabilitySql,
-    "x_embed_abtt" -> ExtQueries.xEmbedAbttSql,
-    "x_graph_lpa" -> ExtQueries.xGraphLpaSql,
-    "x_graph_pagerank" -> ExtQueries.xGraphPagerankSql,
-    "x_pack_balanced" -> ExtQueries.xPackBalancedSql,
-    "x_sample_pps" -> ExtQueries.xSamplePpsSql,
-    "x_embed_moments" -> ExtQueries.xEmbedMomentsSql,
-    "x_text_diversity" -> ExtQueries.xTextDiversitySql,
-    "x_text_entropy" -> ExtQueries.xTextEntropySql,
-    "x_ngram_novelty" -> ExtQueries.xNgramNoveltySql,
-    "x_sim_topk" -> ExtQueries.xSimTopkSql,
-    "x_hybrid_rrf" -> ExtQueries.xHybridRrfSql,
-    "x_embed_negatives" -> ExtQueries.xEmbedNegativesSql,
-    "x_sim_ann" -> ExtQueries.xSimAnnSql,
-    "x_text_stats" -> ExtQueries.xTextStatsSql,
-    "x_text_readability" -> ExtQueries.xTextReadabilitySql,
-    "x_text_langid" -> ExtQueries.xTextLangidSql,
-    "x_text_fingerprint" -> ExtQueries.xTextFingerprintSql,
-    "x_text_clean" -> ExtQueries.xTextCleanSql,
-    "x_text_filter" -> ExtQueries.xTextFilterSql,
-    "x_text_pack" -> ExtQueries.xTextPackSql,
-    "x_text_sentiment" -> ExtQueries.xTextSentimentSql,
-    "x_media_features" -> ExtQueries.xMediaFeaturesSql,
-    "x_frame_sample" -> ExtQueries.xFrameSampleSql,
-    "x_media_dedup" -> ExtQueries.xMediaDedupSql,
-    "x_media_neardup" -> ExtQueries.xMediaNeardupSql,
-    "x_dedup_cc" -> ExtQueries.xDedupCcSql,
-    "x_dedup_incremental_cc" -> ExtQueries.xDedupIncrementalCcSql,
-    "x_dedup_cohesion" -> ExtQueries.xDedupCohesionSql,
-    "x_dedup_resolve" -> ExtQueries.xDedupResolveSql,
-    "x_fuzzy_match" -> ExtQueries.xFuzzyMatchSql,
-    "x_fuzzy_classes" -> ExtQueries.xFuzzyClassesSql,
-    "x_fuzzy_expand" -> ExtQueries.xFuzzyExpandSql,
-    "x_text_redact" -> ExtQueries.xTextRedactSql,
-    "x_sample_split" -> ExtQueries.xSampleSplitSql,
-    "x_sample_shuffle" -> ExtQueries.xSampleShuffleSql,
-    "x_sample_stratified" -> ExtQueries.xSampleStratifiedSql,
-    "x_text_vocab" -> ExtQueries.xTextVocabSql,
-    "x_dedup_simhash" -> ExtQueries.xDedupSimhashSql,
-    "x_sim_ivf" -> ExtQueries.xSimIvfSql,
-    "x_sim_pq" -> ExtQueries.xSimPqSql,
-    "x_sample_mixture" -> ExtQueries.xSampleMixtureSql,
-    "x_sample_temperature" -> ExtQueries.xSampleTemperatureSql,
-    "x_decontaminate" -> ExtQueries.xDecontaminateSql,
-    "x_stream_ingest" -> ExtQueries.xStreamIngestSql,
-    "x_curation" -> ExtQueries.xCurationSql,
-    "x_text_repetition" -> ExtQueries.xTextRepetitionSql,
-    "x_text_spans" -> ExtQueries.xTextSpansSql,
-    "x_text_bpe" -> ExtQueries.xTextBpeSql,
-    "x_text_repfilter" -> ExtQueries.xTextRepfilterSql,
-    "x_text_boilerplate" -> ExtQueries.xTextBoilerplateSql,
-    "x_sim_ivfadc" -> ExtQueries.xSimIvfadcSql,
-    "x_text_bpe_encode" -> ExtQueries.xTextBpeEncodeSql,
-    "x_text_fertility" -> ExtQueries.xTextFertilitySql,
-    "x_text_spanremove" -> ExtQueries.xTextSpanremoveSql,
-    "x_text_dupfrac" -> ExtQueries.xTextDupfracSql,
-    "x_text_spancorrupt" -> ExtQueries.xTextSpancorruptSql,
-    "x_text_hashembed" -> ExtQueries.xTextHashembedSql,
-    "x_decontam_stats" -> ExtQueries.xDecontamStatsSql,
-    "x_text_bm25" -> ExtQueries.xTextBm25Sql,
-    "x_dedup_semantic" -> ExtQueries.xDedupSemanticSql,
-    "x_dedup_semantic_lsh" -> ExtQueries.xDedupSemanticLshSql,
-    "x_split_leakage" -> ExtQueries.xSplitLeakageSql,
-    "x_sample_budget" -> ExtQueries.xSampleBudgetSql,
-    "x_text_lmscore" -> ExtQueries.xTextLmscoreSql,
-    "x_text_kneser" -> ExtQueries.xTextKneserSql,
-    "x_mix_weights" -> ExtQueries.xMixWeightsSql,
-    "x_mix_allocate" -> ExtQueries.xMixAllocateSql,
-    "x_text_keywords" -> ExtQueries.xTextKeywordsSql,
-    "x_events_funnel" -> ExtQueries.xEventsFunnelSql,
-    "t_winsorize" -> TransformQueries.tWinsorizeSql,
-    "t_mad_outliers" -> TransformQueries.tMadOutliersSql,
-    "x_dedup_sizes" -> ExtQueries.xDedupClusterSizesSql,
-    "x_text_pmi" -> ExtQueries.xTextPmiSql,
-    "x_text_drift" -> ExtQueries.xTextDriftSql,
-    "x_embed_cov" -> ExtQueries.xEmbedCovSql,
-    "x_text_ppl_buckets" -> ExtQueries.xTextPplBucketsSql,
-    "x_text_ppl_thresh" -> ExtQueries.xTextPplThreshSql,
-    "x_events_retention" -> ExtQueries.xEventsRetentionSql,
-    "x_text_chunks" -> ExtQueries.xTextChunksSql,
-    "x_corpus_report" -> ExtQueries.xCorpusReportSql,
-    "x_events_anomaly" -> ExtQueries.xEventsAnomalySql,
-    "x_sketch_distinct" -> ExtQueries.xSketchDistinctSql,
-    "x_sketch_cms" -> ExtQueries.xSketchCmsSql,
-    "x_vocab_coverage" -> ExtQueries.xVocabCoverageSql,
-    "x_sample_weighted" -> ExtQueries.xSampleWeightedSql,
-    "x_sample_group_weighted" -> ExtQueries.xSampleGroupWeightedSql,
-    "x_dedup_containment" -> ExtQueries.xDedupContainmentSql,
-    "x_text_winnow" -> ExtQueries.xTextWinnowSql,
-    "x_sketch_heavy" -> ExtQueries.xSketchHeavySql,
-    "x_sketch_overlap" -> ExtQueries.xSketchOverlapSql,
-    "x_sketch_hll" -> ExtQueries.xSketchHllSql,
-    "x_sketch_bloom" -> ExtQueries.xSketchBloomSql,
-    "x_sketch_quantiles" -> ExtQueries.xSketchQuantilesSql,
-    "x_sim_recall" -> ExtQueries.xSimRecallSql,
-    "x_sim_mrr" -> ExtQueries.xSimMrrSql,
-    "x_sim_recall_ivf" -> ExtQueries.xSimRecallIvfSql,
-    "x_sim_mrr_ivf" -> ExtQueries.xSimMrrIvfSql,
-    "x_dedup_minhash_est" -> ExtQueries.xDedupMinhashEstSql,
-    "x_dedup_apss" -> ExtQueries.xDedupApssSql,
-    // Every registered query now carries a DuckDB oracle: the last two
-    // rows-only checks were closed by the portable md5-based SimHash
-    // (x_dedup_simhash) and the deterministic sampled-centroid IVF
-    // (x_sim_ivf); the xxhash64 SimHash and k-means IVF variants remain
-    // the library defaults, covered by unit tests.
-    // x_dedup_minhash IS oracled: at threshold 0.8 the fixed-hash LSH
-    // result provably equals the exact all-pairs answer (see its SQL).
-  )
+  /** Name -> builder view of [[catalog]]. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    catalog.map(q => q.name -> q.build).toMap
 
-  /** Dev-loop subset of the registry for [[Verify]] and [[Bench]]:
-    * the comma-separated names in `SPARK_GRAFT_ONLY`, or None (every
-    * query) when it is unset, as in every recorded run. */
-  private[graft] def only: Option[Set[String]] =
-    sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
+  /** Name -> DuckDB twin view of [[catalog]]. */
+  lazy val oracleSql: Map[String, String] =
+    catalog.map(q => q.name -> q.oracle).toMap
+
+  /** The queries that [[Verify]] and [[Bench]] run: the whole catalog, or
+    * the dev-loop subset named in `SPARK_GRAFT_ONLY`, which is unset in
+    * every recorded run. */
+  private[graft] def selected: Seq[Query] =
+    select(sys.env.get("SPARK_GRAFT_ONLY"))
+
+  /** `only` is a comma-separated list of catalog names. A name outside the
+    * catalog, or a list that names nothing, fails: the run would select
+    * nothing for it, and the oracle check would pass on nothing. */
+  private[graft] def select(only: Option[String]): Seq[Query] =
+    only.fold(catalog) { v =>
+      val names = v.split(',').map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = names.filterNot(queries.contains).toSeq.sorted
+      if (names.isEmpty || unknown.nonEmpty)
+        throw new IllegalArgumentException(
+          if (names.isEmpty) s"SPARK_GRAFT_ONLY='$v' names no query"
+          else "SPARK_GRAFT_ONLY names unknown queries: " +
+            unknown.mkString(", "))
+      catalog.filter(q => names(q.name))
+    }
 
   /** Runs one query's body; a non-fatal failure comes back as
     * `"<SimpleName>: <message take 200>"` so the caller records it and

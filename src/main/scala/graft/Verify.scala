@@ -1,40 +1,56 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+import java.util.Comparator
+
+import scala.util.Using
 
 import SparkEntry.{attempt, jsonString}
 
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Driver-run correctness dump: each selected catalog query's result →
+  * parquet, plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    val selected = SparkEntry.selected
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = graft.engine.Engine.session(
       "graft-verify", Some(s"local[$cpus]"), shufflePartitions = cpus)
     new java.io.File(outDir).mkdirs()
-    val only = SparkEntry.only
-    def selected(name: String): Boolean = only.forall(_.contains(name))
-    SparkEntry.queries.filter(kv => selected(kv._1)).foreach {
-      case (name, fn) =>
-        attempt(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name"))
-          .foreach(e => System.err.println(s"[verify] $name failed: $e"))
+    selected.foreach { q =>
+      dump(outDir, q.name)(
+        q.build(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(_))
+        .foreach(e => System.err.println(s"[verify] ${q.name} failed: $e"))
     }
-    val json = SparkEntry.oracleSql.filter(kv => selected(kv._1))
+    val names = selected.map(_.name).toSet
+    val json = SparkEntry.oracleSql.filter(kv => names(kv._1))
       .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
       .mkString("{", ",", "}")
     // A filtered run must never masquerade as the full contract: a stray
     // SPARK_GRAFT_ONLY in a CI/driver env would otherwise dump a partial
     // oracle_sql.json indistinguishable from the complete one. Write the
     // partial dump under a distinct name, drop any full one, and warn.
-    if (only.isDefined)
+    val partial = selected.size < SparkEntry.catalog.size
+    if (partial)
       System.err.println(
         s"[verify] WARNING: SPARK_GRAFT_ONLY is set — dumping PARTIAL " +
-        s"contract (${SparkEntry.oracleSql.count(kv => selected(kv._1))}/" +
-        s"${SparkEntry.oracleSql.size} queries) as oracle_sql.partial.json")
-    writeContract(outDir, json, partial = only.isDefined)
+        s"contract (${selected.size}/${SparkEntry.catalog.size} queries) " +
+        "as oracle_sql.partial.json")
+    writeContract(outDir, json, partial)
     spark.stop()
+  }
+
+  /** Deletes `outDir/name`, then attempts `write` on that path. A query
+    * that fails before its write (at analysis, or in an eager probe or
+    * checkpoint while building) must not leave an earlier run's result
+    * there for selfcheck to read as this run's. */
+  private[graft] def dump(outDir: String, name: String)(
+      write: String => Unit): Option[String] = {
+    val dest = Paths.get(outDir, name)
+    if (Files.exists(dest))
+      Using.resource(Files.walk(dest))(
+        _.sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p)))
+    attempt(write(dest.toString))
   }
 
   /** Writes the oracle contract and deletes the other kind, so that a

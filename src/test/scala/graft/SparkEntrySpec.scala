@@ -2,9 +2,10 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-/** Driver-contract guards: entry() smoke, oracleSql ⊆ queries with
-  * consistent naming (a dangling oracle key would silently skip a check),
-  * the mains' shared per-query helpers, and the set of mains itself. */
+/** Driver-contract guards: entry() smoke, one catalog entry per name with
+  * a twin that the benchmark's checksums were taken under, the
+  * `SPARK_GRAFT_ONLY` selection, the mains' shared per-query helpers, and
+  * the set of mains itself. */
 class SparkEntrySpec extends SparkSpec {
 
   test("entry() returns rows on the sf0.001 fixture (driver smoke contract)") {
@@ -19,15 +20,56 @@ class SparkEntrySpec extends SparkSpec {
   test("every registered query carries an oracle (no rows-only checks left)") {
     val rowsOnly = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     assert(rowsOnly.isEmpty, s"rows-only queries: $rowsOnly")
+    val blank = SparkEntry.catalog.filter(_.oracle.trim.isEmpty).map(_.name)
+    assert(blank.isEmpty, s"blank twins: $blank")
   }
 
   test("query names are unique and stable in count") {
-    // r13 second wave: +x_privacy_ldiv, x_layout_zorder,
-    // x_layout_hilbert, x_layout_zorder3, x_label_vote,
-    // x_label_reliability, x_embed_abtt, x_graph_lpa, x_pack_balanced,
-    // x_embed_moments, x_sample_pps
+    // A Seq keeps a duplicate name that the views' toMap would drop.
+    val names = SparkEntry.catalog.map(_.name)
+    val dups = names.diff(names.distinct)
+    assert(dups.isEmpty, s"names declared twice: $dups")
+    assert(SparkEntry.catalog.size == 194)
     assert(SparkEntry.queries.size == 194)
     assert(SparkEntry.oracleSql.size == 194)
+  }
+
+  test("every perfbench checksum names a catalog query with the same twin") {
+    // query_mix refuses a query whose twin's sha256 differs from the one
+    // its checksum was taken under; changing a twin needs a re-taken
+    // perfbench/checksums.json.
+    import scala.jdk.CollectionConverters._
+    val recorded = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(Files.readString(Paths.get("perfbench/checksums.json")))
+      .get("queries").properties().asScala
+      .map(e => e.getKey -> e.getValue.get("oracle_sql_sha256").asText)
+      .toSeq
+    assert(recorded.size == 194)
+    def sha256(s: String): String =
+      java.security.MessageDigest.getInstance("SHA-256")
+        .digest(s.getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
+    val bad = recorded.collect {
+      case (n, sha) if !SparkEntry.oracleSql.get(n).map(sha256).contains(sha)
+        => n
+    }
+    assert(bad.isEmpty, s"missing from the catalog or twin changed: $bad")
+  }
+
+  test("both bench baseline tables key only catalog names") {
+    val names = SparkEntry.queries.keySet
+    assert((BenchBaseline.local.keySet -- names).isEmpty)
+    assert((BenchBaselineFrozen.local.keySet -- names).isEmpty)
+  }
+
+  test("SPARK_GRAFT_ONLY selects in catalog order and refuses unknown names") {
+    assert(SparkEntry.select(None) == SparkEntry.catalog)
+    assert(SparkEntry.select(Some(" x_dedup_exact,,q1_pricing_summary "))
+      .map(_.name) == Seq("q1_pricing_summary", "x_dedup_exact"))
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.select(Some("q1_pricing_summary,q1,x_dedup_exct"))
+    }
+    assert(e.getMessage.endsWith("unknown queries: q1, x_dedup_exct"))
+    intercept[IllegalArgumentException](SparkEntry.select(Some(" , ")))
   }
 
   test("attempt records a non-fatal failure and lets a fatal one through") {

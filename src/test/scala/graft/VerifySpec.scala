@@ -4,9 +4,9 @@ import java.nio.file.{Files, Path}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** `Verify` writes one oracle contract per directory: a partial
-  * (`SPARK_GRAFT_ONLY`) dump must not sit next to a full one from an
-  * earlier run, which selfcheck would read instead. */
+/** `Verify` leaves nothing from an earlier run for selfcheck to read as
+  * this run's: not a query's old result when it fails before its write,
+  * and not a full contract next to a partial (`SPARK_GRAFT_ONLY`) one. */
 class VerifySpec extends AnyFunSuite {
 
   private def contracts(dir: Path): Set[String] =
@@ -20,6 +20,19 @@ class VerifySpec extends AnyFunSuite {
     assert(contracts(dir) == Set("oracle_sql.partial.json"))
     assert(Files.readString(dir.resolve("oracle_sql.partial.json")) ==
       """{"q1": "y"}""")
+  }
+
+  test("a query that fails before its write leaves no earlier result") {
+    val dir = Files.createTempDirectory("graft-verify")
+    val stale = Files.createDirectories(dir.resolve("q1/part"))
+    Files.writeString(stale.resolve("x.parquet"), "old rows")
+    val failed = Verify.dump(dir.toString, "q1")(_ =>
+      throw new IllegalStateException("analysis failed"))
+    assert(failed == Some("IllegalStateException: analysis failed"))
+    assert(!Files.exists(dir.resolve("q1")))
+    assert(Verify.dump(dir.toString, "q2")(p =>
+      Files.writeString(Path.of(p), "new rows")) == None)
+    assert(Files.readString(dir.resolve("q2")) == "new rows")
   }
 
   test("a full contract replaces a stale partial one") {
