@@ -6,6 +6,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.spark.{SparkConf, SparkEnv}
 import org.apache.spark.serializer.Serializer
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Session bootstrap + table registry + SQL facade.
   *
@@ -340,25 +341,80 @@ object Engine {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Parquet schema per (session, table path). Inferring one runs a
-    * footer-reading Spark job; a DML rewrite of the path drops the entry
-    * through [[SessionCaches.invalidate]]. */
-  private val schemas = SessionCaches.register(
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), org.apache.spark.sql.types.StructType]())
+  /** Read parquet with the schema taken from one footer on the driver.
+    * `spark.read.parquet` infers the schema with a Spark job
+    * (`mergeSchemasInParallel`), and that job's closure carries the whole
+    * Hadoop conf; a footer read runs none. The footer is the one Spark's
+    * inference would read (see [[footerSchema]]), so the frame is the
+    * same. Without one (a missing path, an empty directory, a glob, an
+    * unreadable footer) the read is plain `spark.read.parquet`, which
+    * fails as it always did. */
+  def readParquet(spark: SparkSession, paths: String*): DataFrame =
+    footerSchema(spark, paths) match {
+      case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
+      case None => spark.read.parquet(paths: _*)
+    }
+
+  /** The data schema Spark infers for `paths` (without `mergeSchema`),
+    * read from one footer: `_common_metadata`, else `_metadata`, else the
+    * first data file by path string, among the files Spark's own file
+    * index lists (hidden names skipped, partition directories walked).
+    * The footer goes through `ParquetFileFormat.readSchemaFromFooter`
+    * with the converter `mergeSchemasInParallel` builds, so the Spark
+    * schema key and the nanos, NTZ and int96 confs act as they do in
+    * inference. Partition columns are not in a footer; Spark adds them
+    * from the directory names as before. None when there is no file to
+    * read: a missing path lists empty. */
+  private[graft] def footerSchema(spark: SparkSession, paths: Seq[String])
+      : Option[StructType] = {
+    import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    if (paths.isEmpty || paths.exists(_.exists(GlobChars.contains(_))))
+      return None
+    try {
+      val index = new InMemoryFileIndex(spark,
+        paths.map(new org.apache.hadoop.fs.Path(_)), Map.empty, None)
+      val (summaries, data) = index.allFiles().sortBy(_.getPath.toString)
+        .partition(f => Summaries.contains(f.getPath.getName))
+      Summaries.flatMap(n => summaries.find(_.getPath.getName == n))
+        .headOption.orElse(data.headOption)
+        .map { f =>
+          val sql = spark.sessionState.conf
+          val footer = new org.apache.parquet.hadoop.Footer(f.getPath,
+            ParquetFooterReader.readFooter(
+              org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f,
+                spark.sessionState.newHadoopConf()),
+              org.apache.parquet.format.converter.ParquetMetadataConverter
+                .SKIP_ROW_GROUPS))
+          ParquetFileFormat.readSchemaFromFooter(footer,
+            new ParquetToSparkSchemaConverter(
+              assumeBinaryIsString = sql.isParquetBinaryAsString,
+              assumeInt96IsTimestamp = sql.isParquetINT96AsTimestamp,
+              inferTimestampNTZ = sql.parquetInferTimestampNTZEnabled,
+              nanosAsLong = sql.legacyParquetNanosAsLong,
+              respectUnknownTypeAnnotation =
+                sql.parquetReaderRespectUnknownTypeAnnotation))
+        }
+    } catch {
+      // Spark's own read then infers, and fails, as it always did.
+      case NonFatal(_) => None
+    }
+  }
+
+  /** Parquet's summary files, in the order Spark's inference prefers. */
+  private val Summaries = Seq("_common_metadata", "_metadata")
+
+  /** Hadoop's glob metacharacters (`GlobPattern`). */
+  private val GlobChars: Set[Char] = "{}[]*?\\".toSet
 
   /** Read one fixture table from a scale-factor directory. Nanosecond
     * parquet timestamps (read as long via `nanosAsLong`) are normalized to
     * Spark microsecond timestamps with integer division — no double
     * round-trip, matching DuckDB's `CAST(ts AS TIMESTAMP)` truncation.
-    * The schema is inferred once per session and path, so a repeated
-    * read plans without a job.
     */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
-    val schema = SessionCaches.memo(schemas, (spark, path), counted = false)(
-      spark.read.parquet(path).schema)
-    val df = spark.read.schema(schema).parquet(path)
+    val df = readParquet(spark, s"$dir/$name.parquet")
     if (name == "events" &&
         df.schema("ts").dataType == org.apache.spark.sql.types.LongType)
       df.withColumn("ts",

@@ -45,23 +45,19 @@ object SessionCaches {
     * serialize unrelated fills). A lost race recomputes and discards —
     * idempotent, the maps hold pure functions of immutable inputs. A
     * fill that an [[invalidate]] overlapped may have read the replaced
-    * files: it answers its caller but is withdrawn from the map.
-    * `counted = false` keeps metadata memos (table schemas) out of
-    * [[fills]]/[[hits]], which count shared relations only. */
+    * files: it answers its caller but is withdrawn from the map. */
   def memo[V](m: java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), V], k: (SparkSession, String),
-      counted: Boolean = true)(compute: => V): V = {
-    def tick(c: java.util.concurrent.atomic.AtomicLong): Unit =
-      if (counted) c.incrementAndGet()
+      (SparkSession, String), V], k: (SparkSession, String))
+      (compute: => V): V = {
     val hit = m.get(k)
-    if (hit != null) { tick(hitsCtr); hit }
+    if (hit != null) { hitsCtr.incrementAndGet(); hit }
     else {
       val seen = epoch.get()
       val v = compute
       val prev = m.putIfAbsent(k, v)
       if (epoch.get() != seen) m.remove(k, v)
-      if (prev != null) { tick(hitsCtr); prev }
-      else { tick(fillsCtr); v }
+      if (prev != null) { hitsCtr.incrementAndGet(); prev }
+      else { fillsCtr.incrementAndGet(); v }
     }
   }
 

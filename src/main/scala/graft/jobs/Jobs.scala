@@ -224,7 +224,7 @@ object IncrementalDedupJob {
     def readOr(path: String, fallback: => DataFrame): DataFrame = {
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) spark.read.parquet(path) else fallback
+      if (fs.exists(p)) Engine.readParquet(spark, path) else fallback
     }
     val histIndex = readOr(indexPath, DedupOps.buildNearDupIndex(
       batch.limit(0), idCol, textCol, shingleN, numPerm))
@@ -297,7 +297,7 @@ object AnnIndexJob {
     val key = (dim, nCentroids, m, nCodewords, corpusVersion)
     val persisted =
       fs.exists(new org.apache.hadoop.fs.Path(metaPath)) && {
-        val mr = spark.read.parquet(metaPath).collect()
+        val mr = Engine.readParquet(spark, metaPath).collect()
         mr.length == 1 && {
           val r = mr(0)
           (r.getAs[Int]("dim"), r.getAs[Int]("n_centroids"),
@@ -306,14 +306,14 @@ object AnnIndexJob {
         }
       }
     if (persisted) {
-      val quant = spark.read.parquet(qPath)
+      val quant = Engine.readParquet(spark, qPath)
         .orderBy(col("role"), col("pos")).collect()
         .map(r => (r.getAs[String]("role"),
           r.getSeq[Double](r.fieldIndex("vec")).toIndexedSeq))
       val cents = quant.filter(_._1 == "centroid").map(_._2).toSeq
       val cws = quant.filter(_._1 == "codeword").map(_._2).toSeq
       (AnnIndexState(dim, nCentroids, m, nCodewords, cents, cws,
-        spark.read.parquet(cPath)), true)
+        Engine.readParquet(spark, cPath)), true)
     } else {
       // Codes WITHOUT meta = a crash inside a previous append's meta
       // window. Training here would rebuild from whatever corpus THIS
@@ -343,7 +343,7 @@ object AnnIndexJob {
         .coalesce(1).write.mode("overwrite").parquet(metaPath)
       // Return the PERSISTED codes (checkpoint-backed by the write):
       // searches replay a scan, not the encode projection.
-      (st.copy(codes = spark.read.parquet(cPath)), false)
+      (st.copy(codes = Engine.readParquet(spark, cPath)), false)
     }
   }
 
@@ -372,21 +372,21 @@ object AnnIndexJob {
     require(fs.exists(new org.apache.hadoop.fs.Path(metaPath)),
       s"AnnIndexJob.appendBatch: no trained state at $stateDir — " +
         "run loadOrTrain first")
-    val mr = spark.read.parquet(metaPath).collect()
+    val mr = Engine.readParquet(spark, metaPath).collect()
     require(mr.length == 1 &&
       (mr(0).getAs[Int]("dim"), mr(0).getAs[Int]("n_centroids"),
         mr(0).getAs[Int]("m"), mr(0).getAs[Int]("n_codewords")) ==
         ((dim, nCentroids, m, nCodewords)),
       s"AnnIndexJob.appendBatch: param tuple mismatch at $stateDir — " +
         "appending would mix quantizers; retrain via loadOrTrain")
-    val quant = spark.read.parquet(qPath)
+    val quant = Engine.readParquet(spark, qPath)
       .orderBy(col("role"), col("pos")).collect()
       .map(r => (r.getAs[String]("role"),
         r.getSeq[Double](r.fieldIndex("vec")).toIndexedSeq))
     val st = AnnIndexState(dim, nCentroids, m, nCodewords,
       quant.filter(_._1 == "centroid").map(_._2).toSeq,
       quant.filter(_._1 == "codeword").map(_._2).toSeq,
-      spark.read.parquet(cPath))
+      Engine.readParquet(spark, cPath))
     val fresh = Engine.materialize(
       batch.select(col(idCol), col(vecCol))
         .join(st.codes.select(col("neighbor_id").as(idCol)),
@@ -421,7 +421,7 @@ object AnnIndexJob {
       }
     }
     Engine.release(fresh)
-    (st.copy(codes = spark.read.parquet(cPath)), appended)
+    (st.copy(codes = Engine.readParquet(spark, cPath)), appended)
   }
 
   def run(spark: SparkSession, args: Array[String]): Unit = {
@@ -936,7 +936,7 @@ object StreamIngestJob {
       benchGramHashes, blocked, testFrac, validFrac,
       lmModel, maxMeanNll, dedupIndex, nllBand, dropNllTail, nbModel,
       nearDupIndex)
-    // writeParquet's empty guard (Engine.isEmpty) skips the write and
+    // writeParquet's empty guard skips the write and
     // its batch_id= partition for a batch with no rule breakers
     Sinks.writeParquet(bad, s"$quarantineDir/batch_id=$batchId",
       "replace")

@@ -3,6 +3,7 @@ package graft.sinks
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.engine.Engine
 
 /** K10 — native UPDATE/DELETE surface over parquet table paths, replacing
   * the reference's DML passthrough (`core/utils/db_core.py:187-200`, which
@@ -53,7 +54,7 @@ object Dml {
   def updateWithStats(spark: SparkSession, tablePath: String,
                       assignments: Map[String, Column],
                       cond: Column): DmlFileStats = {
-    val df = spark.read.parquet(tablePath)
+    val df = Engine.readParquet(spark, tablePath)
     def mutate(in: DataFrame): DataFrame =
       assignments.foldLeft(in) { case (acc, (name, value)) =>
         acc.withColumn(name, when(cond, value).otherwise(col(name)))
@@ -83,7 +84,7 @@ object Dml {
   /** [[delete]] with file-granularity stats. */
   def deleteWithStats(spark: SparkSession, tablePath: String,
                       cond: Column): DmlFileStats = {
-    val df = spark.read.parquet(tablePath)
+    val df = Engine.readParquet(spark, tablePath)
     val stats = flatTableFiles(spark, tablePath) match {
       case Some(all) =>
         mutateFiles(spark, tablePath, df, cond, all)(
@@ -155,7 +156,7 @@ object Dml {
         s"table listing (${unmatched.take(3).mkString(", ")} …) — " +
         "aborting before any write")
     val kept = rewriteSomeSwap(spark, tablePath, all, touched,
-      mutate(spark.read.parquet(touchedUris: _*)))
+      mutate(Engine.readParquet(spark, touchedUris: _*)))
     DmlFileStats(affected, all.size, touched.size, kept)
   }
 
@@ -284,7 +285,7 @@ object Dml {
                                cond: Column, assignedCols: Set[String])
                               (mutate: DataFrame => DataFrame)
       : DmlFileStats = {
-    val df = spark.read.parquet(tablePath)
+    val df = Engine.readParquet(spark, tablePath)
     // Qualified table root: input_file_name() yields fully-qualified URIs
     // (file:/...), and partition columns must be parsed from the path
     // RELATIVE to the root — an ancestor directory that happens to

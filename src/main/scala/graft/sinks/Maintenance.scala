@@ -2,6 +2,7 @@ package graft.sinks
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.engine.Engine
 
 /** Table-maintenance operators — the jobs a 100 TB parquet estate needs
   * on a schedule, independent of any single query:
@@ -40,7 +41,7 @@ object Maintenance {
     } else {
       val bytes = fs.getContentSummary(p).getLength
       val nFiles = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-      val df = spark.read.parquet(path)
+      val df = Engine.readParquet(spark, path)
       rewriteSwap(spark, path, df.repartition(nFiles))
       nFiles
     }

@@ -32,7 +32,7 @@ object Sinks {
   def writeParquet(df: DataFrame, path: String, behavior: String = "replace",
                    compression: String = "snappy",
                    partitionBy: Seq[String] = Nil): Boolean =
-    guarded(df) {
+    guarded(df) { df =>
       val w = df.write.mode(saveMode(behavior))
         .option("compression", compression)
       // Hive-style directory partitioning: the 100 TB layout primitive —
@@ -49,18 +49,18 @@ object Sinks {
   def writeCsv(df: DataFrame, path: String, behavior: String = "replace",
                delimiter: String = ","): Boolean =
     guarded(df) {
-      df.write.mode(saveMode(behavior))
+      _.write.mode(saveMode(behavior))
         .option("delimiter", delimiter).option("header", "true").csv(path)
     }
 
   /** K4 — JSON write; Spark emits UTF-8 natively, matching
     * `force_ascii=False` (`data_core.py:85`). */
   def writeJson(df: DataFrame, path: String, behavior: String = "replace"): Boolean =
-    guarded(df) { df.write.mode(saveMode(behavior)).json(path) }
+    guarded(df) { _.write.mode(saveMode(behavior)).json(path) }
 
   /** K5 — text write: one string column, line per row (`data_core.py:98-105`). */
   def writeText(df: DataFrame, path: String, behavior: String = "replace"): Boolean =
-    guarded(df) { df.write.mode(saveMode(behavior)).text(path) }
+    guarded(df) { _.write.mode(saveMode(behavior)).text(path) }
 
   /** K7 — "load a DataFrame into a destination table": sanitize column
     * names + nulls exactly like the reference load path
@@ -83,18 +83,21 @@ object Sinks {
   def writeJdbc(df: DataFrame, url: String, table: String,
                 behavior: String = "replace",
                 options: Map[String, String] = Map.empty): Boolean =
-    guarded(df) {
+    guarded(df) { df =>
       val props = new java.util.Properties()
       options.foreach { case (k, v) => props.setProperty(k, v) }
       df.write.mode(saveMode(behavior)).jdbc(url, table, props)
     }
 
-  /** Empty-input guard (`db_core.py:99-101`): skip the action for an empty
-    * frame. The probe ([[graft.engine.Engine.isEmpty]]) computes the
-    * frame's partitions one at a time until it finds a row: one task on
-    * a non-empty first partition, every partition (in a few jobs, no
-    * shuffle) on an empty frame. The write recomputes the frame; the
-    * probe is not cached. */
-  private def guarded(df: DataFrame)(write: => Unit): Boolean =
-    if (graft.engine.Engine.isEmpty(df)) false else { write; true }
+  /** Empty-input guard (`db_core.py:99-101`): skip the write for an
+    * empty frame. The frame's plan runs once
+    * ([[org.apache.spark.sql.graft.RunOnce]]): its upstream stages run,
+    * a probe computes the final stage's partitions one at a time until
+    * it finds a row, and the write reads the same computed RDD, so it
+    * skips the upstream stages. */
+  private def guarded(df: DataFrame)(write: DataFrame => Unit): Boolean =
+    org.apache.spark.sql.graft.RunOnce.nonEmpty(df) match {
+      case Some(computed) => write(computed); true
+      case None => false
+    }
 }

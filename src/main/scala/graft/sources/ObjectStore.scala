@@ -135,5 +135,5 @@ class ObjectStore(root: String,
     * reference's empty-frame fallback compose
     * [[Sources.readParquetOrEmpty]]. */
   def readParquet(spark: SparkSession, name: String): DataFrame =
-    spark.read.parquet(resolve(name).toString)
+    graft.engine.Engine.readParquet(spark, resolve(name).toString)
 }

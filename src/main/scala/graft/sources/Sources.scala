@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import graft.engine.Engine
 import graft.transform.Sanitize
 
 /** S1-S5 file sources + the loose-schema helpers (SURVEY §2.1, §2.3 P1).
@@ -47,12 +48,12 @@ object Sources {
 
   /** S3 — parquet scan (`data_core.py:73-79`). */
   def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Engine.readParquet(spark, path)
 
   /** S4 — parquet-or-empty: a missing object is an EMPTY frame, not an
     * error (`storage.py:181-189` returns `pd.DataFrame()` on missing). */
   def readParquetOrEmpty(spark: SparkSession, path: String): DataFrame =
-    try spark.read.parquet(path)
+    try Engine.readParquet(spark, path)
     catch { case _: AnalysisException => spark.emptyDataFrame }
 
   /** S5 — text scan, line per row (`data_core.py:89-96`). */

@@ -91,4 +91,40 @@ class SinksSpec extends SparkSpec {
       scan)
     assert(q.select("id").collect().map(_.getLong(0)).toSeq == Seq(3L))
   }
+
+  test("a guarded write runs the frame's shuffle once: the write skips " +
+      "the shuffle-map stage the probe ran") {
+    import org.apache.spark.graft.JobBudget
+    val dir = tmp()
+    // the filter on the count keeps the shuffle in any emptiness probe
+    // (a group-only aggregate under `limit 1` would lose it)
+    def shuffled = spark.range(0, 1000, 1, 4)
+      .groupBy((col("id") % 10).as("k")).count().where(col("count") > 0)
+    Seq[(String, String => Boolean)](
+      "parquet" -> (p => Sinks.writeParquet(shuffled, p)),
+      "csv" -> (p => Sinks.writeCsv(shuffled, p))).foreach {
+      case (name, write) =>
+        val (wrote, c) = JobBudget.measure(spark)(write(s"$dir/$name"))
+        assert(wrote, name)
+        assert(c.shuffleStages == 1, s"$name: $c")
+    }
+    assert(spark.read.parquet(s"$dir/parquet").count() == 10)
+    assert(Sources.readCsv(spark, s"$dir/csv").count() == 10)
+  }
+
+  test("an empty frame under replace returns false and leaves the " +
+      "existing table byte-identical") {
+    import spark.implicits._
+    val dir = tmp() + "/t"
+    Sinks.writeParquet(Seq((1, "a"), (2, "b")).toDF("k", "v"), dir)
+    def snapshot: Map[String, Seq[Byte]] =
+      new java.io.File(dir).listFiles().map(f =>
+        f.getName -> Files.readAllBytes(f.toPath).toSeq).toMap
+    val before = snapshot
+    val empty = spark.range(0, 100, 1, 4).where(col("id") < 0)
+      .groupBy(col("id").as("k")).count()
+    assert(!Sinks.writeParquet(empty, dir, "replace"))
+    assert(!Sinks.writeCsv(empty, dir, "replace"))
+    assert(snapshot == before)
+  }
 }
