@@ -764,9 +764,9 @@ object ExtQueries {
     // n_subwords rides the same per-distinct-text fan-out as the
     // quality columns (the interpreted aggregate HOF is the row's
     // dominant cost — it must not run per clone copy).
-    TextOps.fanOutPerText(
-        graft.engine.Engine.spread(t(s, dir, "documents")), "text")(tc =>
-        TextOps.qualityMetricsCols(tc) :+
+    TextOps.rawTextClasses(
+        graft.engine.Engine.spread(t(s, dir, "documents")), "text")
+      .derive(tc => TextOps.qualityMetricsCols(tc) :+
           ("n_subwords" -> TextOps.subwordCount(tc)))
       .select(col("doc_id"), col("n_chars"), col("n_tokens"),
         col("n_subwords"), col("alnum_ratio"), col("avg_token_len"),
@@ -5341,9 +5341,9 @@ object ExtQueries {
     // the exact side is a distinct-count — duplicate-blind, so the
     // gram explode also runs over DISTINCT (source, text) pairs
     val exact = graft.ext.SketchOps
-      .distinctGroupTexts(docs, "source", "text")
+      .groupTextClasses(docs, "source", "text").relation(col("source"))
       .select(col("source"),
-        explode(coalesce(TextOps.shingles(TextOps.tokens(col("text")), 3),
+        explode(coalesce(TextOps.shingles(TextOps.tokens(col("_t")), 3),
           array().cast("array<string>"))).as("_t"))
       .select(col("source"), graft.ext.SketchOps.h60(col("_t")).as("_h"))
       .distinct()
@@ -5676,9 +5676,10 @@ object ExtQueries {
   // ---------------------------------------------------------------------
   def xSampleGroupWeighted(s: SparkSession, dir: String): DataFrame = {
     // weight = tokenCount(text) is a pure text function — ride the
-    // fanOutPerText class tier so the tokenizer runs once per distinct
-    // text on clone-heavy corpora (values identical either way).
-    val d = TextOps.fanOutPerText(t(s, dir, "documents"), "text")(tc =>
+    // raw-text class tier so the tokenizer runs once per distinct text
+    // on clone-heavy corpora (values identical either way).
+    val d = TextOps.rawTextClasses(t(s, dir, "documents"), "text")
+      .derive(tc =>
         Seq("weight" -> (TextOps.tokenCount(tc).cast("long") + 1)))
       .select(col("doc_id"), col("source"), col("weight"))
     graft.transform.Split.weightedSamplePerGroup(d, "source", "doc_id",
@@ -5791,9 +5792,9 @@ object ExtQueries {
     // DISTINCT (source, text) pairs on clone-heavy corpora (same tier
     // rule as the sketch builds themselves).
     val gsrc = graft.ext.SketchOps
-      .distinctGroupTexts(docs, "source", "text")
+      .groupTextClasses(docs, "source", "text").relation(col("source"))
       .select(col("source"),
-        explode(coalesce(TextOps.shingles(TextOps.tokens(col("text")), 3),
+        explode(coalesce(TextOps.shingles(TextOps.tokens(col("_t")), 3),
           array().cast("array<string>"))).as("gram"))
       .groupBy(col("gram"))
       .agg(collect_set(col("source")).as("_srcs"))

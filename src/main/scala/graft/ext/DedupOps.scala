@@ -157,11 +157,13 @@ object DedupOps {
     // size, and the min never cared about multiplicity. The pair
     // stage's cost drops from Σ|cluster|² to Σ|distinct classes|².
     val base = graft.engine.Engine.spread(df)
-    val probed = !base.isStreaming &&
-      graft.engine.GrainProbe.dupTier(
-        base, TextOps.fingerprint(col(textCol)))
+    val tier = graft.engine.GrainProbe.classes(base,
+      coalesce(TextOps.fingerprint(col(textCol)), lit(" null")),
+      col(textCol), col(idCol))
+    // The pair algebra differs by grain (member pairs vs class-pair
+    // bundles), so the two plans stay separate.
     val perComp =
-      if (!probed) {
+      if (!tier.rep) {
         val sh = shingleSets(base, idCol, textCol, n)
           .join(member.select(col("id").as("_id"), col("component")),
             Seq("_id"))
@@ -178,16 +180,11 @@ object DedupOps {
             min(col("j_ppm")).as("min_jaccard_ppm"),
             expr("sum(j_ppm) div count(1)").as("avg_jaccard_ppm"))
       } else {
-        val key = coalesce(TextOps.fingerprint(col(textCol)),
-          lit(" null"))
-        val ids = base.select(col(idCol).as("_id"), key.as("_k"))
-        val classes = base.groupBy(key.as("_k"))
-          .agg(min(col(textCol)).as("_t"))
         val shC = shingleSets(
-          classes.select(col("_k"), col("_t")), "_k", "_t", n)
+          tier.relation().select(col("_k"), col("_t")), "_k", "_t", n)
           .select(col("_id").as("_k"), col("_sh"))
         val node = member.select(col("id").as("_id"), col("component"))
-          .join(ids, Seq("_id"))
+          .join(tier.keys("_id"), Seq("_id"))
           .groupBy(col("component"), col("_k"))
           .agg(count(lit(1)).as("_m"))
           .join(shC, Seq("_k"))
@@ -209,7 +206,7 @@ object DedupOps {
           .agg(min(col("j_ppm")).as("min_jaccard_ppm"),
             sum(col("_w") * col("j_ppm")).as("_sumj"))
       }
-    if (!probed)
+    if (!tier.rep)
       perComp.join(multi, Seq("component"))
         .select(col("component"), col("n_members"), col("n_pairs"),
           col("min_jaccard_ppm"), col("avg_jaccard_ppm"))
@@ -725,40 +722,14 @@ object DedupOps {
       .distinct()
     // Contamination is a pure text predicate, so on clone-heavy corpora
     // the gram explode + benchmark probe runs once per DISTINCT raw
-    // text ([[TextOps.fanOutPerText]]'s tier rule) and verdicts fan out
-    // through one key semi-join; row grain otherwise.
-    textClassKeyed(base, idCol, textCol) match {
-      case Some((ids, classes)) =>
-        val hitClasses = classes.select(col("_k"),
-            explode(TextOps.shingles(TextOps.tokens(col("_t")), n))
-              .as("_g"))
-          .join(broadcast(bg), Seq("_g"), "left_semi")
-          .select(col("_k")).distinct()
-        ids.join(hitClasses, Seq("_k"), "left_semi")
-          .select(col("_id")).distinct()
-      case None =>
-        val cg = base.select(col(idCol).as("_id"),
-          explode(TextOps.shingles(TextOps.tokens(col(textCol)), n))
-            .as("_g"))
-        cg.join(broadcast(bg), Seq("_g"), "left_semi")
-          .select(col("_id")).distinct()
-    }
-  }
-
-  /** Rep-tier decision + relations shared by the contamination family:
-    * Some((ids (_id, _k), classes (_k, _t))) when the corpus is
-    * clone-heavy enough (≥4× dup factor, the [[TextOps.fanOutPerText]]
-    * probe) for per-class evaluation to win; None → caller stays at
-    * row grain. Key = raw-md5 class with a null sentinel. */
-  private def textClassKeyed(base: DataFrame, idCol: String,
-                             textCol: String)
-      : Option[(DataFrame, DataFrame)] = {
-    if (base.isStreaming) return None
-    val key = coalesce(md5(col(textCol)), lit(" null"))
-    if (!graft.engine.GrainProbe.dupTier(base, key)) None
-    else Some((
-      base.select(col(idCol).as("_id"), key.as("_k")),
-      base.groupBy(key.as("_k")).agg(min(col(textCol)).as("_t"))))
+    // text and verdicts fan out through one key join.
+    val tier = TextOps.rawTextClasses(base, textCol, idCol)
+    val hits = tier.relation()
+      .select(col("_k"),
+        explode(TextOps.shingles(TextOps.tokens(col("_t")), n)).as("_g"))
+      .join(broadcast(bg), Seq("_g"), "left_semi")
+      .select(col("_k")).distinct()
+    tier.fanOut(hits, "_id").distinct()
   }
 
   /** Drop contaminated rows ([[contaminatedIds]]) from the corpus. */
@@ -792,21 +763,16 @@ object DedupOps {
         .groupBy(col("_k"))
         .agg(count(lit(1)).as("n_grams"),
           count(col("_hit")).as("n_overlap"))
-    // Same rep-tier rule as [[contaminatedIds]]: the counts are pure
+    // Same class tier as [[contaminatedIds]]: the counts are pure
     // text functions — per distinct raw text on clone-heavy corpora,
     // fanned out through one inner key join (gram-less classes produce
     // no aggregate row, so their members stay absent, matching the row
     // grain's explode semantics).
-    val per = textClassKeyed(base, idCol, textCol) match {
-      case Some((ids, classes)) => ids.join(gramAggs(classes), Seq("_k"))
-      case None =>
-        gramAggs(base.select(col(idCol).as("_k"),
-            col(textCol).as("_t")))
-          .withColumn("_id", col("_k"))
-    }
-    per.select(col("_id").as(idCol), col("n_grams"), col("n_overlap"),
-      (col("n_overlap").cast("double") / col("n_grams"))
-        .as("overlap_frac"))
+    val tier = TextOps.rawTextClasses(base, textCol, idCol)
+    tier.fanOut(gramAggs(tier.relation()), "_id")
+      .select(col("_id").as(idCol), col("n_grams"), col("n_overlap"),
+        (col("n_overlap").cast("double") / col("n_grams"))
+          .as("overlap_frac"))
   }
 
   /** The benchmark's distinct hashed n-gram set (native codegen'd

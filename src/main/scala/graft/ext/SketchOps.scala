@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.engine.{GrainProbe, TextClasses}
+
 /** Mergeable corpus sketches — the cardinality / frequency / coverage
   * summaries a 100 TB pipeline computes where the exact plan's shuffle
   * would be corpus- or vocabulary-sized. Every sketch here is
@@ -79,37 +81,28 @@ object SketchOps {
   def kmvMins(df0: DataFrame, groupCol: String, textCol: String,
               k: Int, gramN: Int): DataFrame = {
     require(k >= 2, s"kmvMins: k must be >= 2: $k")
-    val df = distinctGroupTexts(
-      graft.engine.Engine.spread(df0), groupCol, textCol)
-    df.select(col(groupCol),
-        explode(units(col(textCol), gramN)).as("_t"))
-      .select(col(groupCol), h60(col("_t")).as("_h"))
+    groupTextClasses(graft.engine.Engine.spread(df0), groupCol, textCol)
+      .relation(col(groupCol))
+      .select(col(groupCol), explode(units(col("_t"), gramN)).as("_u"))
+      .select(col(groupCol), h60(col("_u")).as("_h"))
       .groupBy(col(groupCol))
       .agg(call_function("graft_kmin", col("_h"), lit(k)).as("_mins"))
   }
 
-  /** The (group, text) relation reduced to DISTINCT pairs when clone
-    * mass dominates (same ≥4× HLL probe as [[weightedTexts]];
-    * streaming frames pass through) — the pre-explode tier of every
-    * DUPLICATE-BLIND sketch: KMV keeps k distinct minima, HLL takes a
+  /** The class tier of every DUPLICATE-BLIND sketch, keyed on the
+    * (group, raw text) pair: KMV keeps k distinct minima, HLL takes a
     * register max, Bloom bit_ors masks, so identical (group, text)
-    * rows contribute identical state and the dedupe is a semantic
-    * no-op while the unit explode — the dominant cost (r16 sweep:
-    * 86–158 s member-grain at sf10 on a 100×-clone corpus) — shrinks
-    * to distinct mass. Instance-counting sketches (CMS, heavy
-    * hitters) must NOT use this; they weight by copy count instead
-    * ([[weightedTexts]]). */
-  private[graft] def distinctGroupTexts(df: DataFrame, groupCol: String,
-                                        textCol: String): DataFrame = {
-    val pairs = df.select(col(groupCol), col(textCol))
-    if (df.isStreaming) pairs
-    else {
-      val key = concat_ws("\u0000", col(groupCol).cast("string"),
-        md5(col(textCol)))
-      if (!graft.engine.GrainProbe.dupTier(df, key)) pairs
-      else pairs.distinct()
-    }
-  }
+    * rows contribute identical state, and the relation
+    * (`.relation(col(groupCol))`: one row per distinct pair at class
+    * grain) is a semantic no-op while the unit explode — the dominant
+    * cost (r16 sweep: 86–158 s member-grain at sf10 on a 100×-clone
+    * corpus) — shrinks to distinct mass. Instance-counting sketches
+    * (CMS, heavy hitters) must NOT use this; they weight by copy count
+    * instead ([[textClasses]]). */
+  private[graft] def groupTextClasses(df: DataFrame, groupCol: String,
+                                      textCol: String): TextClasses =
+    GrainProbe.classes(df, concat_ws("\u0000",
+      col(groupCol).cast("string"), md5(col(textCol))), col(textCol))
 
   /** KMV estimate from a k-min array: exact when under-full (the
     * sketch IS the distinct set), `(k−1)·2⁶⁰/h₍ₖ₎` when full. */
@@ -167,35 +160,17 @@ object SketchOps {
     * task, only the tiny grid crosses the network, and the sketch
     * never holds the vocabulary. Returns the grid (`j`, `cell`,
     * `cnt`); probe with [[cmsEstimate]]. */
-  /** The corpus as a (copy-weight, text) relation at DISTINCT-text
-    * grain when clone mass dominates, row grain otherwise — the
-    * fingerprint tier for token/gram-INSTANCE counting sketches:
-    * instance counts are pure per-text functions, so
-    * Σ_rows count_g(text) = Σ_classes m·count_g(text), exactly, while
-    * the explode/hash pipeline (the dominant cost — the sf10 sweep
-    * measured cms at 324x and heavy hitters at 238x their sf0.1 time
-    * on a 100x-clone corpus) scales with distinct mass. The decision
-    * is one cheap fingerprint-count scan, and the rep tier only fires
-    * at ≥4x dup factor — shuffling distinct TEXTS must stay small
-    * relative to the explode it saves, and on a dup-light corpus the
-    * row-grain path keeps today's zero-text-shuffle shape. Streaming
-    * frames always take row grain (no extra action per micro-batch;
-    * the monitors' micro-batches are batch-sized anyway). */
-  private def weightedTexts(df: DataFrame, textCol: String): DataFrame = {
-    val asRows = df.select(lit(1L).as("_m"), col(textCol).as("_t"))
-    if (df.isStreaming) asRows
-    else {
-      val fp = graft.ext.TextOps.fingerprint(col(textCol))
-      // approx_count_distinct: the decision only picks a PLAN SHAPE
-      // (results are exact either way), so the fixed-size HLL partial
-      // — no distinct-value shuffle — is the right probe; the exact
-      // countDistinct cost ~0.45 s per sketch query at sf0.1.
-      if (!graft.engine.GrainProbe.dupTier(df, fp)) asRows
-      else df.groupBy(fp.as("_fp"))
-        .agg(count(lit(1)).as("_m"), min(col(textCol)).as("_t"))
-        .select(col("_m"), col("_t"))
-    }
-  }
+  /** The fingerprint class tier of the token/gram-INSTANCE counting
+    * sketches: instance counts are pure per-text functions, so
+    * Σ_rows count_g(text) = Σ_classes m·count_g(text), exactly, over
+    * the (copy-weight `_m`, text `_t`) relation, while the explode/hash
+    * pipeline (the dominant cost — the sf10 sweep measured cms at 324x
+    * and heavy hitters at 238x their sf0.1 time on a 100x-clone
+    * corpus) scales with distinct mass. At row grain `_m = 1` and the
+    * plan keeps its zero-text-shuffle shape. */
+  private def textClasses(df: DataFrame, textCol: String): TextClasses =
+    GrainProbe.classes(df, graft.ext.TextOps.fingerprint(col(textCol)),
+      col(textCol))
 
   /** [[cmsSketch]] over a prepared (copy-weight `_m`, text `_t`)
     * relation — the shared core of the public sketch and the
@@ -220,19 +195,10 @@ object SketchOps {
                 gramN: Int = 1): DataFrame = {
     require(depth >= 1 && width >= 2,
       s"cmsSketch: bad depth/width $depth/$width")
-    val df = graft.engine.Engine.spread(df0)
-    cmsSketchWeighted(weightedTexts(df, textCol), depth, width, gramN)
-  }
-
-  /** Member-grain (every row exploded, weight 1) [[cmsSketch]] — the
-    * clone-mass-quadratic form, kept as the equivalence proof
-    * SketchOpsSpec pins the weighted-distinct tier against. */
-  private[graft] def cmsSketchMemberGrain(
-      df0: DataFrame, textCol: String, depth: Int = 4, width: Int = 64,
-      gramN: Int = 1): DataFrame =
-    cmsSketchWeighted(graft.engine.Engine.spread(df0)
-        .select(lit(1L).as("_m"), col(textCol).as("_t")),
+    cmsSketchWeighted(
+      textClasses(graft.engine.Engine.spread(df0), textCol).relation(),
       depth, width, gramN)
+  }
 
   /** EXACT heavy hitters (all units with global count ≥ minCount) at
     * sketch cost: the CMS grid — d·w longs, a driver-bounded plan
@@ -255,7 +221,8 @@ object SketchOps {
     // candidate-filtered exact count (heavy hitters used to pay the
     // member-grain explode twice) — materialized so the fingerprint
     // group runs once, not per consumer.
-    val mt = graft.engine.Engine.materialize(weightedTexts(df, textCol))
+    val mt = graft.engine.Engine.materialize(
+      textClasses(df, textCol).relation().select(col("_m"), col("_t")))
     val grid = Array.fill(depth)(new Array[Long](width))
     cmsSketchWeighted(mt, depth, width, gramN).collect()
       .foreach(r => grid(r.getInt(0))(r.getLong(1).toInt) = r.getLong(2))
@@ -309,11 +276,10 @@ object SketchOps {
     require(p >= 4 && p <= 16, s"hllRegisters: p out of range: $p")
     val W = 60 - p
     // register max is duplicate-blind → distinct (group, text) tier
-    val df = distinctGroupTexts(
-      graft.engine.Engine.spread(df0), groupCol, textCol)
-    df.select(col(groupCol),
-        explode(units(col(textCol), gramN)).as("_t"))
-      .select(col(groupCol), h60(col("_t")).as("_h"))
+    groupTextClasses(graft.engine.Engine.spread(df0), groupCol, textCol)
+      .relation(col(groupCol))
+      .select(col(groupCol), explode(units(col("_t"), gramN)).as("_u"))
+      .select(col(groupCol), h60(col("_u")).as("_h"))
       .select(col(groupCol),
         shiftright(col("_h"), W).cast("int").as("_j"),
         col("_h").bitwiseAND(lit((1L << W) - 1L)).as("_y"))
@@ -405,9 +371,8 @@ object SketchOps {
     // dominant cost — runs once per DISTINCT text and each class row
     // carries its copy multiplicity `_m`; sum(_m) over the class's
     // exploded instances = Σ m·tf = the exact member-grain instance
-    // count. Row grain (weightedTexts' fallback) is the identity
-    // `_m = 1` case.
-    val vocab = weightedTexts(df, textCol)
+    // count. Row grain is the identity `_m = 1` case.
+    val vocab = textClasses(df, textCol).relation()
       .select(col("_m"), explode(TextOps.tokens(col("_t"))).as("_t2"))
       .groupBy(col("_t2").as("_t")).agg(sum(col("_m")).as("_c"))
     val ranked = graft.transform.Ids.assignContiguousIds(
@@ -462,11 +427,11 @@ object SketchOps {
     require(mBits >= 63 && depth >= 1,
       s"bloomWords: bad m/depth $mBits/$depth")
     // bit_or is duplicate-blind → distinct (group, text) tier;
-    // streaming frames pass through untouched (stream-legal contract).
-    val df = distinctGroupTexts(
-      graft.engine.Engine.spread(df0), groupCol, textCol)
-    df.select(col(groupCol),
-        explode(bloomPositionsArr(units(col(textCol), gramN), mBits, depth))
+    // streaming frames take row grain (stream-legal contract).
+    groupTextClasses(graft.engine.Engine.spread(df0), groupCol, textCol)
+      .relation(col(groupCol))
+      .select(col(groupCol),
+        explode(bloomPositionsArr(units(col("_t"), gramN), mBits, depth))
           .as("_pos"))
       .select(col(groupCol), (col("_pos") / 63L).cast("long").as("word"),
         call_function("shiftleft", lit(1L),

@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.engine.GrainProbe
+
 /** Text-analysis operators for LLM training-data pipelines (SURVEY §2.10).
   *
   * Everything here is built from `org.apache.spark.sql.functions` — no UDFs
@@ -70,12 +72,12 @@ object TextOps {
   def readabilityReport(df: DataFrame, idCol: String,
                         textCol: String): DataFrame =
     // Every column is a pure function of the RAW text (case-sensitive
-    // regexes), so the whole report rides [[fanOutPerText]]'s class
-    // tier on clone-heavy corpora — the three regex scans (the sf10
-    // cost) evaluate once per distinct text. The ppm chain is inlined
-    // into each derived column (identical integer arithmetic, no temp
+    // regexes), so the whole report rides the raw-text class tier on
+    // clone-heavy corpora — the three regex scans (the sf10 cost)
+    // evaluate once per distinct text. The ppm chain is inlined into
+    // each derived column (identical integer arithmetic, no temp
     // columns to drop).
-    fanOutPerText(graft.engine.Engine.spread(df), textCol)(tc => Seq(
+    rawTextClasses(graft.engine.Engine.spread(df), textCol).derive(tc => Seq(
       "n_words" -> tokenCount(tc).cast("long"),
       "n_sentences" -> greatest(lit(1L),
         size(regexp_extract_all(tc, lit("[.!?]+"), lit(0)))
@@ -224,74 +226,20 @@ object TextOps {
   val EnglishStopwords: Seq[String] =
     Seq("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
 
-  /** Append PURE-TEXT derived columns, evaluated once per DISTINCT text
-    * when clone mass dominates — the shared rep-tier combinator of the
-    * per-document projection family (quality metrics, language ID; the
-    * r16 sf10 sweep put their member-grain token/regex chains at
-    * 44–80 s on a 100×-clone corpus for answers already computed for
-    * identical texts).
-    *
-    * Class key = md5 of the RAW text (null → a reserved sentinel, so
-    * null-text rows keep their row-grain derived values — usually
-    * nulls — through the join): unlike [[fingerprint]]'s lower∘trim
-    * key, raw equality keeps length/case-sensitive deriveds
-    * (`length(text)`, case-sensitive regexes) exact. md5-as-identity is
-    * the engine's existing dedup contract ([[fingerprint]],
-    * [[DedupOps.exactByText]]).
-    *
-    * Tier choice mirrors the sketch family's: one cheap HLL probe, rep
-    * tier only at ≥4× dup factor (the fan-out join must stay cheaper
-    * than the projection it saves); streaming frames always take row
-    * grain (no extra action per micro-batch). The probe is EAGER — an
-    * extra count+HLL Spark job fires at DataFrame-construction time —
-    * but memoized per (session, probe plan) in
-    * [[graft.engine.GrainProbe]], so repeated ops over the same input
-    * pay it once per session, and a derived input's upstream plan
-    * executes once for the probe rather than once per op. At rep grain the derive
-    * runs over one row per class and values fan out through ONE
-    * md5-keyed join — ids and 32-char keys shuffle, text never does
-    * (the class side carries it, collapsed by map-side partial min).
-    *
-    * `derive` returns (name, column) pairs evaluated by sequential
-    * `withColumn` fold, so later columns may reference earlier ones by
-    * name — at either grain. Row order is NOT preserved under the rep
-    * tier (the join shuffles); per-document projections carry their
-    * id, so contracts are unaffected. */
-  private[graft] def fanOutPerText(df: DataFrame, textCol: String)
-      (derive: Column => Seq[(String, Column)]): DataFrame = {
-    val key = coalesce(md5(col(textCol)), lit("\u0000null"))
-    val rep = !df.isStreaming &&
-      graft.engine.GrainProbe.dupTier(df, key)
-    if (!rep)
-      derive(col(textCol)).foldLeft(df) { case (a, (n, c)) =>
-        a.withColumn(n, c)
-      }
-    else {
-      val dist = df.groupBy(key.as("_ftk"))
-        .agg(min(col(textCol)).as("_t"))
-      val derived = derive(col("_t"))
-      val stats = derived.foldLeft(dist) { case (a, (n, c)) =>
-        a.withColumn(n, c)
-      }.drop("_t")
-      // withColumn REPLACES a same-named input column at row grain
-      // (e.g. the fixture's own n_chars); mirror that here by dropping
-      // the originals before the join — the replaced columns land at
-      // the END of the schema under this tier, an order (never
-      // content) difference consumers selecting by name don't see.
-      val cleaned = derived.map(_._1)
-        .foldLeft(df.withColumn("_ftk", key))(_ drop _)
-      cleaned.join(stats, Seq("_ftk")).drop("_ftk")
-    }
-  }
-
-  /** Member-grain mirror of [[fanOutPerText]] — the equivalence proof
-    * TextOpsSpec pins the rep tier against. */
-  private[graft] def fanOutPerTextMemberGrain(
-      df: DataFrame, textCol: String)
-      (derive: Column => Seq[(String, Column)]): DataFrame =
-    derive(col(textCol)).foldLeft(df) { case (a, (n, c)) =>
-      a.withColumn(n, c)
-    }
+  /** The raw-text class tier (the per-document projection family,
+    * entropy, NB scoring, contamination): class key = md5 of the RAW
+    * text, null → a reserved sentinel so null-text rows keep their
+    * row-grain values (usually nulls). Unlike [[fingerprint]]'s
+    * lower∘trim key, raw equality keeps length/case-sensitive deriveds
+    * (`length(text)`, case-sensitive regexes) exact; md5-as-identity is
+    * the engine's dedup contract ([[fingerprint]],
+    * [[DedupOps.exactByText]]). The r16 sf10 sweep put these token/regex
+    * chains at 44–80 s on a 100×-clone corpus for answers already
+    * computed for identical texts. */
+  private[graft] def rawTextClasses(df: DataFrame, textCol: String,
+      idCol: String = null): graft.engine.TextClasses =
+    GrainProbe.classes(df, coalesce(md5(col(textCol)), lit("\u0000null")),
+      col(textCol), Option(idCol).map(col).orNull)
 
   /** Per-document quality metrics (length / punctuation / stopword ratios
     * — the standard cheap filters of LLM data pipelines). One projection,
@@ -301,11 +249,10 @@ object TextOps {
     * (the r11 sf1/sf10 lesson — Engine.spread is a no-op on real
     * multi-split corpora). */
   def qualityMetrics(df0: DataFrame, textCol: String): DataFrame =
-    graft.ext.TextOps.fanOutPerText(
-      graft.engine.Engine.spread(df0), textCol)(qualityMetricsCols)
+    rawTextClasses(graft.engine.Engine.spread(df0), textCol)
+      .derive(qualityMetricsCols)
 
-  /** The pure-text derived columns of [[qualityMetrics]] — shared by
-    * the rep/member grains and the member-grain spec mirror. */
+  /** The pure-text derived columns of [[qualityMetrics]]. */
   private[graft] def qualityMetricsCols(
       text: Column): Seq[(String, Column)] = {
     val toks = tokens(text)
@@ -345,12 +292,12 @@ object TextOps {
     * alphabetically-first language achieving the max score (deterministic
     * tie-break, mirrored exactly in the oracle SQL). */
   def languageId(df0: DataFrame, textCol: String): DataFrame =
-    graft.ext.TextOps.fanOutPerText(
-      graft.engine.Engine.spread(df0), textCol)(languageIdCols)
+    rawTextClasses(graft.engine.Engine.spread(df0), textCol)
+      .derive(languageIdCols)
 
   /** The pure-text derived columns of [[languageId]]. `pred_lang`
-    * references the score columns by name (the [[fanOutPerText]]
-    * sequential-fold contract). */
+    * references the score columns by name (the sequential-fold
+    * contract of [[graft.engine.TextClasses.derive]]). */
   private[graft] def languageIdCols(
       text: Column): Seq[(String, Column)] = {
     val toks = tokens(text)
@@ -505,31 +452,18 @@ object TextOps {
       array_distinct(call_function("graft_min_windows",
         call_function("graft_shingle_h60", tokens(text), lit(k)),
         lit(w)))
-    // Class tier (fanOutPerText's rule): the fingerprint list is a pure
-    // function of tokens(text) — lower∘trim-invariant — so on a
-    // clone-heavy corpus the shingle/sliding-min kernels run once per
-    // DISTINCT fingerprint class and the per-doc rows fan out through
-    // one key join (the join carries (id, 32-char key) and the
-    // class-side fp ARRAY — one row per class — never per-doc text).
-    // Docs with < k tokens yield no shingles at either grain (the class
-    // filter sees the same token stream every member has); null texts
-    // have a null class key and drop in the inner join, matching the
-    // row-grain size(null) filter.
-    val key = fingerprint(col(textCol))
-    val rep = !df.isStreaming &&
-      graft.engine.GrainProbe.dupTier(df, key)
-    if (!rep)
-      df.filter(size(tokens(col(textCol))) >= k)
-        .select(col(idCol), explode(fps(col(textCol))).as("fp"))
-    else {
-      val classes = df.groupBy(key.as("_k"))
-        .agg(min(col(textCol)).as("_t"))
-        .filter(size(tokens(col("_t"))) >= k)
-        .select(col("_k"), explode(fps(col("_t"))).as("fp"))
-      df.select(col(idCol), key.as("_k"))
-        .join(classes, Seq("_k"))
-        .select(col(idCol), col("fp"))
-    }
+    // Class tier: the fingerprint list is a pure function of
+    // tokens(text) — lower∘trim-invariant — so on a clone-heavy corpus
+    // the shingle/sliding-min kernels run once per DISTINCT fingerprint
+    // class and the per-doc rows fan out through one key join (the join
+    // carries (id, 32-char key) and the class-side fp rows, never
+    // per-doc text). Docs with < k tokens yield no shingles at either
+    // grain; null texts have a null class key and drop in the inner
+    // join, matching the row-grain size(null) filter.
+    val tier = GrainProbe.classes(df, fingerprint(col(textCol)),
+      col(textCol), col(idCol))
+    tier.fanOut(tier.relation().filter(size(tokens(col("_t"))) >= k)
+      .select(col("_k"), explode(fps(col("_t"))).as("fp")), idCol)
   }
 
   /** Tiny built-in polarity lexicon (hand-written, integer-weighted so
@@ -631,11 +565,11 @@ object TextOps {
     * reproduce bit-for-bit across engines. */
   def repetitionStats(df: DataFrame, idCol: String,
                       textCol: String): DataFrame =
-    // fanOutPerText: the struct is a pure text function, so on
+    // Raw-text class tier: the struct is a pure text function, so on
     // clone-heavy corpora the gram-stats machinery runs once per
     // distinct raw text and fans out (r16 sweep: 23 s member-grain at
     // sf10 for answers duplicated 100×).
-    fanOutPerText(graft.engine.Engine.spread(df), textCol)(tc =>
+    rawTextClasses(graft.engine.Engine.spread(df), textCol).derive(tc =>
         Seq("_rf" -> repetitionFracsCol(tc)))
       .filter(col("_rf").getField("n_tokens") > 0)
       .select(col(idCol),
@@ -668,10 +602,13 @@ object TextOps {
       (element_at(ts, 1), element_at(ts, 2), element_at(ts, 3))
     val (bn, bd, bmx) =
       (element_at(bs, 1), element_at(bs, 2), element_at(bs, 3))
+    // token-less texts get null token fractions, not a division by
+    // zero (which ANSI mode raises)
     struct(
       tn.as("n_tokens"),
-      (lit(1.0) - td.cast("double") / tn).as("dup_token_frac"),
-      (tmx.cast("double") / tn).as("top_token_frac"),
+      when(tn > 0, lit(1.0) - td.cast("double") / tn)
+        .as("dup_token_frac"),
+      when(tn > 0, tmx.cast("double") / tn).as("top_token_frac"),
       when(bn > 0, lit(1.0) - bd.cast("double") / bn).otherwise(lit(0.0))
         .as("dup_bigram_frac"),
       when(bn > 0, bmx.cast("double") / bn).otherwise(lit(0.0))
@@ -970,32 +907,11 @@ object TextOps {
     * action per micro-batch). */
   def bpeEncodeStats(df: DataFrame, idCol: String, textCol: String,
                      merges: Seq[String]): DataFrame = {
-    val base = graft.engine.Engine.spread(df)
-    val fp = fingerprint(col(textCol))
-    val rep = !base.isStreaming &&
-      graft.engine.GrainProbe.dupTier(base, fp)
-    if (!rep)
-      bpeEncodeCore(
-        base.select(col(idCol).as("_k"), col(textCol).as("_t")), merges)
-        .select(col("_k").as(idCol), col("n_words"), col("n_subwords"))
-    else {
-      val dist = base.groupBy(fp.as("_k"))
-        .agg(min(col(textCol)).as("_t"))
-      base.select(col(idCol), fp.as("_k"))
-        .join(bpeEncodeCore(dist, merges), Seq("_k"))
-        .select(col(idCol), col("n_words"), col("n_subwords"))
-    }
+    val tier = GrainProbe.classes(graft.engine.Engine.spread(df),
+      fingerprint(col(textCol)), col(textCol), col(idCol))
+    tier.fanOut(bpeEncodeCore(tier.relation(), merges), idCol)
+      .select(col(idCol), col("n_words"), col("n_subwords"))
   }
-
-  /** Member-grain form of [[bpeEncodeStats]] — every row encoded
-    * directly; the equivalence proof TextOpsSpec pins the adaptive
-    * tier against. */
-  private[graft] def bpeEncodeStatsMemberGrain(
-      df: DataFrame, idCol: String, textCol: String,
-      merges: Seq[String]): DataFrame =
-    bpeEncodeCore(graft.engine.Engine.spread(df)
-        .select(col(idCol).as("_k"), col(textCol).as("_t")), merges)
-      .select(col("_k").as(idCol), col("n_words"), col("n_subwords"))
 
   /** The encode engine under both grains: explode `_t` into words,
     * char-space, apply the padded two-pass replaces in rank order,
@@ -1038,45 +954,36 @@ object TextOps {
   def repeatedSpans(df: DataFrame, idCol: String, textCol: String,
                     n: Int = 10, minDocs: Int = 2): DataFrame = {
     val base = graft.engine.Engine.spread(df)
-    // Class tier (same rule as the rest of the family): per-gram
-    // aggregates collapse exactly — n_docs = Σ class sizes over
-    // distinct classes containing the gram, n_occurrences = Σ size ×
-    // within-class occurrences, and the representative (min (id, st))
-    // is the min over classes of (class-min id, class-min start),
-    // because every member of a class carries the identical window
-    // stream.
-    val agg = tokenClassKeyed(base, idCol, textCol) match {
-      case Some((_, cls)) =>
-        val wx = cls.select(col("_k"), col("_w"), col("_mid"),
-            posexplode(call_function("graft_window_hashes",
-              call_function("graft_hash_tokens", col("_toks")),
-              lit(n))))
-          .withColumnsRenamed(Map("pos" -> "_st", "col" -> "_gh"))
-        val perClass = wx.groupBy(col("_gh"), col("_k"))
-          .agg(first(col("_w")).as("_w"), count(lit(1)).as("_occ"),
-            min(col("_st")).as("_stmin"), first(col("_mid")).as("_mid"))
-        perClass.groupBy(col("_gh"))
-          .agg(sum(col("_w")).as("n_docs"),
-            sum(col("_w") * col("_occ")).as("n_occurrences"),
-            min(struct(col("_mid").as("_id"), col("_stmin").as("_st")))
-              .as("_loc"))
-          .filter(col("n_docs") >= minDocs)
-          .select(col("n_docs"), col("n_occurrences"),
-            col("_loc._id").as("_rid"), col("_loc._st").as("_rst"))
-      case None =>
-        base.select(col(idCol).as("_id"), posexplode(
-            call_function("graft_window_hashes",
-              call_function("graft_hash_tokens", tokens(col(textCol))),
-              lit(n))))
-          .withColumnsRenamed(Map("pos" -> "_st", "col" -> "_gh"))
-          .groupBy(col("_gh"))
-          .agg(count_distinct(col("_id")).as("n_docs"),
+    val tier = tokenClasses(base, textCol, idCol)
+    val wx = tier.relation().select(col("_k"), col("_m"), col("_mid"),
+        posexplode(call_function("graft_window_hashes",
+          call_function("graft_hash_tokens", tokens(col("_t"))),
+          lit(n))))
+      .withColumnsRenamed(Map("pos" -> "_st", "col" -> "_gh"))
+    // The per-gram aggregates differ by grain. Row grain counts
+    // distinct ids. Class grain collapses exactly: n_docs = Σ class
+    // sizes over distinct classes containing the gram, n_occurrences =
+    // Σ size × within-class occurrences, and the representative
+    // (min (id, st)) is the min over classes of (class-min id,
+    // class-min start), because every member of a class carries the
+    // identical window stream.
+    val agg = (if (!tier.rep)
+        wx.groupBy(col("_gh"))
+          .agg(count_distinct(col("_k")).as("n_docs"),
             count(lit(1)).as("n_occurrences"),
-            min(struct(col("_id"), col("_st"))).as("_loc"))
-          .filter(col("n_docs") >= minDocs)
-          .select(col("n_docs"), col("n_occurrences"),
-            col("_loc._id").as("_rid"), col("_loc._st").as("_rst"))
-    }
+            min(struct(col("_k").as("_id"), col("_st"))).as("_loc"))
+      else
+        wx.groupBy(col("_gh"), col("_k"))
+          .agg(first(col("_m")).as("_m"), count(lit(1)).as("_occ"),
+            min(col("_st")).as("_stmin"), first(col("_mid")).as("_mid"))
+          .groupBy(col("_gh"))
+          .agg(sum(col("_m")).as("n_docs"),
+            sum(col("_m") * col("_occ")).as("n_occurrences"),
+            min(struct(col("_mid").as("_id"), col("_stmin").as("_st")))
+              .as("_loc")))
+      .filter(col("n_docs") >= minDocs)
+      .select(col("n_docs"), col("n_occurrences"),
+        col("_loc._id").as("_rid"), col("_loc._st").as("_rst"))
     // Second pass re-reads raw text only to PRINT the survivors:
     // tokenization happens AFTER the join (AQE broadcasts the tiny
     // survivor side), so the corpus is tokenized once, not twice.
@@ -1121,29 +1028,16 @@ object TextOps {
     val base = graft.engine.Engine.spread(df)
     val stripped = call_function("graft_strip_covered", col("_toks"),
       coalesce(col("_sts"), array().cast("array<int>")), lit(n))
-    tokenClassKeyed(base, idCol, textCol) match {
-      case Some((ids, cls)) =>
-        // stripping is a pure function of (class tokens, dup set):
-        // strip once per class, fan the kept text out through the
-        // fingerprint join (class-grain text shuffles, never member)
-        val starts = dupWindowStarts(
-          cls.select(col("_k").as("_id"), col("_w"), col("_toks")),
-          n, minDocs).withColumnRenamed("_id", "_k")
-        val per = cls.join(starts, Seq("_k"), "left")
-          .select(col("_k"), stripped.as("_kept"))
-          .filter(size(col("_kept")) > 0)
-        ids.join(per, Seq("_k"))
-          .select(col("_id").as(idCol),
-            array_join(col("_kept"), sep).as(textCol))
-      case None =>
-        val toks = base.select(col(idCol).as("_id"),
-          tokens(col(textCol)).as("_toks"))
-        toks.join(dupWindowStarts(toks, n, minDocs), Seq("_id"), "left")
-          .select(col("_id"), stripped.as("_kept"))
-          .filter(size(col("_kept")) > 0)
-          .select(col("_id").as(idCol),
-            array_join(col("_kept"), sep).as(textCol))
-    }
+    // stripping is a pure function of (class tokens, dup set): strip
+    // once per class, fan the kept text out through the fingerprint
+    // join (class-grain text shuffles, never member)
+    val tier = tokenClasses(base, textCol, idCol)
+    val toks = tokenWindows(tier)
+    val per = toks.join(dupWindowStarts(toks, n, minDocs), Seq("_id"), "left")
+      .select(col("_id").as("_k"), stripped.as("_kept"))
+      .filter(size(col("_kept")) > 0)
+    tier.fanOut(per, "_id")
+      .select(col("_id").as(idCol), array_join(col("_kept"), sep).as(textCol))
   }
 
   /** Shared duplicated-window stage behind [[removeRepeatedSpans]] and
@@ -1179,27 +1073,22 @@ object TextOps {
       .agg(sort_array(collect_list(col("_st"))).as("_sts"))
   }
 
-  /** Fingerprint-class relations for the repeated-spans family —
-    * Some((ids (_id, _k), classes (_k, _w, _toks))) when clone mass
-    * fires the tier (the [[fanOutPerText]] probe); None → row grain.
-    * Key = [[fingerprint]] with a null sentinel: `tokens` is
-    * lower∘trim-invariant, so every member of a class produces the
-    * identical window stream, and `_w` (the member count) carries the
-    * distinct-doc mass into the weighted [[dupWindowStarts]]. */
-  private def tokenClassKeyed(base: DataFrame, idCol: String,
-                              textCol: String)
-      : Option[(DataFrame, DataFrame)] = {
-    if (base.isStreaming) return None
-    val key = coalesce(fingerprint(col(textCol)), lit(" null"))
-    if (!graft.engine.GrainProbe.dupTier(base, key)) None
-    else Some((
-      base.select(col(idCol).as("_id"), key.as("_k")),
-      base.groupBy(key.as("_k"))
-        .agg(count(lit(1)).as("_w"), min(col(textCol)).as("_t"),
-          min(col(idCol)).as("_mid"))
-        .select(col("_k"), col("_w"), col("_mid"),
-          tokens(col("_t")).as("_toks"))))
-  }
+  /** The class tier of the token-derived ops: key = [[fingerprint]]
+    * with a null sentinel. `tokens` is lower∘trim-invariant, so every
+    * member of a class produces the identical token stream. */
+  private def tokenClasses(base: DataFrame, textCol: String,
+      idCol: String = null): graft.engine.TextClasses =
+    GrainProbe.classes(base, coalesce(fingerprint(col(textCol)),
+      lit(" null")), col(textCol), Option(idCol).map(col).orNull)
+
+  /** `(_id, [_w,] _toks)` over a tier's relation for
+    * [[dupWindowStarts]]: `_id` is the class key, and at class grain
+    * `_w` (the member count) carries the distinct-doc mass into its
+    * weighted form. Row grain keeps the unweighted count_distinct. */
+  private def tokenWindows(tier: graft.engine.TextClasses): DataFrame =
+    tier.relation().select(col("_k").as("_id") +:
+      (if (tier.rep) Seq(col("_m").as("_w")) else Nil) :+
+      tokens(col("_t")).as("_toks"): _*)
 
   /** Per-document duplicated-window fraction — the MEASUREMENT half of
     * Lee et al. 2021 ([[removeRepeatedSpans]] is the removal half):
@@ -1226,29 +1115,15 @@ object TextOps {
       (size(toksC) - size(call_function("graft_strip_covered", toksC,
         coalesce(stsC, array().cast("array<int>")), lit(n))))
         .cast("long").as("n_dup_tokens"))
-    tokenClassKeyed(base, idCol, textCol) match {
-      case Some((ids, cls)) =>
-        val starts = dupWindowStarts(
-          cls.select(col("_k").as("_id"), col("_w"), col("_toks")),
-          n, minDocs).withColumnRenamed("_id", "_k")
-        val per = cls.join(starts, Seq("_k"), "left")
-          .select(col("_k") +: report(col("_toks"), col("_sts")): _*)
-        ids.join(per, Seq("_k"))
-          .select(col("_id").as(idCol), col("n_tokens"),
-            col("n_dup_tokens"))
-          .withColumn("dup_ppm", when(col("n_tokens") > 0L,
-            expr("n_dup_tokens * 1000000 div n_tokens"))
-            .otherwise(lit(0L)))
-      case None =>
-        val toks = base.select(col(idCol).as("_id"),
-          tokens(col(textCol)).as("_toks"))
-        toks.join(dupWindowStarts(toks, n, minDocs), Seq("_id"), "left")
-          .select(col("_id").as(idCol) +:
-            report(col("_toks"), col("_sts")): _*)
-          .withColumn("dup_ppm", when(col("n_tokens") > 0L,
-            expr("n_dup_tokens * 1000000 div n_tokens"))
-            .otherwise(lit(0L)))
-    }
+    val tier = tokenClasses(base, textCol, idCol)
+    val toks = tokenWindows(tier)
+    val per = toks.join(dupWindowStarts(toks, n, minDocs), Seq("_id"), "left")
+      .select(col("_id").as("_k") +: report(col("_toks"), col("_sts")): _*)
+    tier.fanOut(per, "_id")
+      .select(col("_id").as(idCol), col("n_tokens"), col("n_dup_tokens"))
+      .withColumn("dup_ppm", when(col("n_tokens") > 0L,
+        expr("n_dup_tokens * 1000000 div n_tokens"))
+        .otherwise(lit(0L)))
   }
 
   /** Cross-document boilerplate removal — the C4 rule (Raffel et al.
@@ -1331,47 +1206,21 @@ object TextOps {
     // and ranks are identical per class and fan out through one key
     // join AFTER the top-k cut (k rows per class, not per doc, cross
     // the rank window).
-    val key = coalesce(fingerprint(col(textCol)), lit(" null"))
-    val rep = !base.isStreaming &&
-      graft.engine.GrainProbe.dupTier(base, key)
-    if (!rep) {
-      val tf = base
-        .select(col(idCol).as("_id"),
-          explode(tokens(col(textCol))).as("term"))
-        .groupBy(col("_id"), col("term")).agg(count(lit(1)).as("_tf"))
-      val dfs = tf.groupBy(col("term"))
-        .agg(count(lit(1)).as("_df"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("_id"))
-        .orderBy(col("score").desc, col("term").asc)
-      tf.join(dfs, Seq("term"))
+    val tier = tokenClasses(base, textCol, idCol)
+    val tf = tier.relation()
+      .select(col("_k"), col("_m"), explode(tokens(col("_t"))).as("term"))
+      .groupBy(tier.keepWeight(col("_k"), col("term")): _*)
+      .agg(count(lit(1)).as("_tf"))
+    val dfs = tf.groupBy(col("term")).agg(tier.members.as("_df"))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("_k"))
+      .orderBy(col("score").desc, col("term").asc)
+    tier.fanOut(tf.join(dfs, Seq("term"))
         .crossJoin(broadcast(n))
         .withColumn("score", col("_tf").cast("double") * idf)
         .withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= k)
-        .select(col("_id").as(idCol), col("rnk"), col("term"),
-          col("score"))
-    } else {
-      val ids = base.select(col(idCol).as("_id"), key.as("_k"))
-      val tfC = base.groupBy(key.as("_k"))
-        .agg(count(lit(1)).as("_w"), min(col(textCol)).as("_t"))
-        .select(col("_k"), col("_w"),
-          explode(tokens(col("_t"))).as("term"))
-        .groupBy(col("_k"), col("term"))
-        .agg(first(col("_w")).as("_w"), count(lit(1)).as("_tf"))
-      val dfs = tfC.groupBy(col("term")).agg(sum(col("_w")).as("_df"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("_k"))
-        .orderBy(col("score").desc, col("term").asc)
-      val perClass = tfC.join(dfs, Seq("term"))
-        .crossJoin(broadcast(n))
-        .withColumn("score", col("_tf").cast("double") * idf)
-        .withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= k)
-      ids.join(perClass, Seq("_k"))
-        .select(col("_id").as(idCol), col("rnk"), col("term"),
-          col("score"))
-    }
+        .filter(col("rnk") <= k), "_id")
+      .select(col("_id").as(idCol), col("rnk"), col("term"), col("score"))
   }
 
   /** Bigram-LM fluency scoring — the CCNet quality signal (Wenzek et
@@ -1420,28 +1269,22 @@ object TextOps {
     // the trained counts, so it evaluates once per distinct class and
     // per-key sums regroup the exact longs through one key join —
     // bit-identical at any clone mass (order-free integer sums).
-    val base = graft.engine.Engine.spread(docs)
-    val key = coalesce(fingerprint(col(textCol)), lit(" null"))
-    val rep = !base.isStreaming &&
-      graft.engine.GrainProbe.dupTier(base, key)
-    if (!rep)
-      lmFixedStream(base, ref, keyCol, textCol)
-        .groupBy(col("_id"))
-        .agg(sum(col("_fx")).as("_sfx"), count(lit(1)).as("n_bigrams"))
-    else {
-      // the class text keeps textCol's NAME: lmFixedStream derives
-      // its ref-side expressions from the same textCol
-      val classes = base.groupBy(key.as("_lck"))
-        .agg(min(col(textCol)).as(textCol))
-      val classSums = lmFixedStream(classes, ref, "_lck", textCol)
-        .groupBy(col("_id"))
-        .agg(sum(col("_fx")).as("_cs"), count(lit(1)).as("_cn"))
-        .withColumnRenamed("_id", "_lck")
-      base.select(col(keyCol).as("_id"), key.as("_lck"))
-        .join(classSums, Seq("_lck"))
-        .groupBy(col("_id"))
-        .agg(sum(col("_cs")).as("_sfx"), sum(col("_cn")).as("n_bigrams"))
-    }
+    val tier = tokenClasses(graft.engine.Engine.spread(docs), textCol,
+      keyCol)
+    // the relation's text keeps textCol's NAME: lmFixedStream derives
+    // its ref-side expressions from the same textCol
+    val sums = lmFixedStream(
+        tier.relation().select(col("_k"), col("_t").as(textCol)), ref,
+        "_k", textCol)
+      .groupBy(col("_id"))
+      .agg(sum(col("_fx")).as("_sfx"), count(lit(1)).as("n_bigrams"))
+    // keyCol may be coarser than a class (a domain), so class sums
+    // regroup to it after the fan-out; at row grain they are keyed on
+    // it already
+    if (!tier.rep) sums
+    else tier.fanOut(sums.withColumnRenamed("_id", "_k"), "_id")
+      .groupBy(col("_id"))
+      .agg(sum(col("_sfx")).as("_sfx"), sum(col("n_bigrams")).as("n_bigrams"))
   }
 
   /** [[lmScore]]'s output projection over precomputed [[lmKeySums]]. */
@@ -1475,14 +1318,8 @@ object TextOps {
     // counts are Σ_class m·tf — exact integer sums — while the
     // tokenize+explode runs once per distinct reference text. tokens()
     // is lower∘trim-invariant, so the fingerprint class key is sound.
-    val refKey = coalesce(fingerprint(col(textCol)), lit(" null"))
-    val refRep = !ref.isStreaming &&
-      graft.engine.GrainProbe.dupTier(ref, refKey)
-    val refW =
-      if (!refRep) ref.select(lit(1L).as("_m"), col(textCol).as("_rt"))
-      else ref.groupBy(refKey.as("_rk"))
-        .agg(count(lit(1)).as("_m"), min(col(textCol)).as("_rt"))
-        .select(col("_m"), col("_rt"))
+    val refW = tokenClasses(ref, textCol).relation()
+      .select(col("_m"), col("_t").as("_rt"))
     val rhts = call_function("graft_hash_tokens", tokens(col("_rt")))
     val uni = refW.select(col("_m"), explode(rhts).as("_h1"))
       .groupBy(col("_h1")).agg(sum(col("_m")).as("_c1"))
@@ -1615,14 +1452,8 @@ object TextOps {
     // per distinct reference text; the continuation-type relations
     // (n1f/n1b) derive from the bi TYPE table, which clone mass never
     // grows.
-    val refKey = coalesce(fingerprint(col(textCol)), lit(" null"))
-    val refRep = !ref.isStreaming &&
-      graft.engine.GrainProbe.dupTier(ref, refKey)
-    val refW =
-      if (!refRep) ref.select(lit(1L).as("_m"), col(textCol).as("_rt"))
-      else ref.groupBy(refKey.as("_rk"))
-        .agg(count(lit(1)).as("_m"), min(col(textCol)).as("_rt"))
-        .select(col("_m"), col("_rt"))
+    val refW = tokenClasses(ref, textCol).relation()
+      .select(col("_m"), col("_t").as("_rt"))
     val rhts = call_function("graft_hash_tokens", tokens(col("_rt")))
     val uni = refW.select(col("_m"), explode(rhts).as("_h1"))
       .groupBy(col("_h1")).agg(sum(col("_m")).as("_c1"))
@@ -1647,18 +1478,11 @@ object TextOps {
     // tokens(text), so it evaluates once per distinct class and fans
     // out through one key join; docs with < 2 tokens stay absent at
     // either grain.
-    val base = graft.engine.Engine.spread(docs)
-    val docKey = coalesce(fingerprint(col(textCol)), lit(" null"))
-    val docRep = !base.isStreaming &&
-      graft.engine.GrainProbe.dupTier(base, docKey)
-    val (scoreSrc, scoreKey, scoreText) =
-      if (!docRep) (base, idCol, textCol)
-      else (base.groupBy(docKey.as("_dck"))
-        .agg(min(col(textCol)).as("_dct")), "_dck", "_dct")
-    val shts = call_function("graft_hash_tokens",
-      tokens(col(scoreText)))
-    val dg = scoreSrc
-      .select(col(scoreKey).as("_id"), shts.as("_ht"))
+    val docTier = tokenClasses(graft.engine.Engine.spread(docs), textCol,
+      idCol)
+    val shts = call_function("graft_hash_tokens", tokens(col("_t")))
+    val dg = docTier.relation()
+      .select(col("_k").as("_id"), shts.as("_ht"))
       .select(col("_id"), col("_ht"), posexplode(call_function(
         "graft_window_hashes", col("_ht"), lit(2))))
       .withColumnsRenamed(Map("pos" -> "_p", "col" -> "_hg"))
@@ -1680,15 +1504,10 @@ object TextOps {
       .otherwise(pc)
     val fx = floor((lit(0.0) - call_function("graft_ln", p)) *
       lit(1073741824.0)).cast("long")
-    val perKey = dg.select(col("_id"), fx.as("_fx"))
-      .groupBy(col("_id"))
+    val perKey = dg.select(col("_id").as("_k"), fx.as("_fx"))
+      .groupBy(col("_k"))
       .agg(sum(col("_fx")).as("_sfx"), count(lit(1)).as("n_bigrams"))
-    val perDoc =
-      if (!docRep) perKey
-      else base.select(col(idCol).as("_oid"), docKey.as("_id"))
-        .join(perKey, Seq("_id"))
-        .select(col("_oid").as("_id"), col("_sfx"), col("n_bigrams"))
-    perDoc
+    docTier.fanOut(perKey, "_id")
       .select(col("_id").as(idCol), col("n_bigrams"),
         ((col("_sfx").cast("double") / col("n_bigrams").cast("double")) /
           lit(1073741824.0)).as("kn_nll"))
@@ -1789,43 +1608,34 @@ object TextOps {
       overlapTokens < chunkTokens,
       s"bad chunk=$chunkTokens overlap=$overlapTokens")
     val stride = chunkTokens - overlapTokens
-    def core(in: DataFrame, keyCol: String): DataFrame = {
-      val toks = tokens(col(textCol))
-      val n = size(toks)
-      // ceil_div(max(n - chunk, 0), stride) + 1 chunks for n >= 1
-      val nChunks = ((greatest(n - lit(chunkTokens), lit(0)) +
-        lit(stride - 1)) / lit(stride)).cast("int") + lit(1)
-      in.filter(n >= 1)
-        .select(col(keyCol), toks.as("_toks"),
-          explode(sequence(lit(0), nChunks - 1)).as("chunk_id"))
-        .select(col(keyCol), col("chunk_id"),
-          slice(col("_toks"), col("chunk_id") * lit(stride) + 1,
-            lit(chunkTokens)).as("_ct"))
-        .select(col(keyCol), col("chunk_id"),
-          size(col("_ct")).as("n_chunk_tokens"),
-          array_join(col("_ct"), " ").as("chunk_text"))
-    }
-    val base = graft.engine.Engine.spread(df)
-    // Class tier (fanOutPerText's rule): chunk boundaries and chunk
-    // text are pure functions of tokens(text) — lower∘trim-invariant —
-    // so on a clone-heavy corpus the tokenize/slice/concat machinery
-    // runs once per DISTINCT fingerprint class and per-doc chunk rows
-    // fan out through one key join (output rows are identical; the
-    // join shuffles class-grain chunk text — the distinct mass — plus
-    // (id, key) pairs, never per-member text). Null texts have a null
-    // class key and drop in the inner join, matching the row-grain
-    // n >= 1 filter; empty-token docs drop at either grain.
-    val key = fingerprint(col(textCol))
-    val rep = !base.isStreaming &&
-      graft.engine.GrainProbe.dupTier(base, key)
-    if (!rep)
-      core(base.select(col(idCol), col(textCol)), idCol)
-    else
-      base.select(col(idCol), key.as("_k"))
-        .join(core(base.groupBy(key.as("_k"))
-          .agg(min(col(textCol)).as(textCol)), "_k"), Seq("_k"))
-        .select(col(idCol), col("chunk_id"), col("n_chunk_tokens"),
-          col("chunk_text"))
+    // Class tier: chunk boundaries and chunk text are pure functions
+    // of tokens(text) — lower∘trim-invariant — so on a clone-heavy
+    // corpus the tokenize/slice/concat machinery runs once per
+    // DISTINCT fingerprint class and per-doc chunk rows fan out through
+    // one key join (output rows are identical; the join shuffles
+    // class-grain chunk text — the distinct mass — plus (id, key)
+    // pairs, never per-member text). Null texts have a null class key
+    // and drop in the inner join, matching the row-grain n >= 1
+    // filter; empty-token docs drop at either grain.
+    val tier = GrainProbe.classes(graft.engine.Engine.spread(df),
+      fingerprint(col(textCol)), col(textCol), col(idCol))
+    val toks = tokens(col("_t"))
+    val n = size(toks)
+    // ceil_div(max(n - chunk, 0), stride) + 1 chunks for n >= 1
+    val nChunks = ((greatest(n - lit(chunkTokens), lit(0)) +
+      lit(stride - 1)) / lit(stride)).cast("int") + lit(1)
+    val chunks = tier.relation().filter(n >= 1)
+      .select(col("_k"), toks.as("_toks"),
+        explode(sequence(lit(0), nChunks - 1)).as("chunk_id"))
+      .select(col("_k"), col("chunk_id"),
+        slice(col("_toks"), col("chunk_id") * lit(stride) + 1,
+          lit(chunkTokens)).as("_ct"))
+      .select(col("_k"), col("chunk_id"),
+        size(col("_ct")).as("n_chunk_tokens"),
+        array_join(col("_ct"), " ").as("chunk_text"))
+    tier.fanOut(chunks, idCol)
+      .select(col(idCol), col("chunk_id"), col("n_chunk_tokens"),
+        col("chunk_text"))
   }
 
   /** Top-k collocations by pointwise mutual information (Church &
@@ -1851,16 +1661,9 @@ object TextOps {
     // dominant cost at 100× clone mass — runs over distinct texts.
     // Key = [[fingerprint]] (lower∘trim): tokens() normalizes the same
     // way, so the counts are invariant across the class.
-    val base = graft.engine.Engine.spread(df)
-    val fp = fingerprint(col(textCol))
-    val rep = !base.isStreaming &&
-      graft.engine.GrainProbe.dupTier(base, fp)
-    val toks =
-      if (!rep) base.select(lit(1L).as("_m"),
-        tokens(col(textCol)).as("_toks"))
-      else base.groupBy(fp.as("_fp"))
-        .agg(count(lit(1)).as("_m"), min(col(textCol)).as("_t"))
-        .select(col("_m"), tokens(col("_t")).as("_toks"))
+    val toks = GrainProbe.classes(graft.engine.Engine.spread(df),
+        fingerprint(col(textCol)), col(textCol))
+      .relation().select(col("_m"), tokens(col("_t")).as("_toks"))
     // Materialize the vocabulary-sized count tables: each feeds TWO
     // consumers (the PMI join AND its total), and AQE exchange reuse
     // does not cross the broadcast-stage boundary the totals ride in —
@@ -2193,48 +1996,25 @@ object TextOps {
     // Σ_instances floor(2³⁰/c) = Σ_terms tf·floor(2³⁰/c) exactly —
     // integer multiply of the shared floored value.
     //
-    // Class tier (fanOutPerText's rule, GrainProbe-gated): difficulty
-    // is a pure function of tokens(text) given the corpus counts, and
-    // the counts themselves are Σ_class m·tf (the weighted
-    // distinct-text algebra — exact integer sums), so on a clone-heavy
-    // corpus the tokenize+explode pass — measured 28 s of the 46 s
-    // sf10 total — runs once per DISTINCT fingerprint class and
-    // per-doc difficulties fan out through one key join. The ranking
-    // below stays member-grain either way (every document needs its
-    // own rank).
-    val base = graft.engine.Engine.spread(docs)
-    val key = fingerprint(col(textCol))
-    val rep = !base.isStreaming &&
-      graft.engine.GrainProbe.dupTier(base, key)
-    val dfx =
-      if (!rep) {
-        val tf = base
-          .select(col(idCol).as("_id"), explode(tokens(col(textCol)))
-            .as("_term"))
-          .groupBy(col("_id"), col("_term"))
-          .agg(count(lit(1)).as("_tf"))
-        val cnt = tf.groupBy(col("_term")).agg(sum(col("_tf")).as("_c"))
-        tf.join(cnt, Seq("_term"))
-          .groupBy(col("_id"))
-          .agg(sum(col("_tf") * floor(lit(1073741824.0) /
-            col("_c").cast("double")).cast("long")).as("_fx"))
-      } else {
-        val ctf = base.groupBy(key.as("_k"))
-          .agg(count(lit(1)).as("_m"), min(col(textCol)).as("_t"))
-          .select(col("_k"), col("_m"),
-            explode(tokens(col("_t"))).as("_term"))
-          .groupBy(col("_k"), col("_m"), col("_term"))
-          .agg(count(lit(1)).as("_tf"))
-        val cnt = ctf.groupBy(col("_term"))
-          .agg(sum(col("_m") * col("_tf")).as("_c"))
-        val cfx = ctf.join(cnt, Seq("_term"))
-          .groupBy(col("_k"))
-          .agg(sum(col("_tf") * floor(lit(1073741824.0) /
-            col("_c").cast("double")).cast("long")).as("_fx"))
-        base.select(col(idCol), key.as("_k"))
-          .join(cfx, Seq("_k"))
-          .select(col(idCol).as("_id"), col("_fx"))
-      }
+    // Class tier: difficulty is a pure function of tokens(text) given
+    // the corpus counts, and the counts themselves are Σ_class m·tf
+    // (the weighted distinct-text algebra — exact integer sums), so on
+    // a clone-heavy corpus the tokenize+explode pass — measured 28 s of
+    // the 46 s sf10 total — runs once per DISTINCT fingerprint class
+    // and per-doc difficulties fan out through one key join. The
+    // ranking below stays member-grain either way (every document
+    // needs its own rank).
+    val tier = GrainProbe.classes(graft.engine.Engine.spread(docs),
+      fingerprint(col(textCol)), col(textCol), col(idCol))
+    val tf = tier.relation()
+      .select(col("_k"), col("_m"), explode(tokens(col("_t"))).as("_term"))
+      .groupBy(tier.keepWeight(col("_k"), col("_term")): _*)
+      .agg(count(lit(1)).as("_tf"))
+    val cnt = tf.groupBy(col("_term")).agg(tier.memberSum(col("_tf")).as("_c"))
+    val dfx = tier.fanOut(tf.join(cnt, Seq("_term"))
+        .groupBy(col("_k"))
+        .agg(sum(col("_tf") * floor(lit(1073741824.0) /
+          col("_c").cast("double")).cast("long")).as("_fx")), "_id")
     val alld = docs.select(col(idCol))
       .join(dfx, col(idCol) === col("_id"), "left")
       .select(col(idCol), coalesce(col("_fx"), lit(0L))
@@ -2321,10 +2101,12 @@ object TextOps {
       else explode(call_function("graft_window_hashes", hs, lit(n)))
     // distinct-(group, gram) is duplicate-blind, so the explode — the
     // dominant cost — runs over DISTINCT (group, text) pairs on
-    // clone-heavy corpora (SketchOps.distinctGroupTexts, the KMV/bloom
+    // clone-heavy corpora (SketchOps.groupTextClasses, the KMV/bloom
     // tier): identical gram sets, 1/clone-factor of the tokenize work.
     val spread = graft.engine.Engine.spread(
-      graft.ext.SketchOps.distinctGroupTexts(df, groupCol, textCol))
+      graft.ext.SketchOps.groupTextClasses(df, groupCol, textCol)
+        .relation(col(groupCol))
+        .select(col(groupCol), col("_t").as(textCol)))
     val refG = spread.filter(col(groupCol) === refValue)
       .select(g.as("_gh")).distinct()
     val newG = spread.filter(col(groupCol) =!= refValue)
@@ -2423,9 +2205,9 @@ object TextOps {
                       wDigit: Long = -2L, wOverlen: Long = -1L,
                       bias: Long = -40L,
                       lenCap: Int = 150): DataFrame =
-    // fanOutPerText: features and score are pure text functions —
-    // evaluate per distinct raw text on clone-heavy corpora.
-    fanOutPerText(graft.engine.Engine.spread(df0), textCol) { text =>
+    // Raw-text class tier: features and score are pure text functions
+    // — evaluate per distinct raw text on clone-heavy corpora.
+    rawTextClasses(graft.engine.Engine.spread(df0), textCol).derive { text =>
       val toks = tokens(text)
       val stopHits = size(filter(toks,
         t => t.isin(EnglishStopwords: _*))).cast("long")
@@ -2487,25 +2269,14 @@ object TextOps {
     // function of the text so it evaluates once per class and fans out
     // through the id join. All integer sums — bit-identical to the
     // member-grain stream at any clone mass.
-    val key = coalesce(md5(col("_tx")), lit(" null"))
-    val rep = !base.isStreaming &&
-      graft.engine.GrainProbe.dupTier(base, key)
+    val tier = rawTextClasses(base, "_tx", "_id")
     def hashed(t: Column): Column =
       call_function("graft_hash_tokens", tokens(t))
-    val cnt =
-      if (!rep)
-        base.select(col("_pos"), explode(hashed(col("_tx"))).as("_h"))
-          .groupBy(col("_h")).agg(
-            sum(when(col("_pos"), 1L).otherwise(0L)).as("_cp"),
-            sum(when(col("_pos"), 0L).otherwise(1L)).as("_cn"))
-      else
-        base.groupBy(key.as("_k"), col("_pos"))
-          .agg(count(lit(1)).as("_m"), min(col("_tx")).as("_t"))
-          .select(col("_pos"), col("_m"),
-            explode(hashed(col("_t"))).as("_h"))
-          .groupBy(col("_h")).agg(
-            sum(when(col("_pos"), col("_m")).otherwise(0L)).as("_cp"),
-            sum(when(col("_pos"), 0L).otherwise(col("_m"))).as("_cn"))
+    val cnt = tier.relation(col("_pos"))
+      .select(col("_pos"), col("_m"), explode(hashed(col("_t"))).as("_h"))
+      .groupBy(col("_h")).agg(
+        tier.memberSum(when(col("_pos"), 1L).otherwise(0L)).as("_cp"),
+        tier.memberSum(when(col("_pos"), 0L).otherwise(1L)).as("_cn"))
     val tot = cnt.agg(count(lit(1)).as("_v"),
       sum(col("_cp")).as("_np"), sum(col("_cn")).as("_nn"))
     val nd = base.agg(
@@ -2519,23 +2290,11 @@ object TextOps {
           ln((col("_cn") + 1).cast("double") /
             (col("_nn") + col("_v")).cast("double"))) *
           lit(1073741824.0)).cast("long").as("_lam"))
-    val perDoc =
-      if (!rep)
-        base.select(col("_id"), explode(hashed(col("_tx"))).as("_h"))
-          .join(lam, Seq("_h"))
-          .groupBy(col("_id"))
-          .agg(sum(col("_lam")).as("_s"), count(lit(1)).as("_nt"))
-      else
-        base.select(col("_id"), key.as("_k"))
-          .join(
-            base.groupBy(key.as("_k")).agg(min(col("_tx")).as("_t"))
-              .select(col("_k"), explode(hashed(col("_t"))).as("_h"))
-              .join(lam, Seq("_h"))
-              .groupBy(col("_k"))
-              .agg(sum(col("_lam")).as("_s"),
-                count(lit(1)).as("_nt")),
-            Seq("_k"))
-          .select(col("_id"), col("_s"), col("_nt"))
+    val perDoc = tier.fanOut(tier.relation()
+        .select(col("_k"), explode(hashed(col("_t"))).as("_h"))
+        .join(lam, Seq("_h"))
+        .groupBy(col("_k"))
+        .agg(sum(col("_lam")).as("_s"), count(lit(1)).as("_nt")), "_id")
     val prior = nd.select(
       floor((ln(col("_dp").cast("double")) -
         ln(col("_dn").cast("double"))) *
@@ -2634,82 +2393,42 @@ object TextOps {
     // beats every member of the worse class — strictly on score, or on
     // the id tie-break via its smaller min id), so the expansion is
     // k·⌈clone factor⌉ rows per query, never the corpus.
-    val key = coalesce(fingerprint(col(textCol)), lit(" null"))
-    val rep = !base.isStreaming &&
-      graft.engine.GrainProbe.dupTier(base, key)
-    if (!rep) {
-      val toks = base
-        .select(col(idCol).as("_id"), tokens(col(textCol)).as("_toks"))
-        .select(col("_id"), col("_toks"), size(col("_toks")).as("_dl"))
-      // Corpus stats: one 1-row aggregate, broadcast by the literal join.
-      val stats = toks.agg(count(lit(1)).as("_n"),
-        sum(col("_dl")).as("_sumdl"))
-      // Postings restricted to query terms BEFORE the tf aggregation.
-      val postings = toks
-        .select(col("_id"), col("_dl"), explode(col("_toks")).as("_term"))
-        .join(broadcast(qvocab), Seq("_term"))
-        .groupBy(col("_id"), col("_term"), col("_dl"))
-        .agg(count(lit(1)).as("_tf"))
-      val dfs = postings.groupBy(col("_term"))
-        .agg(count(lit(1)).as("_df"))
-      val agg = postings
-        .join(broadcast(dfs), Seq("_term"))
-        .join(broadcast(qterms), Seq("_term"))
-        .crossJoin(broadcast(stats))
-        .select(col("_qid"), col("_id"), fixed.as("_fx"))
-        .groupBy(col("_qid"), col("_id"))
-        .agg(sum(col("_fx")).as("_sfx"), count(lit(1)).as("_nterms"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("_qid"))
-        .orderBy(col("_sfx").desc, col("_id").asc)
-      agg.withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= k)
-        .select(col("_qid").as(qidCol), col("rnk"),
-          col("_id").as(idCol),
-          (col("_sfx").cast("double") / lit(1073741824.0)).as("score"),
-          col("_nterms").as("n_terms"))
-    } else {
-      val ids = base.select(col(idCol).as("_id"), key.as("_k"))
-      val cls = base.groupBy(key.as("_k"))
-        .agg(count(lit(1)).as("_w"), min(col(textCol)).as("_t"),
-          min(col(idCol)).as("_mid"))
-      val toksC = cls.select(col("_k"), col("_w"), col("_mid"),
-          tokens(col("_t")).as("_toks"))
-        .withColumn("_dl", size(col("_toks")))
-      val stats = toksC.agg(sum(col("_w")).as("_n"),
-        sum(col("_w") * col("_dl")).as("_sumdl"))
-      val postings = toksC
-        .select(col("_k"), col("_w"), col("_dl"),
-          explode(col("_toks")).as("_term"))
-        .join(broadcast(qvocab), Seq("_term"))
-        .groupBy(col("_k"), col("_term"), col("_dl"))
-        .agg(first(col("_w")).as("_w"), count(lit(1)).as("_tf"))
-      val dfs = postings.groupBy(col("_term"))
-        .agg(sum(col("_w")).as("_df"))
-      val aggC = postings
-        .join(broadcast(dfs), Seq("_term"))
-        .join(broadcast(qterms), Seq("_term"))
-        .crossJoin(broadcast(stats))
-        .select(col("_qid"), col("_k"), fixed.as("_fx"))
-        .groupBy(col("_qid"), col("_k"))
-        .agg(sum(col("_fx")).as("_sfx"), count(lit(1)).as("_nterms"))
-        .join(cls.select(col("_k"), col("_mid")), Seq("_k"))
-      val wc = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("_qid"))
-        .orderBy(col("_sfx").desc, col("_mid").asc)
-      val topClasses = aggC.withColumn("_crk", row_number().over(wc))
-        .filter(col("_crk") <= k)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("_qid"))
-        .orderBy(col("_sfx").desc, col("_id").asc)
-      topClasses.join(ids, Seq("_k"))
-        .withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= k)
-        .select(col("_qid").as(qidCol), col("rnk"),
-          col("_id").as(idCol),
-          (col("_sfx").cast("double") / lit(1073741824.0)).as("score"),
-          col("_nterms").as("n_terms"))
-    }
+    val tier = tokenClasses(base, textCol, idCol)
+    val rel = tier.relation()
+    val toks = rel.select(col("_k"), col("_m"), tokens(col("_t")).as("_toks"))
+      .select(col("_k"), col("_m"), col("_toks"), size(col("_toks")).as("_dl"))
+    // Corpus stats: one 1-row aggregate, broadcast by the literal join.
+    val stats = toks.agg(tier.members.as("_n"),
+      tier.memberSum(col("_dl")).as("_sumdl"))
+    // Postings restricted to query terms BEFORE the tf aggregation.
+    val postings = toks
+      .select(col("_k"), col("_m"), col("_dl"),
+        explode(col("_toks")).as("_term"))
+      .join(broadcast(qvocab), Seq("_term"))
+      .groupBy(tier.keepWeight(col("_k"), col("_term"), col("_dl")): _*)
+      .agg(count(lit(1)).as("_tf"))
+    val dfs = postings.groupBy(col("_term")).agg(tier.members.as("_df"))
+    val agg = postings
+      .join(broadcast(dfs), Seq("_term"))
+      .join(broadcast(qterms), Seq("_term"))
+      .crossJoin(broadcast(stats))
+      .select(col("_qid"), col("_k"), fixed.as("_fx"))
+      .groupBy(col("_qid"), col("_k"))
+      .agg(sum(col("_fx")).as("_sfx"), count(lit(1)).as("_nterms"))
+    def topK(d: DataFrame, byId: String, rank: String): DataFrame =
+      d.withColumn(rank, row_number().over(
+          org.apache.spark.sql.expressions.Window.partitionBy(col("_qid"))
+            .orderBy(col("_sfx").desc, col(byId).asc)))
+        .filter(col(rank) <= k)
+    // Row grain ranks the docs directly. Class grain ranks classes by
+    // (score, min member id) first and expands only the top k.
+    (if (!tier.rep) topK(tier.fanOut(agg, "_id"), "_id", "rnk")
+      else topK(tier.fanOut(topK(
+          agg.join(rel.select(col("_k"), col("_mid")), Seq("_k")),
+          "_mid", "_crk"), "_id"), "_id", "rnk"))
+      .select(col("_qid").as(qidCol), col("rnk"), col("_id").as(idCol),
+        (col("_sfx").cast("double") / lit(1073741824.0)).as("score"),
+        col("_nterms").as("n_terms"))
   }
 
   /** Per-document Shannon entropy of the token distribution —
@@ -2736,9 +2455,8 @@ object TextOps {
     // Per-key (token count, distinct, Σ floor(c·ln c·2³⁰)) aggregates —
     // pure functions of the text, so the key is the document id at row
     // grain and the raw-md5 text class on clone-heavy corpora (the
-    // fanOutPerText tier decision applied to an aggregate-shaped op:
-    // the (key, hash) explode is the dominant cost and scales with the
-    // chosen grain's mass).
+    // (key, hash) explode is the dominant cost and scales with the
+    // chosen grain's mass); the left fan-out keeps token-less docs.
     def aggs(keyed: DataFrame): DataFrame = {
       val tk = keyed.select(col("_k"),
           explode(call_function("graft_hash_tokens",
@@ -2751,19 +2469,8 @@ object TextOps {
           call_function("graft_ln", col("_c").cast("double")) *
           lit(1073741824.0)).cast("long")).as("_sfx"))
     }
-    val key = coalesce(md5(col(textCol)), lit(" null"))
-    val rep = !base.isStreaming &&
-      graft.engine.GrainProbe.dupTier(base, key)
-    val (ids, per) =
-      if (!rep)
-        (base.select(col(idCol).as("_id"), col(idCol).as("_k")),
-          aggs(base.select(col(idCol).as("_k"),
-            col(textCol).as("_t"))))
-      else
-        (base.select(col(idCol).as("_id"), key.as("_k")),
-          aggs(base.groupBy(key.as("_k"))
-            .agg(min(col(textCol)).as("_t"))))
-    ids.join(per, Seq("_k"), "left")
+    val tier = rawTextClasses(base, textCol, idCol)
+    tier.fanOut(aggs(tier.relation()), "_id", "left")
       .select(col("_id").as(idCol),
         coalesce(col("_n"), lit(0L)).as("n_tokens"),
         coalesce(col("_d"), lit(0L)).as("distinct_tokens"),
@@ -2866,22 +2573,14 @@ object TextOps {
       keyed.select(col("_k"), explode(tokens(col("_t"))).as("_tok"))
         .select(col("_k"), bucket(col("_tok")).as("_bkt"))
         .groupBy(col("_k"), col("_bkt")).agg(count(lit(1)).as("_cnt"))
-    // Class tier (fanOutPerText's rule): the (doc, bucket, count)
-    // relation is a pure text function, so it computes once per
-    // distinct fingerprint and fans out through the id-sized key join;
-    // token-less/null docs stay absent at either grain (empty explode
-    // / inner join finds nothing).
-    val key = coalesce(fingerprint(col(textCol)), lit(" null"))
-    val rep = !base.isStreaming &&
-      graft.engine.GrainProbe.dupTier(base, key)
-    if (!rep)
-      core(base.select(col(idCol).as("_k"), col(textCol).as("_t")))
-        .select(col("_k").as("_id"), col("_bkt"), col("_cnt"))
-    else
-      base.select(col(idCol).as("_id"), key.as("_k"))
-        .join(core(base.groupBy(key.as("_k"))
-          .agg(min(col(textCol)).as("_t"))), Seq("_k"))
-        .select(col("_id"), col("_bkt"), col("_cnt"))
+    // Class tier: the (doc, bucket, count) relation is a pure text
+    // function, so it computes once per distinct fingerprint and fans
+    // out through the id-sized key join; token-less/null docs stay
+    // absent at either grain (empty explode / inner join finds
+    // nothing).
+    val tier = tokenClasses(base, textCol, idCol)
+    tier.fanOut(core(tier.relation()), "_id")
+      .select(col("_id"), col("_bkt"), col("_cnt"))
   }
 
   def dsirSelect(corpus: DataFrame, target: DataFrame,
@@ -2897,15 +2596,9 @@ object TextOps {
     // so the clone-heavy tier weights per-distinct-text counts by copy
     // multiplicity (the nbTrainHashed algebra) — the target is often a
     // corpus slice carrying the corpus's own clone mass.
-    val tfp = fingerprint(col(targetTextCol))
-    val tgtRep = !target.isStreaming &&
-      graft.engine.GrainProbe.dupTier(target, tfp)
-    val tgtW =
-      if (!tgtRep) target.select(lit(1L).as("_m"),
-        col(targetTextCol).as("_tt"))
-      else target.groupBy(tfp.as("_fp"))
-        .agg(count(lit(1)).as("_m"), min(col(targetTextCol)).as("_tt"))
-        .select(col("_m"), col("_tt"))
+    val tgtW = GrainProbe.classes(target, fingerprint(col(targetTextCol)),
+        col(targetTextCol))
+      .relation().select(col("_m"), col("_t").as("_tt"))
     val tgtB = tgtW.select(col("_m"),
         explode(tokens(col("_tt"))).as("_t"))
       .select(col("_m"), bucket(col("_t")).as("_bkt"))

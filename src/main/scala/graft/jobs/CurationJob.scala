@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.engine.{Engine, Tiers}
+import graft.engine.{Engine, GrainProbe, Tiers}
 import graft.ext.{DedupOps, TextOps}
 import graft.sinks.Sinks
 import graft.sources.Sources
@@ -54,19 +54,7 @@ object CurationJob {
     nbModel: Option[TextOps.NbModel] = None,
     lmModel: Option[TextOps.LmModel] = None,
     maxMeanNll: Double = Double.PositiveInfinity,
-    testFrac: Double = 0.05, validFrac: Double = 0.05,
-    /** Where the five TEXT-ONLY gate flags evaluate: "row" = fused
-      * into the single wide scan (best for dup-light corpora — one
-      * corpus pass, zero exchanges); "rep" = once per DISTINCT text
-      * fingerprint, fanned out by a fingerprint join (best for
-      * clone-heavy corpora — the expensive tokenize/model folds scale
-      * with distinct mass); "auto" = measure (one cheap
-      * fingerprint-count pass) and pick rep when distinct mass is
-      * under half the row count. Flags are pure text functions, so
-      * all three produce bit-identical dispositions (pinned in
-      * JobsSpec). Production callers that know their dup profile
-      * should pin "row"/"rep" and skip auto's measuring pass. */
-    gateGrain: String = "auto")
+    testFrac: Double = 0.05, validFrac: Double = 0.05)
 
   /** Disposition statuses in stage order (kept rows carry their split
     * name instead). */
@@ -74,9 +62,14 @@ object CurationJob {
     "repetitive", "exact_dup", "near_dup", "contaminated", "low_quality",
     "influent")
 
-  /** The single wide gate pass BEFORE materialization — every
-    * per-document flag (`_quar`, `_badlang`, `_rep`, `_contam`,
-    * `_lowq`, `_influent`) as ONE projection chain over the corpus:
+  /** The gate pass BEFORE materialization — every per-document flag
+    * (`_quar`, `_badlang`, `_rep`, `_contam`, `_lowq`, `_influent`).
+    * The rule flag is per row (rules may reference any column); the
+    * five text flags are pure functions of the text, so they ride the
+    * class tier ([[GrainProbe.classes]], key = text fingerprint with a
+    * null sentinel so null-text rows keep their row): once per
+    * DISTINCT text on a clone-heavy corpus, fanned out by one key join.
+    * At row grain the frame is ONE projection chain over the corpus:
     * rules, langid, the per-row repetition fractions and the
     * plan-literal contamination/NB/LM folds are all scan-bound, so the
     * whole frame is one FileScan with zero exchanges (pinned in
@@ -85,7 +78,9 @@ object CurationJob {
     * the scan shape — the keySkew hidden-stage discipline). */
   private[graft] def gateFrame(df: DataFrame, cfg: Config): DataFrame = {
     val text = col(cfg.textCol)
-    // ---- one wide pass: every per-document flag ------------------
+    val flagged = Checks.flagRows(df, cfg.rules)
+      .withColumn("_quar", size(col("violations")) > 0)
+      .drop("violations")
     // The tokenizer and the token-hash array are computed ONCE as real
     // columns and every flag family consumes the shared attribute:
     // langid, repetition, contamination, NB and LM each used to carry
@@ -97,22 +92,19 @@ object CurationJob {
     // the shared columns are multiply-referenced and non-cheap, so the
     // pass stays ONE FileScan + stacked projections, zero exchanges
     // (still pinned in PlanShapeSpec).
-    val flagged = Checks.flagRows(df, cfg.rules)
-      .withColumn("_quar", size(col("violations")) > 0)
-      .drop("violations")
-      .withColumn("_toks", TextOps.tokens(text))
-      .withColumn("_th",
-        call_function("graft_hash_tokens", col("_toks")))
-    textFlagCols(cfg).foldLeft(flagged: DataFrame) {
-      case (acc, (name, c)) => acc.withColumn(name, c)
-    }.drop("_toks", "_th")
+    GrainProbe.classes(flagged,
+        coalesce(TextOps.fingerprint(text), lit("\u0000null")), text)
+      .derive(t => Seq(
+        "_toks" -> TextOps.tokens(t),
+        "_th" -> call_function("graft_hash_tokens", col("_toks"))) ++
+        textFlagCols(cfg))
+      .drop("_toks", "_th")
   }
 
   /** The five TEXT-ONLY gate flags over a shared pre-hashed token
     * column named `_th` — pure functions of the text, which is what
-    * lets [[disposition]] evaluate them once per DISTINCT text on a
-    * clone-heavy corpus (the rep-grain gate pass) and fan the values
-    * out by fingerprint, bit-identically to the per-row evaluation.
+    * lets [[gateFrame]] evaluate them once per DISTINCT text on a
+    * clone-heavy corpus, bit-identically to the per-row evaluation.
     *
     * NULL-text rows have a null langid prediction (null tokens
     * propagate through the hash probes and the when-chain — same as
@@ -178,62 +170,9 @@ object CurationJob {
     // needs).
     val flagCols = Seq("_quar", "_badlang", "_rep", "_contam",
       "_lowq", "_influent")
-    // ---- gate grain (cfg.gateGrain): the five text flags are pure
-    // functions of the text, so on a clone-heavy corpus they can
-    // evaluate once per DISTINCT fingerprint and fan out by one
-    // fingerprint join — the minhashRepStages discipline applied to
-    // the gate pass (sf10 probe: the wide scan was 30.7 of 52 s, and
-    // >98% of its rows were clones re-running the tokenizer and the
-    // model folds for answers already computed). "auto" measures with
-    // one fingerprint-count scan; "row" keeps the fused single pass.
-    val repGrain = cfg.gateGrain match {
-      case "rep" => true
-      case "row" => false
-      case "auto" =>
-        val r = df.agg(count(lit(1)),
-          countDistinct(graft.ext.TextOps.fingerprint(col(cfg.textCol))))
-          .head()
-        r.getLong(1) * 2 <= r.getLong(0)
-      case other => throw new IllegalArgumentException(
-        s"CurationJob: unknown gateGrain '$other' (row|rep|auto)")
-    }
-    val pre =
-      if (!repGrain)
-        Engine.materialize(gateFrame(df, cfg)
-          .select(id +: graft.ext.TextOps.fingerprint(col(cfg.textCol))
-            .as("_fp") +: flagCols.map(col): _*))
-      else {
-        // Row grain keeps what is genuinely per-row: the rule flag
-        // (rules may reference any column) and the fingerprint.
-        val rowGrain = Engine.materialize(
-          Checks.flagRows(df, cfg.rules)
-            .withColumn("_quar", size(col("violations")) > 0)
-            .select(id,
-              graft.ext.TextOps.fingerprint(col(cfg.textCol)).as("_fp"),
-              col("_quar")))
-        // One rep id per class, its text fetched by a hinted semi join
-        // (ids only — the corpus text never shuffles), flags computed
-        // on ~distinct-mass rows, fanned back by a null-safe
-        // fingerprint join (null-text rows have a null fingerprint and
-        // must not drop out of the disposition).
-        val repIds = rowGrain.groupBy(col("_fp")).agg(min(id).as("_rid"))
-        val nDistinct = Tiers.measure(repIds.select(col("_rid"))).rows
-        // both hinted relations hold one row per rep
-        def hint(d: DataFrame): DataFrame =
-          Tiers.broadcastIfFits(d)(BigInt(nDistinct) * Tiers.rowBytes(d.schema))
-        val repRows = df.select(id, col(cfg.textCol))
-          .join(hint(repIds.select(col("_rid").as(cfg.idCol))),
-            Seq(cfg.idCol), "left_semi")
-        val repFlags = repRows
-          .withColumn("_th", call_function("graft_hash_tokens",
-            TextOps.tokens(col(cfg.textCol))))
-          .select(graft.ext.TextOps.fingerprint(col(cfg.textCol))
-            .as("_fpr") +:
-            textFlagCols(cfg).map { case (n, c) => c.as(n) }: _*)
-        Engine.materialize(rowGrain
-          .join(hint(repFlags), col("_fp") <=> col("_fpr"))
-          .select(id +: col("_fp") +: flagCols.map(col): _*))
-      }
+    val pre = Engine.materialize(gateFrame(df, cfg)
+      .select(id +: TextOps.fingerprint(col(cfg.textCol)).as("_fp") +:
+        flagCols.map(col): _*))
     // ---- dedup stages on the surviving population ----------------
     val s4n = pre.filter(!col("_quar") && !col("_badlang") && !col("_rep"))
     val (withKeeps, dedupCase) = {

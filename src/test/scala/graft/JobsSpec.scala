@@ -953,46 +953,45 @@ class JobsSpec extends SparkSpec {
       "accumulated codes must survive the refusal")
   }
 
-  test("curation gate grain: row, rep, and auto produce IDENTICAL " +
+  test("curation gate: row and class grain produce IDENTICAL " +
     "dispositions on a clone-heavy corpus with a null-text row") {
     import spark.implicits._
     import graft.jobs.CurationJob
     import graft.transform.Checks
     val raw = graft.engine.Engine.table(spark, fixtureDir, "documents")
     val docs = raw.select(col("doc_id"), col("text"), col("n_chars"))
-    // clone-heavy (auto must pick rep: 3x mass) + one null-text row
-    // (the rep path's fingerprint fan-out join must be null-safe)
-    val corpus = docs
-      .unionAll(docs.select((col("doc_id") + 10000).as("doc_id"),
-        col("text"), col("n_chars")))
-      .unionAll(docs.select((col("doc_id") + 20000).as("doc_id"),
-        col("text"), col("n_chars")))
+    // clone-heavy (5x mass: the gate picks class grain) + one
+    // null-text row (the class fan-out must keep it: sentinel key)
+    val corpus = (1 to 4).map(c => docs.select(
+        (col("doc_id") + c * 10000).as("doc_id"), col("text"),
+        col("n_chars"))).foldLeft(docs)(_ unionAll _)
       .unionAll(Seq((99999L, null.asInstanceOf[String], 80.0))
         .toDF("doc_id", "text", "n_chars"))
-    def cfg(grain: String) = CurationJob.Config(
+    val cfg = CurationJob.Config(
       idCol = "doc_id", textCol = "text",
       rules = Seq(Checks.inRange("n_chars", 60.0, 100000.0)),
       allowedLangs = Seq("en"),
       maxDupTokenFrac = 0.65, maxTopBigramFrac = 0.06,
       exactDedup = true, nearDupThreshold = 0.8,
       nbModel = Some(graft.ext.TextOps.nbTrainHashed(raw, "text",
-        col("lang") === "en")),
-      gateGrain = grain)
-    def disp(grain: String): Map[Long, String] =
-      CurationJob.disposition(corpus, cfg(grain)).collect()
+        col("lang") === "en")))
+    def disp(rep: Boolean): Map[Long, String] =
+      graft.engine.GrainProbe.forcing(rep)(
+          CurationJob.disposition(corpus, cfg))._1.collect()
         .map(r => r.getLong(0) -> r.getString(1)).toMap
-    val row = disp("row")
-    val rep = disp("rep")
-    val auto = disp("auto")
-    assert(row == rep, "rep-grain gate must be bit-identical to row")
+    val row = disp(rep = false)
+    val cls = disp(rep = true)
+    assert(row == cls, "class-grain gate must be bit-identical to row")
+    // unforced, the gate picks class grain on this corpus
+    val auto = CurationJob.disposition(corpus, cfg).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(row == auto)
+    assert(graft.engine.GrainProbe.dupTier(corpus,
+      coalesce(graft.ext.TextOps.fingerprint(col("text")), lit("\u0000null"))))
     assert(row.size == corpus.count())
     // the null-text row survived the fingerprint fan-out and earned a
     // concrete stage
     assert(row(99999L) == "non_target_lang")
-    intercept[IllegalArgumentException] {
-      CurationJob.disposition(corpus, cfg("row").copy(gateGrain = "bogus"))
-    }
   }
 
   test("curation gate: a null-text document gets a CONCRETE " +

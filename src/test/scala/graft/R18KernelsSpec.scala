@@ -187,12 +187,13 @@ class R18KernelsSpec extends SparkSpec {
     ext.DedupOps.buildNearDupIndex(docs.filter(col("doc_id") % 2 === parity),
       "doc_id", "text", 2, 64))
 
-  private def curation(grain: String, nearDup: Double) =
-    jobs.CurationJob.disposition(
+  /** The curation disposition with its gate forced to class grain
+    * (`rep`) or row grain. */
+  private def curation(rep: Boolean, nearDup: Double) =
+    graft.engine.GrainProbe.forcing(rep)(jobs.CurationJob.disposition(
       docs.select(col("doc_id"), col("text")),
       jobs.CurationJob.Config(idCol = "doc_id", textCol = "text",
-        allowedLangs = Seq("en"), nearDupThreshold = nearDup,
-        gateGrain = grain))
+        allowedLangs = Seq("en"), nearDupThreshold = nearDup)))._1
 
   private val gated: Seq[Gated] = Seq(
     Gated("connectedComponents: driver union-find tier == iterative " +
@@ -239,9 +240,9 @@ class R18KernelsSpec extends SparkSpec {
         docs.filter(col("doc_id") % 2 === 1), index(0), "doc_id", "text"),
       byBroadcasts),
     Gated("CurationJob rep-grain gate: broadcast rep-id and flag joins == " +
-      "shuffle joins", () => curation("rep", 0.0), byBroadcasts),
+      "shuffle joins", () => curation(rep = true, 0.0), byBroadcasts),
     Gated("CurationJob near-dup population: broadcast id semi-join == " +
-      "shuffle join", () => curation("row", 0.8), byBroadcasts),
+      "shuffle join", () => curation(rep = false, 0.8), byBroadcasts),
     Gated("dedupeAppend: broadcast existing-id anti-join == shuffle join",
       () => graft.transform.Dedupe.dedupeAppend(docs,
         docs.filter(col("doc_id") % 3 === 0), "doc_id"), byBroadcasts))

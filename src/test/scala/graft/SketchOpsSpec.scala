@@ -103,7 +103,9 @@ class SketchOpsSpec extends SparkSpec {
       .reduce(_ unionAll _)
     val grid = SketchOps.cmsSketch(heavy, "text").collect()
       .map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val member = SketchOps.cmsSketchMemberGrain(heavy, "text").collect()
+    val (memberDf, _) = graft.engine.GrainProbe.forcing(rep = false)(
+      SketchOps.cmsSketch(heavy, "text"))
+    val member = memberDf.collect()
       .map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(grid == member)
     val hh = SketchOps.heavyHitters(heavy, "text", minCount = 30L)

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.engine.GrainProbe
 import graft.ext.TextOps
 
 /** §2.10 text analysis: tokenization contract, shingles, quality metrics,
@@ -454,7 +455,7 @@ class TextOpsSpec extends SparkSpec {
     assert(!out.contains(4L))    // no tokens -> absent
   }
 
-  test("fanOutPerText rep tier == member grain for quality metrics and " +
+  test("raw-text class tier == row grain for quality metrics and " +
       "langid on clone mass") {
     import spark.implicits._
     // Clone-heavy corpus with the class-key edge cases: null text (keeps
@@ -472,10 +473,11 @@ class TextOpsSpec extends SparkSpec {
         case dd: Double => math.round(dd * 1e9)
         case x => x
       }).toSet
-    for (derive <- Seq(
-        TextOps.qualityMetricsCols _, TextOps.languageIdCols _)) {
-      val rep = TextOps.fanOutPerText(df, "text")(derive)
-      val mem = TextOps.fanOutPerTextMemberGrain(df, "text")(derive)
+    for (op <- Seq[(org.apache.spark.sql.DataFrame, String) =>
+        org.apache.spark.sql.DataFrame](
+        TextOps.qualityMetrics, TextOps.languageId)) {
+      val (rep, _) = GrainProbe.forcing(rep = true)(op(df, "text"))
+      val (mem, _) = GrainProbe.forcing(rep = false)(op(df, "text"))
       assert(rep.columns.toSeq == mem.columns.toSeq)
       assert(canon(rep) == canon(mem))
     }
@@ -487,22 +489,16 @@ class TextOpsSpec extends SparkSpec {
       .filter(col("id") === 1L).head()
     assert(q.getAs[Boolean]("quality_ok"))
     // Pre-existing column with a derived NAME (the fixture's documents
-    // table carries its own n_chars): row grain replaces in place, rep
-    // grain must replace too (values equal; only schema position may
-    // differ). Compare by name, not position.
+    // table carries its own n_chars): row grain replaces in place, and
+    // class grain must replace it too, in the same schema position.
     val withClash = df.withColumn("n_chars", lit(-7L))
-    def byName(d: org.apache.spark.sql.DataFrame) =
-      d.collect().map(r => r.getValuesMap[Any](d.columns.toIndexedSeq)
-        .view.mapValues {
-          case dd: Double => math.round(dd * 1e9)
-          case x => x
-        }.toMap).toSet
-    val repC = TextOps.fanOutPerText(withClash, "text")(
-      TextOps.qualityMetricsCols)
-    val memC = TextOps.fanOutPerTextMemberGrain(withClash, "text")(
-      TextOps.qualityMetricsCols)
-    assert(repC.columns.sorted.toSeq == memC.columns.sorted.toSeq)
-    assert(byName(repC) == byName(memC))
+      .select(col("id"), col("n_chars"), col("text"))
+    val (repC, _) = GrainProbe.forcing(rep = true)(
+      TextOps.qualityMetrics(withClash, "text"))
+    val (memC, _) = GrainProbe.forcing(rep = false)(
+      TextOps.qualityMetrics(withClash, "text"))
+    assert(repC.columns.toSeq == memC.columns.toSeq)
+    assert(canon(repC) == canon(memC))
     assert(!repC.collect().exists(_.getAs[Long]("n_chars") == -7L),
       "derived n_chars must replace the input column at either grain")
   }
@@ -748,8 +744,9 @@ class TextOpsSpec extends SparkSpec {
       (r.getLong(0), r.getLong(1), r.getLong(2))
     val rep = TextOps.bpeEncodeStats(df, "id", "text", merges)
       .collect().map(key).toSet
-    val mem = TextOps.bpeEncodeStatsMemberGrain(df, "id", "text", merges)
-      .collect().map(key).toSet
+    val (memDf, _) = GrainProbe.forcing(rep = false)(
+      TextOps.bpeEncodeStats(df, "id", "text", merges))
+    val mem = memDf.collect().map(key).toSet
     assert(rep == mem)
     // absence: ids 3 (empty) and 4 (null) mod 100 never appear
     assert(!rep.exists(r => r._1 % 100 == 3 || r._1 % 100 == 4))
